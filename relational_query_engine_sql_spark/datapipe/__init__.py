@@ -10,5 +10,7 @@
 
 All hot paths stay JVM-side (built-in functions over arrays/strings);
 hashes use md5 (stable across engines) so every operator is
-oracle-checkable in DuckDB.
+oracle-checkable in DuckDB. Higher-order-function lambdas are
+interpreted per element and recompute any outer expression they use,
+so select an array into a column before any lambda reads it.
 """

@@ -5,7 +5,7 @@ oracle-checkable because the hash primitive is md5 (identical hex
 output in Spark and DuckDB):
 
 - exact          — hash-groupBy on normalized text.
-- n-gram Jaccard — word-shingle self-join (exact similarity, the
+- n-gram Jaccard — per-shingle bucket pairs (exact similarity, the
                    verification primitive the approximate methods reuse).
 - MinHash + LSH  — md5-string minhash signature, banded; candidate
                    pairs come from band-bucket equi-joins, then are
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import tokens
+from .textstats import tokens, word_ngrams
 
 DEFAULT_SHINGLE = 3
 DEFAULT_MINHASHES = 4  # 2 bands x 2 rows
@@ -64,17 +64,13 @@ def shingles(
 ) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, sh).
 
-    Built with sequence+transform+explode — array ops inside codegen,
-    no Python. Documents shorter than n shingle to nothing (dropped)."""
-    w = tokens(text_col)
-    # Guard: sequence(1, 0) would step DOWNWARD in Spark, so short docs
-    # get an explicit empty index array (explode then drops them).
-    idxs = F.when(
-        F.size(w) >= n, F.sequence(F.lit(1), F.size(w) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    sh = F.transform(idxs, lambda i: F.array_join(F.slice(w, i, n), " "))
+    Built with sequence+transform+explode — array ops, no Python.
+    Documents shorter than n shingle to nothing (dropped). The token
+    array is selected into a column once, so the per-shingle lambda
+    slices it instead of re-splitting the text."""
     return (
-        df.select(F.col(id_col).alias("id"), F.explode(sh).alias("sh"))
+        df.select(F.col(id_col).alias("id"), tokens(text_col).alias("_w"))
+        .select("id", F.explode(word_ngrams(F.col("_w"), n)).alias("sh"))
         .distinct()
     )
 
@@ -95,35 +91,38 @@ def bucket_pairs(
     any downstream per-pair aggregate. One groupBy(key) + sorted
     collect_list + in-array pair explode emits the IDENTICAL pair
     multiset from a single exchange of the bucket table (§2.3/§2.4):
-    per bucket the sorted id array [x1 < x2 < ... < xm] expands to the
-    m(m-1)/2 pairs (xi, xj), i < j — exactly the join's d1 < d2 output.
+    per bucket the sorted id array [x1 <= x2 <= ... <= xm] expands to
+    the pairs (xi, xj), i < j, and the d1 < d2 filter drops the equal
+    pairs a repeated id forms — exactly the join's output multiset.
+    Rows with a null key are dropped (an equi-join never matches
+    them); null ids drop out of ``collect_list`` as they drop out of
+    the join's d1 < d2 predicate.
 
-    Requires ids to be unique within a bucket (true for distinct
-    (id, shingle) rows and for one-row-per-(doc, band) band keys) —
-    a duplicated id would emit a d1 = d2 pair the join would drop.
-    Skew note: a bucket of m ids emits m(m-1)/2 pairs either way — the
-    self-join also lands a hot key in a single task; callers cap
-    degenerate buckets (max_shingle_df / max_bucket_size) as before.
+    The expansion is ``posexplode`` + ``explode(slice(...))``: two
+    Generate operators over compiled array expressions, no lambda.
+
+    Skew note: a bucket of m ids holds its m ids in one array row and
+    emits up to m(m-1)/2 pair rows from a single task — the self-join
+    also lands a hot key in a single task and emits the same pairs;
+    callers cap degenerate buckets (max_shingle_df / max_bucket_size).
     """
-    ids = F.sort_array(F.collect_list(id_col))
     g = (
-        rows.groupBy(*keys)
-        .agg(ids.alias("_ids"))
+        rows.dropna(subset=keys)
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
         .filter(F.size("_ids") >= 2)
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("_ids"),
-            # elements strictly after position i (slice is 1-based and
-            # truncates at the end, so size(_ids) is a safe length)
-            lambda x, i: F.transform(
-                F.slice(F.col("_ids"), i + 2, F.size(F.col("_ids"))),
-                lambda y: F.struct(x.alias(d1), y.alias(d2)),
-            ),
+    # elements strictly after position _i (slice is 1-based and
+    # truncates at the end, so size(_ids) is a safe length)
+    return (
+        g.select("_ids", F.posexplode("_ids").alias("_i", d1))
+        .select(
+            d1,
+            F.explode(
+                F.slice("_ids", F.col("_i") + 2, F.size("_ids"))
+            ).alias(d2),
         )
-    )
-    return g.select(F.explode(pairs).alias("_p")).select(
-        f"_p.{d1}", f"_p.{d2}"
+        .filter(F.col(d1) < F.col(d2))
     )
 
 
@@ -139,8 +138,9 @@ def jaccard_pairs(
 
     ``sh``: (id, sh) distinct shingles. If ``candidates`` (d1 < d2) is
     given, only verify those pairs (the LSH path); otherwise generate
-    pairs from the shingle self-join (exact path). ``max_shingle_df``
-    drops shingles occurring in more than that many docs — the skew cap.
+    pairs per shingle bucket with :func:`bucket_pairs` (exact path).
+    ``max_shingle_df`` drops shingles occurring in more than that many
+    docs — the skew cap.
     ``counts`` (id, n) can be supplied when the caller already computed
     per-doc shingle counts (minhash_signature emits them) — saves one
     recomputation of the shingle subtree. Output: (d1, d2, jaccard)
@@ -404,8 +404,8 @@ def containment_pairs(sh: DataFrame, threshold: float) -> DataFrame:
     """N-gram CONTAINMENT: |A∩B| / min(|A|,|B|) — catches a document
     embedded inside a larger one (quotes, concatenations, page wraps),
     which Jaccard misses because the union term dilutes asymmetric
-    overlap. Same shuffle shape as :func:`jaccard_pairs` (shingle
-    self-join, then one keyed aggregate); at scale the candidate set
+    overlap. Same shuffle shape as :func:`jaccard_pairs` (per-shingle
+    bucket pairs, then one keyed aggregate); at scale the candidate set
     would come from LSH exactly as the Jaccard path does.
     Output: (d1, d2, containment) with containment >= threshold.
     """

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .dedup import bucket_pairs
+
 
 def as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
@@ -381,29 +383,13 @@ def embedding_near_dups_lsh(
     # Bucket-grouped pair expansion instead of a sig⋈sig self-join: the
     # signature pass (the dominant linear cost at scale) is a single
     # plan branch computed ONCE, one shuffle on (band, key), and pairs
-    # fan out where they live via JVM array algebra. A hot bucket of m
-    # ids inherently yields m·(m−1)/2 candidates under any LSH
+    # fan out where they live (see dedup.bucket_pairs). A hot bucket of
+    # m ids inherently yields m·(m−1)/2 candidates under any LSH
     # formulation; here it also needs m ids resident per group, which
     # is fine until m ~ 10^6 (far beyond any sane band width).
-    buckets = (
-        sigs.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("_ids"))
-        .filter(F.size("_ids") >= 2)
-    )
-    pairs_arr = F.flatten(
-        F.transform(
-            F.col("_ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_ids"), i + 2, F.size(F.col("_ids"))),
-                lambda y: F.struct(x.alias("v1"), y.alias("v2")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pairs_arr).alias("_p"))
-        .select(F.col("_p.v1").alias("v1"), F.col("_p.v2").alias("v2"))
-        .dropDuplicates()
-    )
+    cand = bucket_pairs(
+        sigs, ["band", "key"], id_col, d1="v1", d2="v2"
+    ).dropDuplicates()
     a = emb.select(
         F.col(id_col).alias("v1"), as_double(F.col(vec_col)).alias("_a")
     )
@@ -464,15 +450,19 @@ def quantize_embeddings(
     ``round`` so ties break identically in every engine (round()
     half-even vs half-up varies; floor does not).
     """
-    v = as_double(F.col(vec_col))
-    scale = F.array_max(F.transform(v, lambda x: F.abs(x))) / F.lit(127.0)
+    # vector and scale are selected into columns before the per-element
+    # lambdas read them: an expression referenced inside an (interpreted)
+    # lambda is recomputed per element, which made the scale O(d²)
+    v = F.col("_v")
+    absmax = F.array_max(F.transform(v, lambda x: F.abs(x)))
+    scale = F.col("scale")
     q = F.when(scale == 0, F.transform(v, lambda x: F.lit(0).cast("long"))).otherwise(
         F.transform(v, lambda x: F.floor(x / scale + F.lit(0.5)).cast("long"))
     )
-    return emb.select(
-        F.col(id_col),
-        scale.alias("scale"),
-        q.alias("qvec"),
+    return (
+        emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
+        .select(id_col, "_v", (absmax / F.lit(127.0)).alias("scale"))
+        .select(id_col, "scale", q.alias("qvec"))
     )
 
 
@@ -500,14 +490,14 @@ def pq_subvectors(
     ``posexplode`` over the transform-sliced array — pure JVM array
     ops, no Python. Output: (id, sub, sv) with ``sub`` ∈ [0, m).
     """
-    v = as_double(F.col(vec_col))
+    # cast the vector once, not once per subspace inside the lambda
     subs = F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda i: F.slice(v, i * dsub + 1, dsub),
+        lambda i: F.slice(F.col("_v"), i * dsub + 1, dsub),
     )
     return emb.select(
-        F.col(id_col), F.posexplode(subs).alias("sub", "sv")
-    )
+        F.col(id_col), as_double(F.col(vec_col)).alias("_v")
+    ).select(id_col, F.posexplode(subs).alias("sub", "sv"))
 
 
 def pq_codebook(

@@ -25,6 +25,21 @@ def tokens(text_col: str = "text") -> Column:
     return F.split(F.trim(F.col(text_col)), r"\s+")
 
 
+def word_ngrams(words: Column, n: int) -> Column:
+    """Array of the space-joined word n-grams of a token array, in
+    order. ``words`` must be a column reference, not an expression:
+    the ``transform`` lambda is interpreted per element, so an
+    expression there (e.g. :func:`tokens`) is recomputed per n-gram."""
+    # Guard: sequence(1, 0) would step DOWNWARD in Spark, so short
+    # arrays get an explicit empty index array (explode drops them).
+    idxs = F.when(
+        F.size(words) >= n, F.sequence(F.lit(1), F.size(words) - (n - 1))
+    ).otherwise(F.array().cast("array<int>"))
+    return F.transform(
+        idxs, lambda i: F.array_join(F.slice(words, i, n), " ")
+    )
+
+
 def token_count(text_col: str = "text") -> Column:
     return F.size(tokens(text_col))
 
@@ -167,9 +182,10 @@ def repetition_metrics(
     High values of either flag boilerplate/degenerate text. Two
     grouped aggregations joined on the doc id — no Python.
     """
-    toks = df.select(
-        F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok")
+    words = df.select(
+        F.col(id_col).alias("id"), tokens(text_col).alias("_w")
     )
+    toks = words.select("id", F.explode("_w").alias("tok"))
     tok_stats = (
         toks.groupBy("id", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -179,15 +195,8 @@ def repetition_metrics(
             F.max("c").alias("top_c"),
         )
     )
-    w = tokens(text_col)
-    idxs = F.when(
-        F.size(w) >= 2, F.sequence(F.lit(1), F.size(w) - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.transform(idxs, lambda i: F.array_join(F.slice(w, i, 2), " "))
-        ).alias("g"),
+    grams = words.select(
+        "id", F.explode(word_ngrams(F.col("_w"), 2)).alias("g")
     )
     gram_stats = grams.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),

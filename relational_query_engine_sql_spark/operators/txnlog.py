@@ -3048,7 +3048,15 @@ class TxnLogTable(ParquetTable):
         # construction, so restricting the full-outer join to the
         # affected region preserves merge semantics.
         base = self.current_version()
-        affected = self._affected(source.select(*self.keys), base)
+        # one bounds aggregate shared by the affected-file pruning and
+        # the rebase bounds, as in upsert/delete_keys
+        src_keys = source.select(*self.keys)
+        bounds = self._bounds(src_keys)
+        affected = (
+            self._affected(src_keys, base, bounds=bounds)
+            if bounds is not None
+            else []
+        )
         tracked = self.row_tracking_enabled(base)
         if tracked:
             # Row tracking: thread _row_id through merge_frame as an
@@ -3091,9 +3099,9 @@ class TxnLogTable(ParquetTable):
             "merge",
             affected,
             self._split_by_rowid(out) if tracked else out,
-            extra=self._dv_shrink_actions(source.select(*self.keys), base),
+            extra=self._dv_shrink_actions(src_keys, base),
             expected_version=base,
-            rebase_bounds=self._bounds(source.select(*self.keys)),
+            rebase_bounds=bounds,
         )
 
     def compact(
