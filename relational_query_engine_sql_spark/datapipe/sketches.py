@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import local_frame
+
 CMS_DEPTH = 4  # independent hash rows
 CMS_WIDTH = 256  # buckets per row: one 2-hex-char slice of the digest
 
@@ -233,8 +235,8 @@ def sample_quantiles(
     from pyspark.sql import Window as W
 
     spark = sample.sparkSession
-    targets = spark.createDataFrame(
-        sorted(ranks.items()), "pq string, target_rn int"
+    targets = local_frame(
+        spark, sorted(ranks.items()), "pq string, target_rn int"
     )
     ranked = sample.select(
         "v", F.row_number().over(W.orderBy("v", "pr")).alias("rn")

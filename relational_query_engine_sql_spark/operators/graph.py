@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources import local_frame
+
 # Edge-count gate for the driver-side union-find fast path. Near-dup
 # edge sets are usually tiny relative to the corpus (pairs only exist
 # where documents actually collide), but they are still data-plane:
@@ -103,15 +105,16 @@ def _driver_components(edges: DataFrame, pdf=None) -> DataFrame:
         ]
     )
     rows = [(n, find(n)) for n in sorted(nodes)]
-    # Broadcast hint: the collected result re-enters the plan as a
-    # Scan ExistingRDD with unknown stats, so downstream label joins
-    # (docs LEFT JOIN labels in every dedup/ER consumer) planned as
-    # SortMergeJoin and shuffled the CORPUS side to meet a frame the
-    # gate bounds at <= 2·gate nodes (~16 MB of long pairs at the
-    # default). The hint turns those into BroadcastHashJoin — zero
-    # corpus-side exchange (§3.1); the distributed path's result stays
-    # unhinted because its size is unbounded.
-    return F.broadcast(edges.sparkSession.createDataFrame(rows, schema))
+    # The labels re-enter the plan as a LocalRelation with an exact
+    # size estimate (no Python worker, no Scan ExistingRDD), so the
+    # downstream label joins (docs LEFT JOIN labels in every dedup/ER
+    # consumer) plan as BroadcastHashJoin — zero corpus-side exchange
+    # (§3.1). The hint keeps them broadcast in a session that lowers
+    # or disables autoBroadcastJoinThreshold: the gate bounds this
+    # frame at <= 2·gate nodes (~16 MB of long pairs at the default).
+    # The distributed path's result stays unhinted because its size
+    # is unbounded.
+    return F.broadcast(local_frame(edges.sparkSession, rows, schema))
 
 
 def connected_components(

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources import local_frame
+
 
 def merge_frame(
     schema: T.StructType,
@@ -114,7 +116,7 @@ class ParquetTable:
 
     def read(self) -> DataFrame:
         if not self.exists():
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         return self.spark.read.schema(self.schema).parquet(self.path)
 
     def _conform(self, df: DataFrame) -> DataFrame:
@@ -292,7 +294,7 @@ class VersionedParquetTable(ParquetTable):
         if version is None:
             version = self.current_version()
         if version is None:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         return self.spark.read.schema(self.schema).parquet(
             self._vdir(version)
         )
@@ -477,11 +479,16 @@ def cascade_delete_keys(
         if len(children) > 1 and disjoint:
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark.util import inheritable_thread_target
+
+            # the wrapper carries the caller's Spark local properties
+            # (job group included) and session tags into the pool threads
+            target = inheritable_thread_target(table.spark)(one_child)
             with ThreadPoolExecutor(
                 max_workers=min(4, len(children))
             ) as pool:
                 # list() propagates the first exception, like the loop
-                list(pool.map(one_child, children))
+                list(pool.map(target, children))
         else:
             for spec in children:
                 one_child(spec)

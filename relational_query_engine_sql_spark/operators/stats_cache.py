@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import DOMAIN_KEYS, DOMAIN_SCHEMAS
+from ..sources import local_frame
 from .mutation import ParquetTable
 
 
@@ -42,7 +43,9 @@ def cached_portfolio_statistics(
     """Probe the cache for (portfolio_id, start, end); on miss, run
     ``compute()`` (must return (symbol, cov, beta)), upsert the result,
     and return it. On hit, return cached rows without computing —
-    mirroring portfolio.js:329-346.
+    mirroring portfolio.js:329-346 — as a local relation (no Python
+    worker). A cache table not yet written reads as an empty relation,
+    which Catalyst folds away, so the first probe runs no Spark job.
     """
     probe = cache.read().filter(
         (F.col("portfolio_id") == portfolio_id)
@@ -56,7 +59,7 @@ def cached_portfolio_statistics(
     # (portfolio.js:329-346) — never a table-sized set.
     rows = probe.collect()
     if rows:
-        return cache.spark.createDataFrame(rows, probe.schema)
+        return local_frame(cache.spark, rows, probe.schema)
 
     result = compute()
     rows = result.select(

@@ -68,6 +68,7 @@ import uuid
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import local_frame
 from .mutation import CommitConflict, ParquetTable, merge_frame
 
 
@@ -869,7 +870,7 @@ class TxnLogTable(ParquetTable):
             schema = self._schema_at(version)
         m = self._mapping_at(version)
         if not relpaths:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         import pyspark.sql.types as T
 
         phys = (
@@ -1486,7 +1487,7 @@ class TxnLogTable(ParquetTable):
         def _read(paths, sch):
             # deletion-vector reads: keys are never column-mapped
             if not paths:
-                return self.spark.createDataFrame([], sch)
+                return local_frame(self.spark, [], sch)
             return self.spark.read.schema(sch).parquet(
                 *[os.path.join(self.path, p) for p in paths]
             )
@@ -1921,7 +1922,7 @@ class TxnLogTable(ParquetTable):
                 stat_src = (
                     self.spark.read.schema(schema).parquet(*leaves)
                     if leaves
-                    else self.spark.createDataFrame([], schema)
+                    else local_frame(self.spark, [], schema)
                 )
             else:
                 stat_src = self.spark.read.schema(schema).parquet(out_dir)
@@ -3397,7 +3398,7 @@ class TxnLogTable(ParquetTable):
             + [T.StructField(ROWID_COL, T.LongType(), False)]
         )
         if not data:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, [], out_schema)
         import pyarrow.parquet as pq
 
         mat, fresh = [], []
@@ -3460,7 +3461,7 @@ class TxnLogTable(ParquetTable):
                 for i in range(len(spec)):
                     ddl += f", _pv{i} string"
                 ddl += ", base long"
-                bmap = self.spark.createDataFrame(rows, ddl)
+                bmap = local_frame(self.spark, rows, ddl)
                 df = (
                     self.spark.read.schema(T.StructType(phys_fields))
                     .parquet(

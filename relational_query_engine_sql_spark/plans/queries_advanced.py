@@ -58,7 +58,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources import load_table, spread
+from ..sources import load_table, local_frame, spread
 from .registry import query
 
 # --------------------------------------------------------------------------
@@ -100,7 +100,7 @@ def _driver_hierarchy_depths(
             T.StructField("depth", T.IntegerType(), True),
         ]
     )
-    return spark.createDataFrame(out_rows, schema)
+    return local_frame(spark, out_rows, schema)
 
 
 @query(
@@ -573,7 +573,7 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 T.StructField("r", T.DoubleType(), True),
             ]
         )
-        out = spark.createDataFrame(sorted(rank.items()), schema)
+        out = local_frame(spark, sorted(rank.items()), schema)
         return out.select("node", F.round("r", 6).alias("rank"))
     ranks = deg.select("a", F.lit(1.0 / n).alias("r"))
     for _ in range(_PR_ITERS):
@@ -1031,7 +1031,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     100 * wout
                 )
             rank = {n: teleport + s.get(n, 0) for n in node_list}
-        out = spark.createDataFrame(
+        out = local_frame(
+            spark,
             [(n, rank[n]) for n in node_list],
             "node string, rank_e12 long",
         )

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from .numeric import DEC, money_sum, sql_money_sum
 from .registry import query
 
@@ -796,7 +796,8 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment",
         )
         .unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (95001, "Customer#CDC1", 0, 1.0, "BUILDING"),
                     (95002, "Customer#CDC2", 1, 2.0, "MACHINERY"),

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mutation import ParquetTable, cascade_delete
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from .registry import query
 
 
@@ -51,13 +51,18 @@ def _clones(
     free). Scenario walls at bench scale are job-launch latency, not
     data volume — overlapping the inits removes most of that fixed
     cost, and on a real cluster the same overlap fills the stragglers'
-    idle capacity."""
+    idle capacity. Pool threads do not inherit Spark local properties,
+    so the target carries the caller's (job group included) and the
+    session's tags."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    one = inheritable_thread_target(spark)(
+        lambda s: _clone(spark, sf_dir, *s)
+    )
     with ThreadPoolExecutor(max_workers=min(4, len(specs))) as pool:
-        return list(
-            pool.map(lambda s: _clone(spark, sf_dir, s[0], s[1]), specs)
-        )
+        return list(pool.map(one, specs))
 
 
 # --------------------------------------------------------------------------
@@ -76,8 +81,8 @@ def _clones(
 )
 def s3_row_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _clone(spark, sf_dir, "nation", ["n_nationkey"])
-    rows = spark.createDataFrame(
-        [(900, "ATLANTIS", 0), (901, "ELBONIA", 1)], schema=t.schema
+    rows = local_frame(
+        spark, [(900, "ATLANTIS", 0), (901, "ELBONIA", 1)], schema=t.schema
     )
     t.append(rows)
     return t.read()
@@ -99,8 +104,8 @@ def s3_row_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s4_insert_ignore(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _clone(spark, sf_dir, "nation", ["n_nationkey"])
-    rows = spark.createDataFrame(
-        [(0, "SHOULD NOT LAND", 9), (902, "NARNIA", 2)], schema=t.schema
+    rows = local_frame(
+        spark, [(0, "SHOULD NOT LAND", 9), (902, "NARNIA", 2)], schema=t.schema
     )
     t.insert_ignore(rows)
     return t.read()
@@ -126,8 +131,8 @@ def s4_insert_ignore(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s5_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _clone(spark, sf_dir, "nation", ["n_nationkey"])
-    rows = spark.createDataFrame(
-        [(0, "UPDATED ZERO", 4), (903, "VALINOR", 3)], schema=t.schema
+    rows = local_frame(
+        spark, [(0, "UPDATED ZERO", 4), (903, "VALINOR", 3)], schema=t.schema
     )
     t.upsert(rows)
     return t.read()
@@ -294,7 +299,8 @@ def u2_apply_trades(spark: SparkSession, sf_dir: str) -> DataFrame:
         "price",
         (F.col("ts") + F.expr("INTERVAL 5000 DAYS")).alias("ts"),
     )
-    holdings = spark.createDataFrame(
+    holdings = local_frame(
+        spark,
         [], "portfolioid int, symbol string, shares int, avgprice double"
     )
     return apply_trades(holdings, buys.unionByName(sells)).select(
@@ -496,7 +502,8 @@ def s11_merge_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", F.lit("D").alias("flag"),
         "c_name", "c_nationkey", "c_acctbal", "c_mktsegment",
     )
-    new = spark.createDataFrame(
+    new = local_frame(
+        spark,
         [
             (90001, "I", "Customer#MERGE1", 0, 111.25, "BUILDING"),
             (90002, "I", "Customer#MERGE2", 1, 222.5, "MACHINERY"),
@@ -738,7 +745,8 @@ def s13_txnlog_merge_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", F.lit("D").alias("flag"),
         "c_name", "c_nationkey", "c_acctbal", "c_mktsegment",
     )
-    new = spark.createDataFrame(
+    new = local_frame(
+        spark,
         [
             (90001, "I", "Customer#MERGE1", 0, 111.25, "BUILDING"),
             (90002, "I", "Customer#MERGE2", 1, 222.5, "MACHINERY"),
@@ -872,13 +880,14 @@ def maintenance_txnlog_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t.append(shifted.coalesce(1))  # v1: one file, keys 1000..1024
     t.upsert(  # v2: overlaps ONLY the appended file
-        spark.createDataFrame([(1001, "UPDATED", 0)], nat.schema)
+        local_frame(spark, [(1001, "UPDATED", 0)], nat.schema)
     )
     t.delete_keys(  # v3: key 1002 lives only in v2's kept-rows file
-        spark.createDataFrame([(1002,)], "n_nationkey int")
+        local_frame(spark, [(1002,)], "n_nationkey int")
     )
     t.compact(1)  # v4: rewrites the 3 live files into 1
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(h["version"], h["op"], h["n_remove"]) for h in t.history()],
         "version int, op string, n_remove int",
     )
@@ -951,7 +960,7 @@ def maintenance_txnlog_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = src.agg(
         F.percentile_approx("s_suppkey", 0.5).alias("m")
     ).first()["m"]
-    probe = spark.createDataFrame([(int(mid),)], "s_suppkey long")
+    probe = local_frame(spark, [(int(mid),)], "s_suppkey long")
     assert (
         len(t._affected(probe, use_bloom=False)) == 4
     ), "expected hash-mixed ranges"
@@ -1130,8 +1139,8 @@ def s19_txnlog_bloom_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     range_only = len(
         t._affected(
-            spark.createDataFrame(
-                [(int(v),) for v in probes], "c_custkey bigint"
+            local_frame(
+                spark, [(int(v),) for v in probes], "c_custkey bigint"
             ),
             use_bloom=False,
         )
@@ -2023,7 +2032,8 @@ def s33_txnlog_generated_partition(
     probe = ev.orderBy("event_id").limit(1).first()
     try:
         t.append(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (
                         int(probe["event_id"]) + 10_000_000,
@@ -2052,7 +2062,8 @@ def s33_txnlog_generated_partition(
     # the OLD partition's copy must be rewritten away, not duplicated
     mid = int(probe["event_id"])
     t.upsert(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (
                     mid,

@@ -18,7 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.timeseries import gap_fill
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from .numeric import money_sum
 from .registry import query
 
@@ -434,7 +434,8 @@ def dq_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey"
     )
     audited = o.unionByName(
-        o.sparkSession.createDataFrame(
+        local_frame(
+            o.sparkSession,
             [(9900001, 8888881), (9900002, 8888882)],
             "o_orderkey long, o_custkey long",
         )

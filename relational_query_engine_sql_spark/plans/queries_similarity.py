@@ -18,7 +18,7 @@ from ..datapipe.similarity import (
     embedding_near_dups_lsh,
     ivf_topk,
 )
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from .registry import query
 
 N_QUERIES = 5
@@ -713,7 +713,8 @@ def eval_kmeans_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_emb = f_n.result()
         i1 = f_i1.result()[0]
         i3, n3, k3 = f_i3.result()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(n3),

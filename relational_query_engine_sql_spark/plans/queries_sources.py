@@ -310,9 +310,9 @@ def src_txnlog_batch_reader(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from ..operators.txnlog import TxnLogTable
-    from ..sources.txnlog_stream import TxnLogStreamDataSource
+    from ..sources.txnlog_stream import register_txnlog
 
-    spark.dataSource.register(TxnLogStreamDataSource)
+    register_txnlog(spark)
     src = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
     )

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..sources import load_table
+from ..sources import load_table, local_frame
 from ..streaming.events import (
     purchase_click_attribution,
     sessionize_batch,
@@ -410,7 +410,7 @@ def stream_mv_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = ParquetTable(
         spark, f"{root}/mv", schema, keys=["h", "event_type"]
     )
-    table.init(spark.createDataFrame([], schema))
+    table.init(local_frame(spark, [], schema))
     q = maintain_hourly_mv(
         read_events_stream(spark, sf_dir), table, f"{root}/ckpt"
     )
@@ -722,7 +722,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     table = ParquetTable(spark, f"{root}/state", schema, keys=["user_id"])
-    table.init(spark.createDataFrame([], schema))
+    table.init(local_frame(spark, [], schema))
     q = apply_cdc_stream(
         read_events_stream(spark, sf_dir), table, f"{root}/ckpt"
     )
@@ -1108,9 +1108,9 @@ def stream_txnlog_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.txnlog import TxnLogTable
-    from ..sources.txnlog_stream import TxnLogStreamDataSource
+    from ..sources.txnlog_stream import register_txnlog
 
-    spark.dataSource.register(TxnLogStreamDataSource)
+    register_txnlog(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 7 == 0)
@@ -1181,9 +1181,9 @@ def s29_txnlog_partition_stream(
     import tempfile
 
     from ..operators.txnlog import TxnLogTable
-    from ..sources.txnlog_stream import TxnLogStreamDataSource
+    from ..sources.txnlog_stream import register_txnlog
 
-    spark.dataSource.register(TxnLogStreamDataSource)
+    register_txnlog(spark)
     src = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 13 == 0)
@@ -1270,9 +1270,9 @@ def stream_txnlog_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from ..operators.txnlog import TxnLogTable
-    from ..sources.txnlog_stream import TxnLogStreamDataSource
+    from ..sources.txnlog_stream import register_txnlog
 
-    spark.dataSource.register(TxnLogStreamDataSource)
+    register_txnlog(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 5 == 0)
@@ -1360,9 +1360,9 @@ def stream_txnlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.txnlog import TxnLogTable
-    from ..sources.txnlog_stream import TxnLogStreamDataSource
+    from ..sources.txnlog_stream import register_txnlog
 
-    spark.dataSource.register(TxnLogStreamDataSource)
+    register_txnlog(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 11 == 0)
@@ -1521,10 +1521,10 @@ def stream_txnlog_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from ..operators.txnlog import TxnLogTable
-    from ..sources.txnlog_stream import TxnLogStreamDataSource
+    from ..sources.txnlog_stream import register_txnlog
     from ..streaming.events import interval_attribution
 
-    spark.dataSource.register(TxnLogStreamDataSource)
+    register_txnlog(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id",
@@ -1636,9 +1636,9 @@ def stream_txnlog_rate_limit(
     import tempfile
 
     from ..operators.txnlog import TxnLogTable
-    from ..sources.txnlog_stream import TxnLogStreamDataSource
+    from ..sources.txnlog_stream import register_txnlog
 
-    spark.dataSource.register(TxnLogStreamDataSource)
+    register_txnlog(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 100)
@@ -1747,9 +1747,9 @@ def stream_txnlog_rowid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.txnlog import ROWID_COL, TxnLogTable
-    from ..sources.txnlog_stream import TxnLogStreamDataSource
+    from ..sources.txnlog_stream import register_txnlog
 
-    spark.dataSource.register(TxnLogStreamDataSource)
+    register_txnlog(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 9 == 0)

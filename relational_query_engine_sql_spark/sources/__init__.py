@@ -1,4 +1,11 @@
-from .catalog import load_table, load_tables, register_views, spread, table_rows
+from .catalog import (
+    load_table,
+    load_tables,
+    local_frame,
+    register_views,
+    spread,
+    table_rows,
+)
 from .csv_ingest import (
     clean_ohlcv,
     corrupt_rows,
@@ -13,6 +20,7 @@ __all__ = [
     "ingest_ohlcv_csv",
     "load_table",
     "load_tables",
+    "local_frame",
     "read_ohlcv_csv",
     "register_views",
     "spread",

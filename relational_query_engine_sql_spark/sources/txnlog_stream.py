@@ -943,8 +943,8 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
 
 
 class TxnLogStreamDataSource(DataSource):
-    """``format("txnlog")`` — register once per session with
-    ``spark.dataSource.register(TxnLogStreamDataSource)``."""
+    """``format("txnlog")`` — register with :func:`register_txnlog`
+    before a query that reads or writes it."""
 
     @classmethod
     def name(cls) -> str:
@@ -1019,3 +1019,21 @@ class TxnLogStreamDataSource(DataSource):
                 "supported"
             )
         return TxnLogStreamWriter(self.options, schema)
+
+
+def register_txnlog(spark) -> None:
+    """Register ``format("txnlog")`` with ``spark`` and make ``spark``
+    the calling thread's active session.
+
+    A stream writer looks a Python data source up in the JVM thread's
+    *active* session, not in the session it was built from. Only a few
+    calls (``createDataFrame`` among them) set it, so a query started
+    on a thread that has not made one — a fresh worker of a pool
+    running queries side by side — fails with ``DATA_SOURCE_NOT_FOUND``
+    even though the source is registered."""
+    from pyspark.sql import SparkSession
+
+    spark.dataSource.register(TxnLogStreamDataSource)
+    SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(
+        spark._jsparkSession
+    )

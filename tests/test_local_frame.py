@@ -1,0 +1,222 @@
+"""Driver-built rows enter the plan as Arrow local relations, and
+``load_table`` reuses the schema it inferred.
+
+- ``local_frame`` returns what ``createDataFrame`` returns (rows and
+  schema) for every scalar type the engine builds frames from, as a
+  ``LocalRelation`` with no ``ExistingRDD`` scan.
+- A repeated ``load_table`` of an unchanged file runs no Spark job; a
+  rewritten or re-stamped file is inferred again.
+- Jobs started from the engine's thread pools keep the caller's job
+  group.
+- No module in the package calls ``createDataFrame`` directly except
+  ``local_frame`` itself and the fixtures' pandas input.
+"""
+
+from __future__ import annotations
+
+import ast
+import datetime as dt
+import os
+import shutil
+import uuid
+from decimal import Decimal
+from pathlib import Path
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import types as T
+
+from relational_query_engine_sql_spark import plans
+from relational_query_engine_sql_spark.schemas import DRIVER_TABLES
+from relational_query_engine_sql_spark.sources import (
+    catalog,
+    load_table,
+    local_frame,
+)
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "relational_query_engine_sql_spark"
+
+ALL_TYPES = T.StructType(
+    [
+        T.StructField("i", T.IntegerType()),
+        T.StructField("b", T.LongType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("f", T.BooleanType()),
+        T.StructField("day", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("m", T.DecimalType(27, 6)),
+    ]
+)
+ALL_ROWS = [
+    (
+        1,
+        2**40,
+        "a",
+        1.5,
+        True,
+        dt.date(1999, 9, 9),
+        dt.datetime(2020, 2, 29, 23, 59, 59, 123456),
+        Decimal("123456789.000001"),
+    ),
+    (
+        -7,
+        -(2**62),
+        "ü,\n",
+        -0.0,
+        False,
+        dt.date(1970, 1, 1),
+        dt.datetime(1969, 12, 31, 23, 0),
+        Decimal("-0.5"),
+    ),
+    # one null per column, then an all-null row
+    (None, 3, "x", 2.0, True, dt.date(2000, 1, 1), None, Decimal("1")),
+    (4, None, None, None, None, None, dt.datetime(2001, 1, 1), None),
+    (None,) * 8,
+]
+
+
+def _jobs(spark, group: str) -> list[int]:
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _in_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, job ids)."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, _jobs(spark, group)
+
+
+@pytest.mark.parametrize("n", [len(ALL_ROWS), 0], ids=["rows", "empty"])
+def test_local_frame_matches_create_dataframe(spark, n):
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    rows = ALL_ROWS[:n]
+    got = local_frame(spark, rows, ALL_TYPES)
+    want = spark.createDataFrame(rows, ALL_TYPES)
+    assert got.schema == want.schema == ALL_TYPES
+    assert got.collect() == want.collect()
+
+
+def test_local_frame_ddl_schema(spark):
+    ddl = "k long, name string, day date"
+    rows = [(1, "a", dt.date(2024, 1, 2)), (None, None, None)]
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert local_frame(spark, [], ddl).schema == want.schema
+
+
+def test_local_frame_is_a_local_relation(spark):
+    for rows in (ALL_ROWS, []):
+        qe = local_frame(spark, rows, ALL_TYPES)._jdf.queryExecution()
+        optimized = qe.optimizedPlan().toString()
+        physical = qe.executedPlan().toString()
+        assert optimized.startswith("LocalRelation"), optimized
+        assert "ExistingRDD" not in physical, physical
+    empty = local_frame(spark, [], ALL_TYPES)._jdf.queryExecution()
+    assert "<empty>" in empty.optimizedPlan().toString()
+
+
+def test_load_table_reuses_inferred_schema(spark, sf_small, tmp_path):
+    shutil.copy(f"{sf_small}/nation.parquet", tmp_path / "nation.parquet")
+    path = str(tmp_path / "nation.parquet")
+
+    def load():
+        return load_table(spark, str(tmp_path), "nation")
+
+    first, jobs = _in_group(spark, load)
+    assert jobs, "the first read infers the schema with a Spark job"
+    again, jobs = _in_group(spark, load)
+    assert jobs == [], f"unchanged file re-inferred: jobs {jobs}"
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    # rewritten with another schema (new size and mtime): inferred again
+    pq.write_table(pa.table({"n_nationkey": [1], "extra": ["x"]}), path)
+    new, jobs = _in_group(spark, load)
+    assert jobs, "a rewritten file must be inferred again"
+    assert new.columns == ["n_nationkey", "extra"]
+    # same bytes, new mtime only: inferred again
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    _, jobs = _in_group(spark, load)
+    assert jobs, "a re-stamped file must be inferred again"
+
+
+def test_load_table_directory_listing_invalidates(spark, tmp_path):
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"k": [1, 2]}), d / "part-0.parquet")
+
+    def load():
+        return load_table(spark, str(tmp_path), "t")
+
+    first, jobs = _in_group(spark, load)
+    assert jobs and first.count() == 2
+    _, jobs = _in_group(spark, load)
+    assert jobs == []
+    pq.write_table(pa.table({"k": [3]}), d / "part-1.parquet")
+    grown, jobs = _in_group(spark, load)
+    assert jobs, "an added data file must be inferred again"
+    assert grown.count() == 3
+
+
+def test_cached_schema_equals_inferred_for_driver_tables(spark, sf_small):
+    for name in DRIVER_TABLES:
+        load_table(spark, sf_small, name)  # fills the cache
+        path = f"{sf_small}/{name}.parquet"
+        assert catalog._stamp(path) is not None, name
+        cached = load_table(spark, sf_small, name)
+        catalog._SCHEMAS.get(spark, {}).clear()
+        fresh = load_table(spark, sf_small, name)
+        assert cached.schema == fresh.schema, name
+
+
+def test_pool_jobs_keep_the_caller_job_group(spark, sf_small):
+    """s7 clones four tables from a thread pool and cascades through two
+    sibling subtrees from another; none of their jobs may lose the
+    caller's job group."""
+    untagged_before = set(_jobs(spark, None))
+    s7 = plans.get("s7_cascade_delete")
+    rows, tagged = _in_group(spark, lambda: s7.fn(spark, sf_small).collect())
+    new_untagged = set(_jobs(spark, None)) - untagged_before
+    assert rows and tagged
+    assert new_untagged == set(), f"{len(new_untagged)} jobs lost the group"
+
+
+# Direct createDataFrame calls allowed in the package, by (file, function).
+_ALLOWED = {
+    ("sources/catalog.py", "local_frame"),  # the Arrow table it builds
+    ("fixtures.py", "conform"),  # pandas input, already through Arrow
+}
+
+
+def test_no_create_dataframe_outside_local_frame():
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+
+        def walk(node, fn_name):
+            for child in ast.iter_child_nodes(node):
+                name = fn_name
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    name = child.name
+                if (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == "createDataFrame"
+                    and (rel, fn_name) not in _ALLOWED
+                ):
+                    found.append(f"{rel}:{child.lineno} in {fn_name}")
+                walk(child, name)
+
+        walk(ast.parse(path.read_text(), str(path)), None)
+    assert found == [], "use sources.local_frame instead: " + ", ".join(found)

@@ -1344,3 +1344,35 @@ def test_txnlog_source_max_files_per_trigger(spark, tmp_path):
     assert post, "no post-catchup batches"
     assert max(post) <= 20, f"a batch exceeded 2 files: {batches}"
     assert len(post) >= 3, f"6 files must take >= 3 bounded batches: {batches}"
+
+
+@pytest.mark.parametrize(
+    "name", ["stream_txnlog_sink", "stream_txnlog_rowid_sink"]
+)
+def test_txnlog_sink_starts_on_a_thread_without_active_session(
+    spark, sf_small, name
+):
+    """The writer resolves ``format("txnlog")`` through the JVM thread's
+    active session; a query started on a thread that has none (a fresh
+    worker of a query pool) must still find the registered source."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    from relational_query_engine_sql_spark import plans
+
+    jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+    out: dict = {}
+
+    def run():
+        jsession.clearActiveSession()
+        try:
+            out["rows"] = plans.get(name).fn(spark, sf_small).collect()
+        except Exception as e:  # noqa: BLE001 - asserted below
+            out["err"] = e
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join()
+    assert "err" not in out, out.get("err")
+    assert out["rows"]

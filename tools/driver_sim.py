@@ -16,10 +16,13 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402

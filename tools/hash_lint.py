@@ -31,10 +31,13 @@ Exit code 1 when any non-whitelisted finding exists.
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 # (query name, output column) pairs that are vetted. Evidence classes:
 #   - driver-green CORRECTNESS hash rows across rounds 1-6 (the vast
