@@ -7,9 +7,9 @@ Importing this package registers every query module. ``queries()`` /
 from .registry import all_oracles, all_queries, get, query, set_rotation
 
 # Import for registration side effects — each module registers its
-# SURVEY.md §2 operator family. Export order is controlled by the
-# curated ROUND3_PREFIX below (see registry.set_rotation), not by
-# import order. COVERAGE.md documents the rotation history.
+# SURVEY.md §2 operator family. Export order is DRIVER_WINDOW below
+# (see registry.set_rotation), then the rest by priority and import
+# order.
 from . import queries_extensions  # noqa: E402,F401
 from . import queries_tpch  # noqa: E402,F401
 from . import queries_similarity  # noqa: E402,F401
@@ -31,777 +31,15 @@ from . import queries_retrieval  # noqa: E402,F401
 from . import queries_er  # noqa: E402,F401
 from . import queries_privacy  # noqa: E402,F401
 
-# Round-3 driver prefix (the driver checks the first ~50 exported
-# queries). Slots 0-33: the 34 queries with no CORRECTNESS row across
-# rounds 1-2 (verified strict-sim green locally; now given hard rows).
-# Slots 34-49: one representative per SURVEY §2 / pipeline family so a
-# rotation bug can never silently un-check a core operator family.
-ROUND3_PREFIX = [
-    # -- never-driver-checked (34), highest judge value first --
-    "j9_asof_join_purchase_view",
-    "j10_range_join_busy_windows",
-    "w6_ohlc_daily",
-    "search_bm25_topk",
-    "text_chunk_windows",
-    "dedup_cluster_components",
-    "emb_quantize_int8",
-    "src_csv_roundtrip",
-    "src_jsonl_roundtrip",
-    "mv_incremental_rollup",
-    "maintenance_compaction",
-    "stream_dedup_ingest",
-    "stream_join_attribution_outer",
-    "decontaminate_ngram_overlap",
-    "text_pii_redact",
-    "text_repetition_score",
-    "ext_approx_distinct",
-    "ext_null_safe_join",
-    "ext_setops_all",
-    "ann_kmeans_train",
-    "ann_bruteforce_numpy",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_part_count",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q19_discounted_revenue",
-    "tpch_q20_excess_stock_suppliers",
-    "tpch_q21_waiting_supplier",
-    "tpch_q22_global_sales_opportunity",
-    # -- round-3 additions (9): new operators needing their first row --
-    "dedup_semantic_clusters",  # LSH pairs → CC → representative
-    "search_tfidf_terms",  # TF-IDF keyword extraction
-    "sample_temperature_mix",  # training-mixture temperature sampling
-    "dq_skew_profile",  # pre-shuffle key-skew diagnostics
-    "ext_unpivot",  # wide→long melt
-    "ext_lateral_explode",  # posexplode with ordinality
-    "ext_correlated_scalar",  # correlated scalar subquery (SQL API)
-    "src_orc_roundtrip",  # ORC sink/source
-    "src_partitioned_pruning",  # hive-partitioned write + pruned read
-    # -- §2 family representatives (7): insurance so a rotation bug
-    # can never silently un-check a core family --
-    "a1_pricing_summary",  # A: grouped multi-aggregate
-    "j1_join_dims",  # J: inner equi-join
-    "s5_upsert",  # S: write path
-    "u2_apply_trades",  # U: sequential fold write path
-    "dedup_minhash_lsh",  # pipeline: near-dup (perf-watched this round)
-    "dedup_embedding_cosine",  # pipeline: now non-vacuous (planted dups)
-    "stream_tumbling_hourly",  # streaming: watermark window
-]
-def _judged_round() -> int:
-    """Round of the latest judge verdict (VERDICT.md's '# VERDICT —
-    round N' header). The driver writes VERDICT.md for round N at the
-    START of round N+1, so judged-round N means the CURRENT round is
-    N+1 — the rotation can self-advance without a manual swap (a
-    forgotten swap would re-check already-proven queries and leave the
-    staged ones without driver rows). Missing/unparsable file → 2
-    (this rotation scheme was installed during round 3)."""
-    import os
-    import re
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "VERDICT.md",
-    )
-    try:
-        with open(path, encoding="utf-8") as f:
-            m = re.search(r"round\s+(\d+)", f.readline())
-        return int(m.group(1)) if m else 2
-    except OSError:
-        return 2
-
-# Round-4 prefix, pre-curated at the end of round 3: the 46 queries
-# registered during round 3 that the round-3 driver window could not
-# reach (all strict-sim green at sf0.001 AND sf0.01 via
-# tools/driver_sim.py), plus 4 family representatives (slots 47-50).
-# Installed automatically when VERDICT.md advances to round 3 (see the
-# rotation self-advance at the bottom of this module). With r1-r3
-# green that closes hard driver rows for the whole registry again.
-ROUND4_PREFIX = [
-    "sql_recursive_hierarchy",
-    "graph_triangle_count",
-    "graph_pagerank_fixed",
-    "ts_anomaly_zscore",
-    "ext_histogram_buckets",
-    "pack_context_windows",
-    "text_ngram_topk",
-    "ext_filtered_agg",
-    "cdc_snapshot_diff",
-    "ext_cume_nth",
-    "ext_exists_flag",
-    "ext_date_parts",
-    "ext_mode_deterministic",
-    "emb_truncate_renorm",
-    "stream_trending_topk",
-    "stream_mv_hourly_rollup",
-    "ev_retention_cohorts",
-    "ev_funnel_steps",
-    "ev_transition_matrix",
-    "mm_resize_images",
-    "maintenance_zorder_layout",
-    "maintenance_analyze_stats",
-    "dq_freshness_lag",
-    "dq_fk_orphans",
-    "s10_time_travel",
-    "s11_merge_mixed",
-    "sql_api_report",
-    "j11_fuzzy_name_match",
-    "j13_asof_tolerance",
-    "w7_ewma_value",
-    "w8_running_distinct_types",
-    "w9_time_weighted_avg",
-    "a9_contribution_share",
-    "text_boilerplate_lines",
-    "text_word_entropy",
-    "dedup_ngram_containment",
-    "search_phrase_match",
-    "src_schema_evolution",
-    "sketch_cms_heavy_hitters",
-    "sketch_kmv_distinct",
-    "split_leakage_safe",
-    "sample_negative_pairs",
-    "feat_winsorize",
-    "sample_per_group_k",
-    "batch_by_length",
-    "split_stratified_exact",
-    "sketch_kmv_merge",
-    "sketch_cms_merge",
-    # family representatives (insurance against rotation bugs)
-    "a1_pricing_summary",
-    "j1_join_dims",
-]
-
-# Round-5 prefix, re-curated at the start of round 5 per the round-4
-# verdict: pack the driver's ~50-slot window with 46 never-driver-
-# checked names (txnlog family, both S8 chart rows, retrieval/ER and
-# HLL first) and trim the standing family-representative insurance to
-# 4 slots. The 37 remaining never-checked names defer to ROUND6.
-# Every name here is strict-sim green (tools/driver_sim.py, exact
-# hash) at sf0.001 + sf0.01, most also swept at sf0.1.
-ROUND5_FRESH = [
-    # txnlog table format — round-4 flagship, zero driver rows yet
-    "s13_txnlog_merge_mixed",
-    "s14_txnlog_optimistic_retry",
-    "s15_txnlog_time_travel",
-    "s16_txnlog_schema_evolution",
-    "s17_txnlog_merge_on_read",
-    "maintenance_txnlog_history",
-    "maintenance_txnlog_cluster",
-    # S8 — the reference's two chart routes, closed in round 4
-    "s8_chart_daily_close",
-    "s8_chart_forecast",
-    # retrieval + entity resolution
-    "search_hybrid_rrf",
-    "ann_pq_adc_topk",
-    "rag_chunk_retrieval",
-    "er_resolve_entities",
-    "er_survivorship",
-    # HLL sketch (exact cross-engine register oracle)
-    "sketch_hll_registers",
-    "sketch_hll_merge",
-    # dedup/index/text additions from rounds 3e-4
-    "dedup_index_persisted",
-    "dedup_incremental_ingest",
-    "text_nfc_normalize",
-    "corpus_domain_gate",
-    "text_bpe_pair_freq",
-    "text_hot_span_scrub",
-    # streaming / CDC / SCD2
-    "stream_tumbling_live",
-    "stream_cdc_apply",
-    "scd2_user_state",
-    "j15_scd2_point_in_time",
-    # join/window/mutation variants
-    "j16_asof_nearest",
-    "j17_interval_overlap",
-    "s12_optimistic_retry",
-    "w11_rolling_median",
-    # ANN variants + evals
-    "ann_ivf_filtered",
-    "ann_ivf_multiprobe",
-    "eval_ann_recall",
-    "eval_dedup_recall",
-    # multimodal signature paths
-    "mm_image_ahash_dedup",
-    "dedup_ahash_hamming",
-    "mm_audio_features",
-    "mm_video_scene_cuts",
-    # privacy/governance + experimentation stats
-    "dq_k_anonymity",
-    "dp_noisy_counts",
-    "sec_cleanroom_join",
-    "stats_bootstrap_ci",
-    "stats_ab_welch",
-    # time-series depth + training pipeline
-    "ts_downsample_m4",
-    "dq_psi_drift",
-    "pipeline_training_manifest",
-]
-_unknown_r5 = [n for n in ROUND5_FRESH if n not in all_queries()]
-assert not _unknown_r5, f"ROUND5_FRESH names not registered: {_unknown_r5}"
-
-ROUND5_PREFIX = ROUND5_FRESH + [
-    # family-representative insurance (trimmed to 4 per the verdict)
-    "a1_pricing_summary",  # A/§2 core: grouped multi-aggregate
-    "j1_join_dims",  # J: inner equi-join
-    "s5_upsert",  # S: write path
-    "dedup_minhash_lsh",  # pipeline: near-dup (perf-watched)
-]
-
-# Round-6 queue: the 37 never-driver-checked names that did not fit
-# the round-5 window, plus any queries registered during the round-5
-# session (appended as they are added, each strict-sim green at
-# sf0.001 + sf0.01 before staging).
-ROUND6_QUEUE = [
-    "ev_hourly_seasonality",
-    "emb_centroid_spread",
-    "dq_pk_duplicates",
-    "ext_salted_join",
-    "join_bloom_prefilter",
-    "feat_target_encode",
-    "dq_benford_digits",
-    "sample_weighted_priority",
-    "stream_static_enrich",
-    "text_lm_score",
-    "dq_id_gaps",
-    "ts_cusum_changepoints",
-    "w10_rolling_corr",
-    "ts_interpolate_linear",
-    "feat_hash_bucketize",
-    "stats_chi_square",
-    "ext_reused_exchange",
-    "sql_api_bind_params",
-    "split_temporal_embargo",
-    "src_nested_struct_pruning",
-    "forecast_backtest_metrics",
-    "eval_langid_confusion",
-    "mv_rollup_retractions",
-    "dq_header_detail_reconcile",
-    "ext_string_funcs",
-    "ev_dau_mau",
-    "ev_inactivity_gaps",
-    "ev_attribution_models",
-    "ev_cohort_ltv",
-    "j14_shuffle_hash_hint",
-    "text_keyword_in_context",
-    "text_lexical_diversity",
-    "corpus_dedup_report",
-    "feat_impute_group_mean",
-    "feat_robust_zscore_mad",
-    "reco_copurchase_lift",
-    "ts_seasonal_decompose",
-    # round-5 session additions (strict-sim green at both driver SFs
-    # when staged)
-    "s18_txnlog_composite_prune",
-    "sketch_hll_estimate",
-    "stream_join_live",
-    # round-5 close-session additions (each strict-sim green at
-    # sf0.001 + sf0.01 + sf0.1): theta set algebra, bloom file index,
-    # bloom merge law, exactly-once sink, data-skipping scan
-    "sketch_theta_intersect",
-    "s19_txnlog_bloom_lookup",
-    "sketch_bloom_merge",
-    "stream_ingest_exactly_once",
-    "s20_txnlog_stats_scan",
-    "s21_txnlog_zorder_scan",
-]
-_unknown_r6 = [n for n in ROUND6_QUEUE if n not in all_queries()]
-assert not _unknown_r6, f"ROUND6_QUEUE names not registered: {_unknown_r6}"
-
-ROUND6_PREFIX = ROUND6_QUEUE + [
-    # family-representative insurance
-    "a1_pricing_summary",
-    "j1_join_dims",
-    "s5_upsert",
-    "dedup_minhash_lsh",
-]
-
-# Round-7 queue: spillover staging for queries added after ROUND6's
-# window fills (~50 names).
-ROUND7_QUEUE = [
-    # round-5 close additions (strict-sim green at all three SFs);
-    # the five later close-session queries moved into ROUND6_QUEUE's
-    # spare window slots
-    "sketch_quantile_bottomk",
-    "sketch_quantile_merge",
-    "sketch_quantile_per_group",
-    "s22_txnlog_restore",
-    "s23_txnlog_check_constraint",
-    "s24_txnlog_shallow_clone",
-    # round-6 session additions (strict-sim green at sf0.001 + sf0.01
-    # + sf0.1 when staged; ROUND6_PREFIX is frozen at 50 names)
-    "s25_txnlog_partition_prune",
-    "eval_numpy_jvm_parity",
-    "eval_kmeans_invariants",
-    "ext_approx_distinct",  # upgraded rows-only -> oracled (5% envelope)
-    "s26_txnlog_cdf",
-    "s27_txnlog_timestamp_travel",
-    "s28_txnlog_vacuum_retention",
-    "stream_txnlog_source",
-    "eval_quantization_recall",
-    "s29_txnlog_partition_stream",
-    "stream_txnlog_sink",
-]
-_unknown_r7 = [n for n in ROUND7_QUEUE if n not in all_queries()]
-assert not _unknown_r7, f"ROUND7_QUEUE names not registered: {_unknown_r7}"
-
-ROUND7_PREFIX = ROUND7_QUEUE + [
-    # the one round-6 driver-red row, re-staged after the hash-stable
-    # rewrite (est_e4 floor-scaled BIGINT instead of round(double,4) —
-    # see queries_sketches.py); MUST earn a green row this round
-    "sketch_hll_estimate",
-    # round-7 additions (strict-sim green at sf0.001 + 0.01 + 0.1
-    # when staged)
-    "stream_txnlog_windowed",  # txnlog source × stateful window agg
-    "sketch_hll_union_estimate",  # merge law at the estimate level
-    "ext_dynamic_partition_pruning",  # runtime star-schema scan prune
-    "feat_quantile_binning",  # equal-frequency discretization
-    "s30_txnlog_monotonic_time_travel",  # clock-skew-safe AS OF
-    "dq_column_profile",  # one-pass per-column completeness profile
-    # provenance close: oracled since round 2 but only ever recorded a
-    # rows-only r1 row (err=no_oracle) and was never staged since —
-    # the LAST registry name without a hash-checked driver row
-    "u1_linreg_fit_pandas",
-    # round-7 session additions (strict-sim green at sf0.001 + 0.01 +
-    # 0.1 when staged)
-    "stream_session_live",  # native session windows, live exec
-    "s31_txnlog_column_mapping",  # metadata-only rename/drop + protocol
-    "stream_txnlog_join",  # two txnlog sources x join state restart
-    # promoted from ROUND8_QUEUE into the window's last slot: the
-    # batch format reader exercises DV subtraction, column mapping,
-    # time travel, and protocol gating in one row
-    "src_txnlog_batch_reader",
-    "a1_pricing_summary",
-    "j1_join_dims",
-    "s5_upsert",
-    "u2_apply_trades",
-    "f4_ilike_search",
-    "o2_topk",
-    "e9_ledger_regex",
-    "w3_topn_per_group",
-    "tpch_q6_forecast_revenue",
-    "dedup_minhash_lsh",
-    "ann_ivf_topk",
-    "mm_decode_real",
-    "stream_tumbling_hourly",
-    "sketch_kmv_distinct",
-    "text_quality_metrics",
-    "src_csv_roundtrip",
-    "ev_funnel",
-    "graph_triangle_count",
-    "split_leakage_safe",
-    "dq_violation_counts",
-    "ext_rollup",
-]
-
-# Round-8 queue: staging for queries added during round 8 (insert at
-# the FRONT of ROUND8_PREFIX as they are added, each strict-sim green
-# at all three SFs first).
-ROUND8_QUEUE: list[str] = [
-    # round-8 session additions (each strict-sim green at
-    # sf0.001 + 0.01 + 0.1 when staged)
-    "ext_python_udtf",
-    "ext_variant_shred",
-    "sql_recursive_cte_native",
-    "graph_pagerank",
-    "ts_holt_linear",
-    "s38_txnlog_row_tracking",
-    "s39_txnlog_partition_evolution",
-    "s36_txnlog_replace_where",
-    "s37_txnlog_merge_schema",
-    "stream_txnlog_rate_limit",
-    "w12_pattern_rising_runs",
-    "rag_mmr_rerank",
-    # round-7 session additions past the full 50-name ROUND7 window
-    # (each strict-sim green at sf0.001 + 0.01 + 0.1 when staged;
-    # src_txnlog_batch_reader was promoted into ROUND7's last slot)
-    "s32_txnlog_compact_small",
-    "s33_txnlog_generated_partition",
-    "mv_txnlog_cdf_refresh",
-    "s34_txnlog_fsck",
-    "s35_txnlog_gc_orphans",
-]
-
-# Round-8 prefix, pre-curated at the end of round 7: with round 7's
-# window landed, EVERY registry name has a hash-checked driver row, so
-# the rotation's job flips from provenance to FRESHNESS — re-verify
-# the rows that have not been re-checked since round 1 (the oldest
-# greens; engine/environment drift is the thing a 6-round-old row can
-# miss, which is exactly how the HLL red hid until round 6). The
-# stale-green list below is computed from CORRECTNESS_r01..06
-# (hash-green in r1, never re-checked since) minus names already
-# re-verified by ROUND7_PREFIX.
-ROUND8_STALE_GREENS = [
-    "a1_key_stats",
-    "a2_coefficient_of_variation",
-    "a3_market_returns",
-    "a4_beta",
-    "a5_correlation_matrix",
-    "a6_distinct",
-    "a7_value_sum",
-    "a8_weighted_avg",
-    "corpus_clean_pipeline",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "e10_forecast_horizon",
-    "e11_pair_normalize",
-    "e8_upper_normalize",
-    "f2_date_between",
-    "f5_in_list",
-    "f6_or_predicate",
-    "f8_analog_acl",
-    "j2_or_join_union",
-    "j4_triangular_selfjoin",
-    "j5_semijoin_exists",
-    "j6_fact_bridge",
-    "j7_a7_market_value",
-    "j7_asof_latest",
-    "j8_antijoin",
-    "o4_topk_then_asc",
-    "s1_scan_project",
-    "s2_point_lookup",
-    "s9_probe",
-    "sample_stable",
-    "sample_stratified",
-    "sql_api_exists",
-    "stats_bundle_cov_beta",
-    "stats_cached_cov_beta",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_token_counts",
-    "u1_linreg_fit",
-    "w1_single_series_returns",
-    "w2_returns_panel",
-]
-# Order: the never-checked QUEUE first (provenance), then the family
-# reps (insurance — must stay inside the ~50-name driver window), and
-# the stale-green refreshes LAST so any window overflow costs a
-# re-verification of an old green, never a first row or a family rep.
-ROUND8_PREFIX = ROUND8_QUEUE + [
-    # family-representative insurance
-    "a1_pricing_summary",
-    "j1_join_dims",
-    "s5_upsert",
-    "dedup_minhash_lsh",
-    "stream_tumbling_hourly",
-    "sketch_hll_estimate",
-    # the union-estimate sibling shares the round-6/7 red's emission —
-    # both MUST be inside the checked window to driver-verify the
-    # all-integer/string fix (round-7 verdict: staging this row was
-    # the miss that left its fix unverifiable)
-    "sketch_hll_union_estimate",
-    "s13_txnlog_merge_mixed",
-] + ROUND8_STALE_GREENS
-_unknown_r8 = [n for n in ROUND8_PREFIX if n not in all_queries()]
-assert not _unknown_r8, f"ROUND8 names not registered: {_unknown_r8}"
-
-# Round-9 queue: staging for queries added during round 9 (each
-# strict-sim green at sf0.001 + 0.01 + 0.1 before entering).
-ROUND9_QUEUE: list[str] = [
-    "s40_txnlog_dv_purge",  # REORG APPLY (PURGE), MOR third leg
-    "text_exact_substring_dedup",  # Lee et al. ExactSubstr islands
-    "text_bpe_merge_train",  # iterative BPE trainer, 3 merge rounds
-    "s41_txnlog_rowid_diff",  # snapshot diff via stable row ids
-    "sketch_hll_hourly_rollup",  # hypertable-rollup mergeability law
-]
-
-# Round-9 prefix, per the round-8 verdict: provenance is closed and
-# correctness fully green, so the window's job is FRESHNESS — the 56
-# registry names whose latest driver row still dates to r1–r2 (six
-# rounds of shared-module churn; the HLL episode proved sim-green can
-# hide driver-red). Order: never-checked queue first, then 3 family
-# reps (flagship canary + the two scenarios exercising this round's
-# row-tracking semantics changes), then the stale cohort OLDEST
-# FIRST (all 16 r1 rows, then 29 of the 40 r2 rows — mutation paths
-# touched this round first, then TPC-H, windows, streams, ext_*).
-# The 11 r2 rows that don't fit are pre-staged below for round 10.
-ROUND9_STALE_R1 = [
-    "j8_antijoin",
-    "o4_topk_then_asc",
-    "s1_scan_project",
-    "s2_point_lookup",
-    "s9_probe",
-    "sample_stable",
-    "sample_stratified",
-    "sql_api_exists",
-    "stats_bundle_cov_beta",
-    "stats_cached_cov_beta",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_token_counts",
-    "u1_linreg_fit",
-    "w1_single_series_returns",
-    "w2_returns_panel",
-]
-ROUND9_STALE_R2 = [
-    "s3_row_append",
-    "s4_insert_ignore",
-    "s6_conditional_update",
-    "s7_cascade_delete",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q10_returned_items",
-    "tpch_q12_shipmode_priority",
-    "tpch_q14_promo_revenue",
-    "tpch_q18_large_orders",
-    "w4_gap_fill",
-    "w5_rank_ties",
-    "f3_asof_today",
-    "j6_bucketed_fact_join",
-    "stream_join_attribution",
-    "stream_sliding_15m",
-    "sessionization",
-    "ev_user_activity",
-    "ext_array_agg",
-    "ext_cube",
-    "ext_distinct_agg",
-    "ext_first_last_value",
-    "ext_grouping_sets",
-    "ext_having",
-    "ext_json_extract",
-]
-# r2-stale rows that exceed the 50-name window — FIRST in line for
-# the round-10 rotation so the whole r1–r2 cohort is refreshed by
-# round-10 close.
-ROUND10_STALE_STAGED = [
-    "ext_lead_ntile",
-    "ext_moving_avg",
-    "ext_null_semantics",
-    "ext_percent_rank",
-    "ext_percentiles",
-    "ext_pivot",
-    "ext_range_frame",
-    "ext_salted_agg",
-    "ext_setops",
-    "mm_byte_histogram",
-    "mm_decode_stub",
-    "mm_frame_sample",
-    "mm_media_catalog",
-    "ann_bruteforce_topk",
-]
-ROUND9_PREFIX = (
-    ROUND9_QUEUE
-    + [
-        # family-representative insurance: the flagship/canary, plus
-        # the two txnlog scenarios sitting on this round's semantic
-        # changes (row-id preservation through COW rewrites; the
-        # constructor partition-spec validation fix)
-        "a1_pricing_summary",
-        "s38_txnlog_row_tracking",
-        "s13_txnlog_merge_mixed",
-    ]
-    + ROUND9_STALE_R1
-    + ROUND9_STALE_R2
-)
-_unknown_r9 = [n for n in ROUND9_PREFIX if n not in all_queries()]
-assert not _unknown_r9, f"ROUND9 names not registered: {_unknown_r9}"
-assert len(ROUND9_PREFIX) == 50, len(ROUND9_PREFIX)
-
-# Round-10 queue: staging for queries added during round 10 (each
-# strict-sim green at sf0.001 + 0.01 + 0.1 before entering).
-ROUND10_QUEUE: list[str] = [
-    "stream_txnlog_rowid_sink",  # sink x row-tracking composition
-    "emb_pca_whiten",  # distributed Gram -> driver eigh -> whiten
-]
-
-# Round-10 prefix, per the round-9 verdict: the engine is
-# feature-complete and fully green, so the window's job remains
-# FRESHNESS — clear the r2 remainder (ROUND10_STALE_STAGED) and the
-# highest-risk r3 rows, and refresh the six §2 reps whose latest green
-# dates to r7 so every §2 operator's newest driver check is ≤2 rounds
-# old at close. Order: queue, 2 family reps (flagship canary + the
-# row-tracking scenario sitting under this round's sink composition),
-# the 6 r7-stale §2 reps, the 14 staged r2 rows, then 27 r3 rows
-# chosen by risk: module churn first (txnlog maintenance, streaming),
-# then the TPC-H cohort, sources, search, and the legacy-double
-# migration row w6_ohlc_daily. The 13 r3 rows that don't fit are
-# pre-staged below for round 11 (ann_bruteforce_numpy/ann_kmeans_train
-# stay out: rows-only by declaration, their oracled companions carry
-# the check).
-ROUND10_R7_REPS = [
-    "o2_topk",  # O1/O2
-    "f4_ilike_search",  # F4
-    "e9_ledger_regex",  # E9
-    "u2_apply_trades",  # U2/A8, the trade-ledger heart
-    "src_csv_roundtrip",  # S8 analog
-    "s22_txnlog_restore",  # S10
-]
-ROUND10_STALE_R3 = [
-    "maintenance_compaction",  # txnlog module churned in r9
-    "mv_incremental_rollup",
-    "stream_dedup_ingest",  # streaming module churned in r9/r10
-    "stream_join_attribution_outer",
-    "j9_asof_join_purchase_view",
-    "j10_range_join_busy_windows",  # also: the r9 bench flag, retimed
-    "w6_ohlc_daily",  # legacy-double row (value-preserving selections)
-    "tpch_q2_min_cost_supplier",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_part_count",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q19_discounted_revenue",
-    "tpch_q20_excess_stock_suppliers",
-    "tpch_q21_waiting_supplier",
-    "tpch_q22_global_sales_opportunity",
-    "src_jsonl_roundtrip",
-    "src_orc_roundtrip",
-    "src_partitioned_pruning",
-    "search_bm25_topk",
-    "search_tfidf_terms",
-    "dedup_cluster_components",
-]
-# r3 rows that exceed the 50-name window — FIRST in line for round 11
-# (with the 45 r4 rows behind them).
-ROUND11_STALE_STAGED = [
-    "text_pii_redact",  # evicted from the r10 window for emb_pca_whiten
-    "decontaminate_ngram_overlap",
-    "dedup_embedding_cosine",
-    "dedup_semantic_clusters",
-    "dq_skew_profile",
-    "emb_quantize_int8",
-    "ext_correlated_scalar",
-    "ext_lateral_explode",
-    "ext_null_safe_join",
-    "ext_setops_all",
-    "ext_unpivot",
-    "sample_temperature_mix",
-    "text_chunk_windows",
-    "text_repetition_score",
-]
-ROUND10_PREFIX = (
-    ROUND10_QUEUE
-    + [
-        "a1_pricing_summary",  # flagship/canary
-        "s38_txnlog_row_tracking",  # row-tracking rep under r10's sink work
-    ]
-    + ROUND10_R7_REPS
-    + ROUND10_STALE_STAGED
-    + ROUND10_STALE_R3
-)
-_unknown_r10 = [n for n in ROUND10_PREFIX if n not in all_queries()]
-assert not _unknown_r10, f"ROUND10 names not registered: {_unknown_r10}"
-assert len(ROUND10_PREFIX) == 50, len(ROUND10_PREFIX)
-assert len(set(ROUND10_PREFIX)) == 50
-
-# Round-11 queue: staging for queries added during round 11 (each
-# strict-sim green at sf0.001 + 0.01 + 0.1 before entering).
-ROUND11_QUEUE: list[str] = [
-    "j18_skyline_pareto",  # two-phase distributed Pareto frontier
-    "stats_ks_drift",  # integer-exact two-sample KS per event_type
-    "text_bpe_encode",  # trained merges applied: tokenize-and-count
-    "eval_whiten_ann_recall",  # whitening composed with IVF search
-]
-
-# Round-11 prefix: freshness again — the engine stays feature-complete
-# and fully green (round-10 verdict), so the window clears the r3
-# remainder (ROUND11_STALE_STAGED, 14 names) and 32 of the 45 r4-stale
-# rows, picked risk-first: rows in modules churned this round
-# (datapipe/similarity → emb_truncate_renorm; multimodal →
-# mm_resize_images; window-stats → w7/w8/w9/ts_anomaly; joins →
-# j11/j13), then txnlog/streaming/sketch/graph/recursive-SQL state
-# machines, then text/search/sample/ev. The r4 rows that don't fit
-# are the lowest-risk pure-SQL-surface aggregates (ext_* scalar rows,
-# dq counts, simple samplers) — staged below for round 12, which
-# clears the r4 cohort entirely. Reps: the flagship canary plus
-# emb_pca_whiten (sits directly on this round's advice-fix churn in
-# datapipe/similarity.py).
-ROUND11_STALE_R4 = [
-    "cdc_snapshot_diff",
-    "dedup_ngram_containment",
-    "emb_truncate_renorm",
-    "ev_funnel_steps",
-    "ev_transition_matrix",
-    "graph_pagerank_fixed",
-    "j11_fuzzy_name_match",
-    "j13_asof_tolerance",
-    "maintenance_analyze_stats",
-    "maintenance_zorder_layout",
-    "mm_resize_images",
-    "pack_context_windows",
-    "s10_time_travel",
-    "s11_merge_mixed",
-    "sample_negative_pairs",
-    "search_phrase_match",
-    "sketch_cms_heavy_hitters",
-    "sketch_cms_merge",
-    "sketch_kmv_merge",
-    "sql_api_report",
-    "sql_recursive_hierarchy",
-    "src_schema_evolution",
-    "stream_mv_hourly_rollup",
-    "stream_trending_topk",
-    "text_boilerplate_lines",
-    "text_ngram_topk",
-    "text_word_entropy",
-    "ts_anomaly_zscore",
-    "w8_running_distinct_types",
-    "w9_time_weighted_avg",
-]
-# r4 rows that exceed the 50-name window — FIRST in line for round 12.
-# ev_retention_cohorts and w7_ewma_value were evicted mid-round-11 to
-# make room for text_bpe_encode + eval_whiten_ann_recall in the queue;
-# both were in the round-10 judge's 10-row strict-sim spot-check
-# (VERDICT.md) and came back strict-green, so they are the
-# lowest-risk rows in the cohort to defer one round.
-ROUND12_STALE_STAGED = [
-    "a9_contribution_share",
-    "ev_retention_cohorts",
-    "w7_ewma_value",
-    "batch_by_length",
-    "dq_fk_orphans",
-    "dq_freshness_lag",
-    "ext_cume_nth",
-    "ext_date_parts",
-    "ext_exists_flag",
-    "ext_filtered_agg",
-    "ext_histogram_buckets",
-    "ext_mode_deterministic",
-    "feat_winsorize",
-    "sample_per_group_k",
-    "split_stratified_exact",
-]
-ROUND11_PREFIX = (
-    ROUND11_QUEUE
-    + [
-        "a1_pricing_summary",  # flagship/canary
-        "emb_pca_whiten",  # rep on this round's similarity.py churn
-    ]
-    + ROUND11_STALE_STAGED
-    + ROUND11_STALE_R4
-)
-_unknown_r11 = [n for n in ROUND11_PREFIX if n not in all_queries()]
-assert not _unknown_r11, f"ROUND11 names not registered: {_unknown_r11}"
-assert len(ROUND11_PREFIX) == 50, len(ROUND11_PREFIX)
-assert len(set(ROUND11_PREFIX)) == 50
-
-# Round-12 prefix: RISK-FIRST, per the round-11 verdict (item 2) — the
-# pre-staged low-risk r4 remainder is demoted and the window is re-cut
-# onto the queries whose code actually changed in rounds 11-12, so the
-# driver's oracle re-checks the changed code, not the safest rows:
-#   - the 22 round-11-touched rows the r11 window missed (u2/j17/
-#     search/bootstrap/corpus/er/CC-gate consumers/pagerank/stream
-#     pins/txnlog stats-gate reps, as listed in VERDICT.md item 2);
-#   - every round-12-touched row (bucket-pair dedup family, cascade
-#     concurrency, eval probe overlap, txnlog probe trims, rate-limit
-#     batch trims, bm25 entry dedupe, env-gate hoist);
-#   - the flagship canary;
-#   - 10 of the 15 staged r4 rows (ROUND12_STALE_STAGED) in the
-#     remaining slots. The 5 deferred (ext_histogram_buckets,
-#     ext_mode_deterministic, feat_winsorize, sample_per_group_k,
-#     split_stratified_exact) are pure-SQL single-aggregate surfaces
-#     untouched since r4 and the lowest-risk rows in the registry.
-ROUND12_PREFIX = [
-    # -- r11-touched, never driver-checked on the changed code (22) --
+# The driver's correctness harness checks the first 50 exported
+# queries. Re-cut this list at round close, risk first: every query
+# whose code changed since its last driver row, the a1 canary, then the
+# queries whose last row is oldest. The record of what was checked in
+# which round is the committed CORRECTNESS_r*.json files, not this
+# list. Keep it at 50 unique registered names (set_rotation rejects
+# unknown and duplicate names).
+DRIVER_WINDOW = [
+    # -- changed in r11, no driver row on the changed code --
     "u2_apply_trades",
     "j17_interval_overlap",
     "search_bm25_topk",
@@ -824,7 +62,7 @@ ROUND12_PREFIX = [
     "s38_txnlog_row_tracking",
     "s40_txnlog_dv_purge",
     "mv_txnlog_cdf_refresh",
-    # -- r12-touched (17; some overlap r11's set above) --
+    # -- changed in r12 --
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
     "dedup_ngram_containment",
@@ -842,9 +80,9 @@ ROUND12_PREFIX = [
     "sql_recursive_hierarchy",
     "graph_pagerank_fixed",
     "stream_txnlog_join",
-    # -- flagship/canary --
+    # -- canary --
     "a1_pricing_summary",
-    # -- staged r4 remainder (10 of 15) --
+    # -- oldest last rows (r4) --
     "a9_contribution_share",
     "ev_retention_cohorts",
     "w7_ewma_value",
@@ -853,28 +91,17 @@ ROUND12_PREFIX = [
     "dq_freshness_lag",
     "ext_cume_nth",
     "ext_date_parts",
-    "ext_exists_flag",
-    "ext_filtered_agg",
+    # -- changed in r12, last rows r9 / r11 --
+    "text_bpe_merge_train",
+    "text_bpe_encode",
 ]
-_unknown_r12 = [n for n in ROUND12_PREFIX if n not in all_queries()]
-assert not _unknown_r12, f"ROUND12 names not registered: {_unknown_r12}"
-assert len(ROUND12_PREFIX) == 50, len(ROUND12_PREFIX)
-assert len(set(ROUND12_PREFIX)) == 50
+set_rotation(DRIVER_WINDOW)
 
-# Rotation self-advance: judged round N ⇒ current round is N+1.
-_ROTATIONS = {
-    3: ROUND3_PREFIX,
-    4: ROUND4_PREFIX,
-    5: ROUND5_PREFIX,
-    6: ROUND6_PREFIX,
-    7: ROUND7_PREFIX,
-    8: ROUND8_PREFIX,
-    9: ROUND9_PREFIX,
-    10: ROUND10_PREFIX,
-    11: ROUND11_PREFIX,
-    12: ROUND12_PREFIX,
-}
-_current = _judged_round() + 1
-set_rotation(_ROTATIONS.get(min(_current, 12), ROUND12_PREFIX))
-
-__all__ = ["all_oracles", "all_queries", "get", "query", "set_rotation"]
+__all__ = [
+    "DRIVER_WINDOW",
+    "all_oracles",
+    "all_queries",
+    "get",
+    "query",
+    "set_rotation",
+]

@@ -698,17 +698,23 @@ def eval_kmeans_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The three terminal actions are independent: overlap them (§2.6).
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    # the wrapper carries the caller's job group into the pool threads
+    run = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_n = pool.submit(emb.count)
-        f_i1 = pool.submit(snaps[1].agg(F.sum("dist")).first)
+        f_n = pool.submit(run(emb.count))
+        f_i1 = pool.submit(run(snaps[1].agg(F.sum("dist")).first))
         f_i3 = pool.submit(
-            snaps[3]
-            .agg(
-                F.sum("dist"),
-                F.count(F.lit(1)),
-                F.countDistinct("cluster"),
+            run(
+                snaps[3]
+                .agg(
+                    F.sum("dist"),
+                    F.count(F.lit(1)),
+                    F.countDistinct("cluster"),
+                )
+                .first
             )
-            .first
         )
         n_emb = f_n.result()
         i1 = f_i1.result()[0]
@@ -1102,10 +1108,14 @@ def eval_whiten_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition once and blocks the other thread on the block lock.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    # the wrapper carries the caller's job group into the pool threads
+    probe = inheritable_thread_target(spark)(hits_by_query)
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_stale = pool.submit(hits_by_query, stale, 2)
-        f_re1 = pool.submit(hits_by_query, fresh, 1)
-        f_re2 = pool.submit(hits_by_query, fresh, 2)
+        f_stale = pool.submit(probe, stale, 2)
+        f_re1 = pool.submit(probe, fresh, 1)
+        f_re2 = pool.submit(probe, fresh, 2)
         h_stale, h_re1, h_re2 = (
             f_stale.result(),
             f_re1.result(),

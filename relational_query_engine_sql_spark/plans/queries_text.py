@@ -1335,8 +1335,12 @@ def eval_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
+    from pyspark.util import inheritable_thread_target
+
+    # the wrapper carries the caller's job group into the pool threads
+    run = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cand, f_truth = pool.submit(_cand), pool.submit(_truth)
+        f_cand, f_truth = pool.submit(run(_cand)), pool.submit(run(_truth))
         cand, true_pairs = f_cand.result(), f_truth.result()
     found = true_pairs.join(cand, ["d1", "d2"], "left_semi")
     counts3 = (
@@ -1574,12 +1578,16 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # independent — overlap them (§2.6)
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    # the wrapper carries the caller's job group into the pool threads
+    run = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_old = pool.submit(
-            lambda: shingles(docs).localCheckpoint(eager=True)
+            run(lambda: shingles(docs).localCheckpoint(eager=True))
         )
         f_new = pool.submit(
-            lambda: shingles(batch).localCheckpoint(eager=True)
+            run(lambda: shingles(batch).localCheckpoint(eager=True))
         )
         sh_old, sh_new = f_old.result(), f_new.result()
     sig_old = minhash_signature(sh_old).localCheckpoint(eager=True)

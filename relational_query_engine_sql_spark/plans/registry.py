@@ -36,18 +36,17 @@ class RegisteredQuery:
 _REGISTRY: dict[str, RegisteredQuery] = {}
 
 # Explicit export-order override: names listed here sort before every
-# other query, in list order. The driver's correctness harness checks a
-# bounded prefix of the exported ordering, so each round this list is
-# re-curated (see plans/__init__.py) to front-load queries that still
-# need a hard oracle row, plus one representative per SURVEY §2 family
-# as insurance against a rotation bug silently un-checking a core
-# operator. Names not present in the registry are reported loudly by
-# ``set_rotation`` rather than silently ignored.
+# other query, in list order. The driver's correctness harness checks
+# the first 50 exported queries; plans/__init__.py installs its
+# DRIVER_WINDOW here, re-cut at round close to front-load the queries
+# whose code changed since their last driver row. Names not present in
+# the registry are reported loudly by ``set_rotation`` rather than
+# silently ignored.
 _ROTATION: dict[str, int] = {}
 
 
 def set_rotation(names: list[str]) -> None:
-    """Install the curated driver-prefix ordering for this round."""
+    """Install the driver window: these names export first, in order."""
     unknown = [n for n in names if n not in _REGISTRY]
     if unknown:
         raise ValueError(f"rotation names not in registry: {unknown}")

@@ -1,7 +1,9 @@
 """Unit tests for bench.py's regression detector — the tooling whose
 round-2 silent failure let a 2.2x drift go unflagged. Pure-python (no
 Spark): pins prior-round selection (same-round artifacts excluded,
-driver wrapper unwrapped) and the ratio+floor gates.
+driver wrapper unwrapped) and the ratio+floor gates, plus the
+registry's export order (the driver window heads it, and it depends on
+nothing outside the package).
 """
 
 from __future__ import annotations
@@ -68,50 +70,65 @@ def test_prior_bench_none_when_no_prior(tmp_path, monkeypatch):
     assert prior is None and rnd is None
 
 
-def test_rotation_prefixes_cover_whole_registry():
-    """Every registered query must be either driver-checked (a row in
-    CORRECTNESS_r01/r02) or staged in some round's prefix — a query
-    that is neither would never earn a hard correctness row."""
-    import json
-    import os
+def test_export_head_is_the_driver_window():
+    """The driver checks the first 50 exported queries: they are
+    DRIVER_WINDOW, in order, 50 unique registered names."""
+    import relational_query_engine_sql_spark.plans as P
+
+    names = list(P.all_queries())
+    assert len(P.DRIVER_WINDOW) == len(set(P.DRIVER_WINDOW)) == 50
+    assert names[:50] == P.DRIVER_WINDOW
+
+
+def test_every_query_has_a_driver_row_or_is_in_the_window():
+    """A query with no row in any CORRECTNESS_r*.json and no slot in
+    DRIVER_WINDOW would never be checked by the driver."""
+    import glob
 
     import relational_query_engine_sql_spark.plans as P
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    checked: set[str] = set()
-    for name in ("CORRECTNESS_r01.json", "CORRECTNESS_r02.json"):
-        path = os.path.join(here, name)
-        if os.path.exists(path):
-            with open(path) as f:
-                checked |= set(json.load(f))
-    staged = (
-        set(P.ROUND3_PREFIX)
-        | set(P.ROUND4_PREFIX)
-        | set(P.ROUND5_PREFIX)
-        | set(P.ROUND6_PREFIX)
-        | set(P.ROUND7_PREFIX)
-        | set(P.ROUND8_PREFIX)
-        | set(P.ROUND9_PREFIX)
-        | set(P.ROUND10_PREFIX)
-        | set(P.ROUND11_PREFIX)
-    )
-    orphans = set(P.all_queries()) - checked - staged
+    paths = sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json")))
+    assert len(paths) >= 12, paths
+    checked: set[str] = set(P.DRIVER_WINDOW)
+    for path in paths:
+        with open(path) as f:
+            checked |= set(json.load(f))
+    orphans = set(P.all_queries()) - checked
     assert not orphans, f"queries with no path to a driver row: {orphans}"
 
 
-def test_rotation_self_advance_tracks_verdict_round():
-    """judged round N ⇒ the installed rotation is round N+1's prefix;
-    unknown/high rounds fall back to the newest staged prefix."""
+def test_export_order_does_not_depend_on_files_beside_the_package(tmp_path):
+    """Importing a copy of the package from a directory holding nothing
+    else gives the same export order as importing it in place."""
+    import shutil
+    import subprocess
+
+    import relational_query_engine_sql_spark as pkg
     import relational_query_engine_sql_spark.plans as P
 
-    assert P._ROTATIONS[P._judged_round() + 1 if P._judged_round() + 1
-                        in P._ROTATIONS else max(P._ROTATIONS)]
-    # prefix ordering actually installed: the exported head equals the
-    # active rotation's head
-    active = P._ROTATIONS.get(
-        min(P._judged_round() + 1, max(P._ROTATIONS))
+    src = os.path.dirname(os.path.abspath(pkg.__file__))
+    shutil.copytree(
+        src,
+        tmp_path / "relational_query_engine_sql_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
     )
-    assert list(P.all_queries())[: len(active)] == active
+    code = (
+        "import relational_query_engine_sql_spark.plans as P\n"
+        "print(P.__file__)\n"
+        "print('\\n'.join(P.all_queries()))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.splitlines()
+    assert out[0].startswith(str(tmp_path)), out[0]
+    assert out[1:] == list(P.all_queries())
 
 
 def test_prior_bench_recovers_queries_from_truncated_tail(

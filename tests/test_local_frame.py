@@ -180,13 +180,23 @@ def test_cached_schema_equals_inferred_for_driver_tables(spark, sf_small):
         assert cached.schema == fresh.schema, name
 
 
-def test_pool_jobs_keep_the_caller_job_group(spark, sf_small):
-    """s7 clones four tables from a thread pool and cascades through two
-    sibling subtrees from another; none of their jobs may lose the
-    caller's job group."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "s7_cascade_delete",
+        "eval_dedup_recall",
+        "dedup_incremental_ingest",
+        "eval_kmeans_invariants",
+        "eval_whiten_ann_recall",
+    ],
+)
+def test_pool_jobs_keep_the_caller_job_group(spark, sf_small, name):
+    """Each query runs independent actions from a thread pool (s7 clones
+    four tables and cascades through two sibling subtrees); none of
+    their jobs may lose the caller's job group."""
     untagged_before = set(_jobs(spark, None))
-    s7 = plans.get("s7_cascade_delete")
-    rows, tagged = _in_group(spark, lambda: s7.fn(spark, sf_small).collect())
+    q = plans.get(name)
+    rows, tagged = _in_group(spark, lambda: q.fn(spark, sf_small).collect())
     new_untagged = set(_jobs(spark, None)) - untagged_before
     assert rows and tagged
     assert new_untagged == set(), f"{len(new_untagged)} jobs lost the group"

@@ -624,48 +624,6 @@ class TestVideoSceneCuts:
         assert frames[0] != frames[1]
 
 
-class TestRotationSelfAdvance:
-    def test_judged_round_parses_verdict(self):
-        import os
-        import re
-
-        from relational_query_engine_sql_spark.plans import _judged_round
-
-        # the parser must agree with the VERDICT.md actually on disk
-        # (pinning a literal round number here breaks every time the
-        # driver writes the next verdict — round-3's lesson)
-        path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "VERDICT.md",
-        )
-        with open(path, encoding="utf-8") as f:
-            m = re.search(r"round\s+(\d+)", f.readline())
-        assert m, "VERDICT.md first line must name the judged round"
-        assert _judged_round() == int(m.group(1))
-        assert _judged_round() >= 2
-
-    def test_current_prefix_matches_judged_round(self):
-        from relational_query_engine_sql_spark import plans
-        from relational_query_engine_sql_spark.plans import (
-            _ROTATIONS,
-            _judged_round,
-        )
-
-        top = max(_ROTATIONS)
-        expect = _ROTATIONS[min(_judged_round() + 1, top)]
-        names = list(plans.all_queries())
-        assert names[: len(expect)] == expect
-
-    def test_all_prefixes_resolve_and_are_unique(self):
-        from relational_query_engine_sql_spark import plans
-        from relational_query_engine_sql_spark.plans import _ROTATIONS
-
-        registered = set(plans.all_queries())
-        for prefix in _ROTATIONS.values():
-            assert set(prefix) <= registered
-            assert len(set(prefix)) == len(prefix)
-
-
 class TestEvalAndBacktest:
     def test_confusion_matrix_measures_the_classifier(self, spark, sf_small):
         """The matrix must partition all docs and agree row-by-row
