@@ -22,11 +22,13 @@ import os
 import shutil
 import tempfile
 import uuid
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import run_independent
 from ..sources import local_frame
 
 
@@ -446,7 +448,11 @@ def cascade_delete_keys(
     cluster the overlap back-fills executors idled by each sibling's
     task tail. If any table path appears in two sibling subtrees the
     loop falls back to the original serial order (a shared table's
-    pre-delete read would otherwise race a sibling's rewrite)."""
+    pre-delete read would otherwise race a sibling's rewrite).
+
+    Not atomic. If a sibling subtree fails, the siblings that already
+    finished stay deleted, queued siblings do not start, this level is
+    not deleted, and the first error propagates."""
     own_scratch = _scratch_root is None
     scratch = _scratch_root or tempfile.mkdtemp(prefix="rqe-cascade-")
     try:
@@ -476,19 +482,10 @@ def cascade_delete_keys(
         sib_paths = [_subtree_paths([c]) for c in children]
         flat = [p for ps in sib_paths for p in ps]
         disjoint = len(flat) == len(set(flat))
-        if len(children) > 1 and disjoint:
-            from concurrent.futures import ThreadPoolExecutor
-
-            from pyspark.util import inheritable_thread_target
-
-            # the wrapper carries the caller's Spark local properties
-            # (job group included) and session tags into the pool threads
-            target = inheritable_thread_target(table.spark)(one_child)
-            with ThreadPoolExecutor(
-                max_workers=min(4, len(children))
-            ) as pool:
-                # list() propagates the first exception, like the loop
-                list(pool.map(target, children))
+        if disjoint:
+            run_independent(
+                table.spark, *[partial(one_child, c) for c in children]
+            )
         else:
             for spec in children:
                 one_child(spec)

@@ -22,11 +22,13 @@ the process (the returned frames read from them lazily).
 from __future__ import annotations
 
 import tempfile
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.mutation import ParquetTable, cascade_delete
+from ..session import run_independent
 from ..sources import load_table, local_frame
 from .registry import query
 
@@ -51,18 +53,10 @@ def _clones(
     free). Scenario walls at bench scale are job-launch latency, not
     data volume — overlapping the inits removes most of that fixed
     cost, and on a real cluster the same overlap fills the stragglers'
-    idle capacity. Pool threads do not inherit Spark local properties,
-    so the target carries the caller's (job group included) and the
-    session's tags."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    one = inheritable_thread_target(spark)(
-        lambda s: _clone(spark, sf_dir, *s)
+    idle capacity."""
+    return run_independent(
+        spark, *[partial(_clone, spark, sf_dir, *s) for s in specs]
     )
-    with ThreadPoolExecutor(max_workers=min(4, len(specs))) as pool:
-        return list(pool.map(one, specs))
 
 
 # --------------------------------------------------------------------------

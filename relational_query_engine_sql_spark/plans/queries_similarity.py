@@ -18,6 +18,7 @@ from ..datapipe.similarity import (
     embedding_near_dups_lsh,
     ivf_topk,
 )
+from ..session import run_independent
 from ..sources import load_table, local_frame
 from .registry import query
 
@@ -696,29 +697,14 @@ def eval_kmeans_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into round 2), and snaps[3] feeds exactly one aggregate — a
     # second checkpoint of either was a redundant full-copy job each.
     # The three terminal actions are independent: overlap them (§2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    # the wrapper carries the caller's job group into the pool threads
-    run = inheritable_thread_target(spark)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_n = pool.submit(run(emb.count))
-        f_i1 = pool.submit(run(snaps[1].agg(F.sum("dist")).first))
-        f_i3 = pool.submit(
-            run(
-                snaps[3]
-                .agg(
-                    F.sum("dist"),
-                    F.count(F.lit(1)),
-                    F.countDistinct("cluster"),
-                )
-                .first
-            )
-        )
-        n_emb = f_n.result()
-        i1 = f_i1.result()[0]
-        i3, n3, k3 = f_i3.result()
+    n_emb, (i1,), (i3, n3, k3) = run_independent(
+        spark,
+        emb.count,
+        snaps[1].agg(F.sum("dist")).first,
+        snaps[3]
+        .agg(F.sum("dist"), F.count(F.lit(1)), F.countDistinct("cluster"))
+        .first,
+    )
     return local_frame(
         spark,
         [
@@ -1106,21 +1092,12 @@ def eval_whiten_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leaves the executors idle. Concurrent first-touch of a lazily
     # persisted frame is safe — the block manager computes each cached
     # partition once and blocks the other thread on the block lock.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    # the wrapper carries the caller's job group into the pool threads
-    probe = inheritable_thread_target(spark)(hits_by_query)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_stale = pool.submit(probe, stale, 2)
-        f_re1 = pool.submit(probe, fresh, 1)
-        f_re2 = pool.submit(probe, fresh, 2)
-        h_stale, h_re1, h_re2 = (
-            f_stale.result(),
-            f_re1.result(),
-            f_re2.result(),
-        )
+    h_stale, h_re1, h_re2 = run_independent(
+        spark,
+        lambda: hits_by_query(stale, 2),
+        lambda: hits_by_query(fresh, 1),
+        lambda: hits_by_query(fresh, 2),
+    )
 
     no_worse = sum(h_re2.values()) >= sum(h_stale.values())
     assert no_worse, (

@@ -28,7 +28,7 @@ from contextlib import contextmanager
 
 
 @contextmanager
-def _stream_shuffle(spark: SparkSession, n: int | None = None):
+def _stream_shuffle(spark: SparkSession):
     """Pin shuffle partitions around a LIVE stream execution.
 
     State-store partitioning is fixed by the FIRST run against a
@@ -43,8 +43,7 @@ def _stream_shuffle(spark: SparkSession, n: int | None = None):
     way ($SPARK_GRAFT_STREAM_SHUFFLE, default 8)."""
     import os
 
-    if n is None:
-        n = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+    n = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

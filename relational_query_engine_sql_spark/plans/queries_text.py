@@ -26,6 +26,7 @@ from ..datapipe.textstats import (
     language_id,
     quality_metrics,
 )
+from ..session import run_independent
 from ..sources import load_table, spread
 from .registry import query
 
@@ -1318,8 +1319,6 @@ def eval_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializations read only the checkpointed sh/sig frames and
     # are independent of each other, so overlap them (§2.6): each is a
     # task-tail-bound job that otherwise leaves the executors idle.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _cand():
         return lsh_candidates(sig).localCheckpoint(eager=True)
 
@@ -1335,13 +1334,7 @@ def eval_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    from pyspark.util import inheritable_thread_target
-
-    # the wrapper carries the caller's job group into the pool threads
-    run = inheritable_thread_target(spark)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cand, f_truth = pool.submit(run(_cand)), pool.submit(run(_truth))
-        cand, true_pairs = f_cand.result(), f_truth.result()
+    cand, true_pairs = run_independent(spark, _cand, _truth)
     found = true_pairs.join(cand, ["d1", "d2"], "left_semi")
     counts3 = (
         true_pairs.agg(F.count(F.lit(1)).alias("n_true"))
@@ -1576,20 +1569,11 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # own double evaluation.
     # corpus-side and batch-side shingle materializations are
     # independent — overlap them (§2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.util import inheritable_thread_target
-
-    # the wrapper carries the caller's job group into the pool threads
-    run = inheritable_thread_target(spark)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_old = pool.submit(
-            run(lambda: shingles(docs).localCheckpoint(eager=True))
-        )
-        f_new = pool.submit(
-            run(lambda: shingles(batch).localCheckpoint(eager=True))
-        )
-        sh_old, sh_new = f_old.result(), f_new.result()
+    sh_old, sh_new = run_independent(
+        spark,
+        lambda: shingles(docs).localCheckpoint(eager=True),
+        lambda: shingles(batch).localCheckpoint(eager=True),
+    )
     sig_old = minhash_signature(sh_old).localCheckpoint(eager=True)
     sig_new = minhash_signature(sh_new)
     cand = lsh_candidates_between(sig_new, sig_old).localCheckpoint(

@@ -12,8 +12,16 @@ coalescing with a high initial value).
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+# Most actions one ``run_independent`` call keeps in flight.
+_MAX_OVERLAP = 4
 
 
 def get_spark(
@@ -76,3 +84,41 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_independent(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """Run independent Spark actions concurrently and return their
+    results in argument order.
+
+    Actions are only sequential because driver code calls them
+    sequentially; overlapping independent ones lets each job's task
+    tail back-fill the executors the others leave idle. The thunks run
+    on ``min(4, len(thunks))`` threads, each with the caller's Spark
+    local properties (job group included) and session tags.
+
+    If a thunk raises, thunks already running finish, thunks not yet
+    started never start, and the first exception is re-raised: no job
+    outlives the call.
+    """
+    if not thunks:
+        return []
+    failed = threading.Event()
+    errors: list[BaseException] = []
+
+    def guarded(thunk: Callable[[], Any]) -> Any:
+        if failed.is_set():
+            return None
+        try:
+            return thunk()
+        except BaseException as e:
+            errors.append(e)
+            failed.set()
+            return None
+
+    run = inheritable_thread_target(spark)(guarded)
+    workers = min(_MAX_OVERLAP, len(thunks))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(run, t) for t in thunks]
+    if errors:
+        raise errors[0]
+    return [f.result() for f in futures]

@@ -9,6 +9,7 @@ from __future__ import annotations
 import math
 
 import pyspark.sql.functions as F
+import pytest
 
 from relational_query_engine_sql_spark import plans
 from relational_query_engine_sql_spark.sources import load_table
@@ -62,24 +63,26 @@ def test_hierarchy_driver_path_matches_distributed(spark, sf_small, monkeypatch)
     ]
 
 
-def test_pagerank_fixed_driver_path_matches_distributed(
-    spark, sf_small, monkeypatch
+@pytest.mark.parametrize("name", ["graph_pagerank_fixed", "graph_pagerank"])
+def test_pagerank_driver_path_matches_distributed(
+    spark, sf_small, monkeypatch, name
 ):
-    """The gated driver-side float loop must reproduce the distributed
-    keyed-join loop's ROUNDED ranks (the query's observable — both
-    paths sum in an arbitrary-but-fixed order under 6 dp rounding,
-    exactly the property the cross-engine oracle already relies on)."""
-    fn = plans.get("graph_pagerank_fixed").fn
+    """The gated driver-side loop must reproduce the distributed
+    keyed-join loop's ranks (the query's observable — both paths sum
+    in an arbitrary-but-fixed order under fixed-point or 6 dp
+    rounding, exactly the property the cross-engine oracle already
+    relies on)."""
+    fn = plans.get(name).fn
 
     monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_MAX_EDGES", "0")
     dist = fn(spark, sf_small)
-    dist_rows = sorted((r["node"], r["rank"]) for r in dist.collect())
+    dist_rows = sorted(tuple(r) for r in dist.collect())
 
     monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_MAX_EDGES", "100000")
     drv = fn(spark, sf_small)
-    drv_rows = sorted((r["node"], r["rank"]) for r in drv.collect())
+    drv_rows = sorted(tuple(r) for r in drv.collect())
 
-    assert drv_rows == dist_rows
+    assert drv_rows and drv_rows == dist_rows
     assert [(f.name, f.dataType) for f in drv.schema] == [
         (f.name, f.dataType) for f in dist.schema
     ]

@@ -6,10 +6,12 @@
   ``LocalRelation`` with no ``ExistingRDD`` scan.
 - A repeated ``load_table`` of an unchanged file runs no Spark job; a
   rewritten or re-stamped file is inferred again.
-- Jobs started from the engine's thread pools keep the caller's job
-  group.
+- ``session.run_independent`` returns its results in argument order,
+  and after a failure starts no further thunk; jobs it starts keep the
+  caller's job group.
 - No module in the package calls ``createDataFrame`` directly except
-  ``local_frame`` itself and the fixtures' pandas input.
+  ``local_frame`` itself and the fixtures' pandas input, and only
+  ``run_independent`` builds a thread pool.
 """
 
 from __future__ import annotations
@@ -18,8 +20,10 @@ import ast
 import datetime as dt
 import os
 import shutil
+import time
 import uuid
 from decimal import Decimal
+from functools import partial
 from pathlib import Path
 
 import pyarrow as pa
@@ -29,6 +33,7 @@ from pyspark.sql import types as T
 
 from relational_query_engine_sql_spark import plans
 from relational_query_engine_sql_spark.schemas import DRIVER_TABLES
+from relational_query_engine_sql_spark.session import run_independent
 from relational_query_engine_sql_spark.sources import (
     catalog,
     load_table,
@@ -191,9 +196,9 @@ def test_cached_schema_equals_inferred_for_driver_tables(spark, sf_small):
     ],
 )
 def test_pool_jobs_keep_the_caller_job_group(spark, sf_small, name):
-    """Each query runs independent actions from a thread pool (s7 clones
-    four tables and cascades through two sibling subtrees); none of
-    their jobs may lose the caller's job group."""
+    """Each query overlaps independent actions with run_independent (s7
+    clones four tables and cascades through two sibling subtrees); none
+    of their jobs may lose the caller's job group."""
     untagged_before = set(_jobs(spark, None))
     q = plans.get(name)
     rows, tagged = _in_group(spark, lambda: q.fn(spark, sf_small).collect())
@@ -202,14 +207,58 @@ def test_pool_jobs_keep_the_caller_job_group(spark, sf_small, name):
     assert new_untagged == set(), f"{len(new_untagged)} jobs lost the group"
 
 
-# Direct createDataFrame calls allowed in the package, by (file, function).
+def test_run_independent_returns_results_in_argument_order(spark):
+    def after(delay, value):
+        time.sleep(delay)
+        return value
+
+    # the later the argument, the sooner it finishes
+    thunks = [partial(after, 0.05 * (3 - i), i) for i in range(4)]
+    assert run_independent(spark, *thunks) == [0, 1, 2, 3]
+    assert run_independent(spark) == []
+
+
+def test_run_independent_starts_nothing_after_a_failure(spark):
+    started, finished = set(), set()
+
+    def thunk(i):
+        started.add(i)
+        if i == 0:
+            raise ValueError("thunk 0")
+        if i <= 3:
+            time.sleep(0.3)
+        finished.add(i)
+
+    with pytest.raises(ValueError, match="thunk 0"):
+        run_independent(spark, *[partial(thunk, i) for i in range(6)])
+    # thunks 4 and 5 wait for a worker and see the failure first
+    assert started.isdisjoint({4, 5})
+    # every thunk that started has finished by the time the call raises
+    assert started - {0} == finished
+
+
+# Calls allowed in the package only at these (file, function) sites.
 _ALLOWED = {
-    ("sources/catalog.py", "local_frame"),  # the Arrow table it builds
-    ("fixtures.py", "conform"),  # pandas input, already through Arrow
+    "createDataFrame": {
+        ("sources/catalog.py", "local_frame"),  # the Arrow table it builds
+        ("fixtures.py", "conform"),  # pandas input, already through Arrow
+    },
+    # overlap independent actions with session.run_independent
+    "ThreadPoolExecutor": {("session.py", "run_independent")},
+    "inheritable_thread_target": {("session.py", "run_independent")},
 }
 
 
-def test_no_create_dataframe_outside_local_frame():
+def _call_name(call: ast.Call) -> str | None:
+    if isinstance(call.func, ast.Attribute):
+        return call.func.attr
+    if isinstance(call.func, ast.Name):
+        return call.func.id
+    return None
+
+
+@pytest.mark.parametrize("call", sorted(_ALLOWED))
+def test_call_only_at_allowed_sites(call):
     found = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
@@ -221,12 +270,12 @@ def test_no_create_dataframe_outside_local_frame():
                     name = child.name
                 if (
                     isinstance(child, ast.Call)
-                    and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == "createDataFrame"
-                    and (rel, fn_name) not in _ALLOWED
+                    and _call_name(child) == call
+                    and (rel, fn_name) not in _ALLOWED[call]
                 ):
                     found.append(f"{rel}:{child.lineno} in {fn_name}")
                 walk(child, name)
 
         walk(ast.parse(path.read_text(), str(path)), None)
-    assert found == [], "use sources.local_frame instead: " + ", ".join(found)
+    sites = sorted(_ALLOWED[call])
+    assert found == [], f"{call} outside {sites}: {', '.join(found)}"
