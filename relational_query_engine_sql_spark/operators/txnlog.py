@@ -629,6 +629,11 @@ class TxnLogTable(ParquetTable):
     def _ckpt_path(self, n: int) -> str:
         return os.path.join(self._log_dir(), f"{n:020d}.checkpoint.json")
 
+    def _entry(self, v: int) -> dict:
+        """The commit-log entry of version ``v``."""
+        with open(self._log_path(v), encoding="utf-8") as f:
+            return json.load(f)
+
     def versions(self) -> list[int]:
         d = self._log_dir()
         if not os.path.isdir(d):
@@ -668,8 +673,7 @@ class TxnLogTable(ParquetTable):
                 start = v + 1
                 break
         for v in range(start, version + 1):
-            with open(self._log_path(v), encoding="utf-8") as f:
-                entry = json.load(f)
+            entry = self._entry(v)
             for a in entry["actions"]:
                 if "add" in a:
                     live[a["add"]["path"]] = {
@@ -733,8 +737,7 @@ class TxnLogTable(ParquetTable):
                 break
             if not os.path.exists(self._log_path(v)):
                 continue
-            with open(self._log_path(v), encoding="utf-8") as f:
-                entry = json.load(f)
+            entry = self._entry(v)
             for a in entry["actions"]:
                 if "metadata" in a:
                     out = T.StructType.fromJson(a["metadata"]["schema"])
@@ -790,8 +793,7 @@ class TxnLogTable(ParquetTable):
                 break
             if not os.path.exists(self._log_path(v)):
                 continue
-            with open(self._log_path(v), encoding="utf-8") as f:
-                entry = json.load(f)
+            entry = self._entry(v)
             for a in entry["actions"]:
                 if "metadata" in a and "cmap" in a["metadata"]:
                     out = a["metadata"]["cmap"]
@@ -1170,8 +1172,7 @@ class TxnLogTable(ParquetTable):
         for v in range(start, version + 1):
             if not os.path.exists(self._log_path(v)):
                 continue
-            with open(self._log_path(v), encoding="utf-8") as f:
-                entry = json.load(f)
+            entry = self._entry(v)
             for a in entry["actions"]:
                 c = a.get("constraint")
                 if not c:
@@ -1221,8 +1222,7 @@ class TxnLogTable(ParquetTable):
         """One {version, op, ts, n_add, n_remove} row per commit."""
         out = []
         for v in self.versions():
-            with open(self._log_path(v), encoding="utf-8") as f:
-                e = json.load(f)
+            e = self._entry(v)
             acts = e["actions"]
             out.append(
                 {
@@ -1250,8 +1250,7 @@ class TxnLogTable(ParquetTable):
         out: dict[int, float] = {}
         prev: float | None = None
         for v in self.versions():
-            with open(self._log_path(v), encoding="utf-8") as f:
-                ts = float(json.load(f).get("ts") or 0.0)
+            ts = float(self._entry(v).get("ts") or 0.0)
             if prev is not None and ts <= prev:
                 ts = prev + 0.001
             out[v] = ts
@@ -2376,8 +2375,7 @@ class TxnLogTable(ParquetTable):
         for v in range(start, end + 1):
             if not os.path.exists(self._log_path(v)):
                 return False
-            with open(self._log_path(v), encoding="utf-8") as f:
-                entry = json.load(f)
+            entry = self._entry(v)
             if entry.get("op") == "restore":
                 return False
             for a in entry["actions"]:
@@ -2509,8 +2507,7 @@ class TxnLogTable(ParquetTable):
         for v in range(start, end + 1):
             if not os.path.exists(self._log_path(v)):
                 return False
-            with open(self._log_path(v), encoding="utf-8") as f:
-                entry = json.load(f)
+            entry = self._entry(v)
             if entry.get("op") == "restore":
                 return False
             for a in entry["actions"]:
@@ -2708,8 +2705,7 @@ class TxnLogTable(ParquetTable):
         for v in range(start, version + 1):
             if not os.path.exists(self._log_path(v)):
                 continue
-            with open(self._log_path(v), encoding="utf-8") as f:
-                entry = json.load(f)
+            entry = self._entry(v)
             for a in entry["actions"]:
                 t = a.get("txn")
                 if t:
@@ -3361,11 +3357,9 @@ class TxnLogTable(ParquetTable):
                 start = v + 1
                 break
         for v in range(start, version + 1):
-            p = self._log_path(v)
-            if not os.path.exists(p):
+            if not os.path.exists(self._log_path(v)):
                 continue
-            with open(p, encoding="utf-8") as f:
-                entry = json.load(f)
+            entry = self._entry(v)
             for a in entry["actions"]:
                 add = a.get("add")
                 if (
@@ -3809,8 +3803,7 @@ class TxnLogTable(ParquetTable):
         referenced: set[str] = set()
         sidecars: set[str] = set()
         for v in self.versions():
-            with open(self._log_path(v), encoding="utf-8") as f:
-                entry = json.load(f)
+            entry = self._entry(v)
             for a in entry["actions"]:
                 add = a.get("add")
                 if not add:

@@ -80,17 +80,19 @@ DRIVER_WINDOW = [
     "sql_recursive_hierarchy",
     "graph_pagerank_fixed",
     "stream_txnlog_join",
+    # -- format("txnlog") consumers, changed since their last rows
+    # (r7, r10) --
+    "stream_txnlog_source",
+    "s29_txnlog_partition_stream",
+    "stream_txnlog_windowed",
+    "stream_txnlog_sink",
+    "stream_txnlog_rowid_sink",
+    "src_txnlog_batch_reader",
     # -- canary --
     "a1_pricing_summary",
-    # -- oldest last rows (r4) --
+    # -- last green r12, dq_fk_orphans changed since --
     "a9_contribution_share",
-    "ev_retention_cohorts",
-    "w7_ewma_value",
-    "batch_by_length",
     "dq_fk_orphans",
-    "dq_freshness_lag",
-    "ext_cume_nth",
-    "ext_date_parts",
     # -- changed in r12, last rows r9 / r11 --
     "text_bpe_merge_train",
     "text_bpe_encode",

@@ -10,6 +10,12 @@ append-only feed with zero extra bookkeeping (Delta's streaming-source
 design; reference ingest loop src/routes/stocks.js:137-142 is the
 batch shape this streams).
 
+The format keeps no log code of its own: the source, the batch reader
+and the sink read the commit log only through ``TxnLogTable``
+(operators/txnlog.py), built without a SparkSession. They get the same
+checkpoint-first replay, commit-timestamp clamp and protocol gate as
+the library's read and write paths.
+
 Scale shape: ``partitions()`` is driver-side METADATA (replaying KB
 of JSON per commit — never data); each added file becomes one input
 partition, and ``read()`` executes on executors, yielding Arrow
@@ -34,7 +40,6 @@ itself is the replayable feed.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator, Sequence
 
@@ -47,27 +52,12 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-_ARROW_TO_DDL = {
-    "bool": "boolean",
-    "int8": "tinyint",
-    "int16": "smallint",
-    "int32": "int",
-    "int64": "bigint",
-    "float": "float",
-    "double": "double",
-    "string": "string",
-    "large_string": "string",
-    "binary": "binary",
-    "large_binary": "binary",
-    "date32[day]": "date",
-}
-
 
 def _arrow_field_spark_type(field):
-    """Arrow field -> pyspark DataType, PURE PYTHON — the sink's
-    driver-side commit runs in a Spark-free worker process where
-    ``_parse_datatype_string`` (which needs an active SparkContext)
-    is unavailable."""
+    """Arrow field -> pyspark DataType, built from the type classes:
+    ``_parse_datatype_string`` needs an active SparkContext, and the
+    Python worker processes that plan format reads and commit sink
+    batches have none."""
     import pyspark.sql.types as T
 
     t = str(field.type)
@@ -94,238 +84,141 @@ def _arrow_field_spark_type(field):
     if t.startswith("list<") or t.startswith("large_list<"):
         return T.ArrayType(_arrow_field_spark_type(field.type.value_field))
     raise ValueError(
-        f"txnlog stream cannot map arrow type {t!r} "
-        f"(column {field.name!r})"
+        f"txnlog cannot map arrow type {t!r} (column {field.name!r}); "
+        "pass an explicit .schema(...)"
     )
 
 
-def _arrow_field_ddl(field) -> str:
-    t = str(field.type)
-    if t in _ARROW_TO_DDL:
-        return _ARROW_TO_DDL[t]
-    if t.startswith("timestamp["):
-        return "timestamp"
-    if t.startswith("decimal128(") or t.startswith("decimal("):
-        return t.replace("decimal128", "decimal")
-    if t.startswith("list<") or t.startswith("large_list<"):
-        inner = field.type.value_field
-        return f"array<{_arrow_field_ddl(inner)}>"
-    raise ValueError(
-        f"txnlog stream source cannot map arrow type {t!r} "
-        f"(column {field.name!r}); pass an explicit .schema(...)"
-    )
+def _log(path: str):
+    """The table at ``path`` as a commit-log reader: a ``TxnLogTable``
+    with no session and an empty base schema, so an empty
+    ``_schema_at`` means no schema was ever logged. The constructor
+    does no I/O, and only its metadata-plane methods are called. The
+    import is deferred so executor processes that only read files
+    never load the operators package."""
+    import pyspark.sql.types as T
+
+    from ..operators.txnlog import TxnLogTable
+
+    return TxnLogTable(None, path, T.StructType([]), [])
 
 
-class _LogView:
-    """Driver-side, Spark-free view of a txnlog table's commit log —
-    just enough replay to turn version ranges into added-file lists.
-    (The full TxnLogTable class needs a SparkSession; the stream
-    reader must not.)"""
+def _abs(root: str, p: str) -> str:
+    return p if os.path.isabs(p) else os.path.join(root, p)
 
-    def __init__(self, path: str) -> None:
-        self.path = path
-        self.log_dir = os.path.join(path, "_txn_log")
 
-    def versions(self) -> list[int]:
-        if not os.path.isdir(self.log_dir):
-            return []
-        return sorted(
-            int(f.split(".")[0])
-            for f in os.listdir(self.log_dir)
-            if f.endswith(".json") and not f.endswith(".checkpoint.json")
+def _as_of_version(t, options: dict) -> int | None:
+    """The version a ``versionAsOf``/``timestampAsOf`` read pins, or
+    None for the newest. ``timestampAsOf`` takes epoch seconds or an
+    ISO timestamp and resolves like ``TxnLogTable.read_asof``."""
+    import datetime as _dt
+
+    version = options.get("versionasof")
+    ts_opt = options.get("timestampasof")
+    if ts_opt is None:
+        return int(version) if version is not None else None
+    if version is not None:
+        raise ValueError(
+            "txnlog batch read: pass versionAsOf OR timestampAsOf, not both"
         )
+    try:
+        ts = float(ts_opt)
+    except ValueError:
+        ts = _dt.datetime.fromisoformat(ts_opt).timestamp()
+    return t.version_at(ts)
 
-    def entry(self, v: int) -> dict:
-        p = os.path.join(self.log_dir, f"{v:020d}.json")
-        with open(p, encoding="utf-8") as f:
-            return json.load(f)
 
-    def added_data_files(
-        self, after: int, upto: int, ignore_changes: bool
-    ) -> list[str]:
-        """Absolute paths of data files added in (after, upto]."""
-        out: list[str] = []
-        for v in range(after + 1, upto + 1):
-            entry = self.entry(v)
-            for a in entry["actions"]:
-                if (
-                    "remove" in a
-                    and not ignore_changes
-                    and not a["remove"]["path"].startswith("_")
-                ):
-                    raise RuntimeError(
-                        f"txnlog stream: version {v} "
-                        f"({entry.get('op', '?')}) removed data file "
-                        f"{a['remove']['path']!r}; the stream is an "
-                        "append-only contract — set "
-                        "option('ignoreChanges', 'true') to consume "
-                        "adds-only (rewritten rows re-emit)"
-                    )
-                add = a.get("add")
-                if add and add.get("dv") and not ignore_changes:
-                    # a deletion-vector ADD is a deferred delete
-                    # (delete_keys_deferred commits are add-only: the
-                    # DV grows, no data file is removed) — rows vanish
-                    # from the table without any remove action, so the
-                    # append-only contract must raise here too, exactly
-                    # as Delta's readStream fails on DV-based deletes.
-                    # (A DV SHRINK — revive — also rewrites/purges a
-                    # data file in the same commit, so it already
-                    # raises via the remove check above.)
-                    raise RuntimeError(
-                        f"txnlog stream: version {v} "
-                        f"({entry.get('op', '?')}) added deletion "
-                        f"vector {add['path']!r} (a deferred delete); "
-                        "the stream is an append-only contract — set "
-                        "option('ignoreChanges', 'true') to consume "
-                        "adds-only (deferred-deleted rows are NOT "
-                        "retracted)"
-                    )
-                if add and not add.get("dv") and add.get("rows"):
-                    p = add["path"]
-                    out.append(
-                        p if os.path.isabs(p) else os.path.join(self.path, p)
-                    )
-        return out
+def _table_schema(t, version: int | None = None):
+    """The table's schema at ``version``: the logged one (already in
+    LOGICAL names, the only correct source once columns were renamed
+    or dropped), else the schema of a live data file, else None for a
+    table with neither."""
+    import pyspark.sql.types as T
 
-    def cmap_state(self, upto: int | None = None) -> dict:
-        """Column-mapping/protocol state at version ``upto`` (default:
-        newest) — TxnLogTable._cmap_at precedence: checkpoint, else
-        newest metadata action carrying the field, else default.
-        Spark-free."""
-        vs = self.versions()
-        if upto is not None:
-            vs = [v for v in vs if v <= upto]
-        for v in reversed(vs):
-            ck_path = os.path.join(
-                self.log_dir, f"{v:020d}.checkpoint.json"
-            )
-            if os.path.exists(ck_path):
-                with open(ck_path, encoding="utf-8") as f:
-                    ck = json.load(f)
-                return ck.get(
-                    "cmap",
-                    {"map": {}, "retired": [], "protocol": {}},
+    logged = t._schema_at(version)
+    if logged.fields:
+        return logged
+    sample = next(
+        (p for p, m in t._live(version).items() if not m.get("dv")), None
+    )
+    if sample is None:
+        return None
+    import pyarrow.parquet as pq
+
+    return T.StructType(
+        [
+            T.StructField(f.name, _arrow_field_spark_type(f))
+            for f in pq.read_schema(_abs(t.path, sample))
+        ]
+    )
+
+
+def _added_data_files(
+    t, after: int, upto: int, ignore_changes: bool
+) -> list[str]:
+    """Absolute paths of data files added in (after, upto]."""
+    out: list[str] = []
+    for v in range(after + 1, upto + 1):
+        entry = t._entry(v)
+        for a in entry["actions"]:
+            if (
+                "remove" in a
+                and not ignore_changes
+                and not a["remove"]["path"].startswith("_")
+            ):
+                raise RuntimeError(
+                    f"txnlog stream: version {v} "
+                    f"({entry.get('op', '?')}) removed data file "
+                    f"{a['remove']['path']!r}; the stream is an "
+                    "append-only contract — set "
+                    "option('ignoreChanges', 'true') to consume "
+                    "adds-only (rewritten rows re-emit)"
                 )
-            for a in self.entry(v)["actions"]:
-                if "metadata" in a and "cmap" in a["metadata"]:
-                    return a["metadata"]["cmap"]
-        return {"map": {}, "retired": [], "protocol": {}}
+            add = a.get("add")
+            if add and add.get("dv") and not ignore_changes:
+                # a deletion-vector ADD is a deferred delete
+                # (delete_keys_deferred commits are add-only: the
+                # DV grows, no data file is removed) — rows vanish
+                # from the table without any remove action, so the
+                # append-only contract must raise here too, exactly
+                # as Delta's readStream fails on DV-based deletes.
+                # (A DV SHRINK — revive — also rewrites/purges a
+                # data file in the same commit, so it already
+                # raises via the remove check above.)
+                raise RuntimeError(
+                    f"txnlog stream: version {v} "
+                    f"({entry.get('op', '?')}) added deletion "
+                    f"vector {add['path']!r} (a deferred delete); "
+                    "the stream is an append-only contract — set "
+                    "option('ignoreChanges', 'true') to consume "
+                    "adds-only (deferred-deleted rows are NOT "
+                    "retracted)"
+                )
+            if add and not add.get("dv") and add.get("rows"):
+                out.append(_abs(t.path, add["path"]))
+    return out
 
-    def logical_schema_json(self, upto: int | None = None) -> dict | None:
-        """Logged schema at version ``upto`` (already LOGICAL names),
-        or None for a table that never committed a metadata action or
-        checkpoint."""
-        vs = self.versions()
-        if upto is not None:
-            vs = [v for v in vs if v <= upto]
-        for v in reversed(vs):
-            ck_path = os.path.join(
-                self.log_dir, f"{v:020d}.checkpoint.json"
-            )
-            if os.path.exists(ck_path):
-                with open(ck_path, encoding="utf-8") as f:
-                    ck = json.load(f)
-                if "schema" in ck:
-                    return ck["schema"]
-            for a in self.entry(v)["actions"]:
-                if "metadata" in a:
-                    return a["metadata"]["schema"]
-        return None
 
-    def row_id_bases(self, upto: int | None = None) -> dict[str, int]:
-        """relpath -> base row id at version ``upto`` — the same lazy
-        assignment as TxnLogTable._row_id_bases (commit-order walk;
-        ``rowid_materialized`` adds and re-referenced paths skipped),
-        Spark-free so the format reader can ship it to executors as a
-        pickled dict."""
-        bases: dict[str, int] = {}
-        hwm = 0
-        vs = self.versions()
-        if upto is not None:
-            vs = [v for v in vs if v <= upto]
-        # seed from the newest checkpoint carrying folded rowid state
-        # (TxnLogTable._row_id_bases parity)
-        start_idx = 0
-        for i in range(len(vs) - 1, -1, -1):
-            ck_path = os.path.join(
-                self.log_dir, f"{vs[i]:020d}.checkpoint.json"
-            )
-            if os.path.exists(ck_path):
-                with open(ck_path, encoding="utf-8") as f:
-                    ck = json.load(f)
-                if "rowid" in ck:
-                    bases = dict(ck["rowid"]["bases"])
-                    hwm = ck["rowid"]["hwm"]
-                    start_idx = i + 1
-                    break
-        for v in vs[start_idx:]:
-            for a in self.entry(v)["actions"]:
-                add = a.get("add")
-                if (
-                    not add
-                    or add.get("dv")
-                    or add.get("rowid_materialized")
-                    or add["path"] in bases
-                ):
-                    continue
-                bases[add["path"]] = hwm
-                hwm += add.get("rows") or 0
-        return bases
+def _read_file(path: str):
+    """One data file as an Arrow table. Spark's default parquet
+    timestamp encoding (INT96) reads back through pyarrow as
+    timestamp[ns], which the engine's Arrow bridge rejects
+    (UNSUPPORTED_ARROWTYPE). Spark timestamps are microsecond
+    precision, so the ns->us cast is exact for any Spark-written file
+    (and matches Spark's own read semantics for genuinely-ns data)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    def live_at(self, version: int | None = None):
-        """(data_relpaths, dv_relpaths) live at ``version`` — full log
-        replay (entries are never deleted, so skipping checkpoints is
-        always complete). Spark-free."""
-        vs = self.versions()
-        if version is not None:
-            if version not in vs:
-                raise ValueError(f"no such version: {version}")
-            vs = [v for v in vs if v <= version]
-        live: dict[str, bool] = {}
-        for v in vs:
-            for a in self.entry(v)["actions"]:
-                if "add" in a:
-                    live[a["add"]["path"]] = bool(a["add"].get("dv"))
-                elif "remove" in a:
-                    live.pop(a["remove"]["path"], None)
-        data = [p for p, is_dv in live.items() if not is_dv]
-        dvs = [p for p, is_dv in live.items() if is_dv]
-        return data, dvs
-
-    def version_at(self, timestamp: float) -> int:
-        """Newest version whose MONOTONICALLY ADJUSTED commit ts is
-        <= ``timestamp`` (TxnLogTable.version_at semantics: each
-        effective ts is clamped to predecessor + 1 ms, so skewed
-        writer clocks cannot expose a later commit)."""
-        vs = self.versions()
-        eff: dict[int, float] = {}
-        prev = None
-        for v in vs:
-            ts = float(self.entry(v).get("ts") or 0.0)
-            if prev is not None and ts <= prev:
-                ts = prev + 0.001
-            eff[v] = ts
-            prev = ts
-        cands = [v for v in vs if eff[v] <= timestamp]
-        if not cands:
-            raise ValueError(
-                f"no version at or before timestamp {timestamp}"
-            )
-        return max(cands)
-
-    def any_data_file(self) -> str | None:
-        live: dict[str, bool] = {}
-        for v in self.versions():
-            for a in self.entry(v)["actions"]:
-                if "add" in a:
-                    live[a["add"]["path"]] = not a["add"].get("dv")
-                elif "remove" in a:
-                    live.pop(a["remove"]["path"], None)
-        for p, is_data in live.items():
-            if is_data:
-                return p if os.path.isabs(p) else os.path.join(self.path, p)
-        return None
+    table = pq.read_table(path)
+    fields = []
+    changed = False
+    for f in table.schema:
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            fields.append(pa.field(f.name, pa.timestamp("us", f.type.tz)))
+            changed = True
+        else:
+            fields.append(f)
+    return table.cast(pa.schema(fields)) if changed else table
 
 
 class _FilePartition(InputPartition):
@@ -344,9 +237,10 @@ def _declared_arrow_types(schema) -> dict:
 
 def _project_file_table(table, want, logical_to_phys, arrow_types):
     """Project ONE data file's raw Arrow table (immutable PHYSICAL
-    column names on disk) to the logical column list ``want`` — the
-    format readers' twin of ``TxnLogTable._scan_files``
-    (operators/txnlog.py): resolve each logical name to its PHYSICAL
+    column names on disk) to the logical column list ``want`` — what
+    ``TxnLogTable._scan_files`` (operators/txnlog.py) does through a
+    Spark read schema, done here on Arrow inside the executor: resolve
+    each logical name to its PHYSICAL
     name and select by that, so a RETIRED physical column whose name
     happens to equal a re-added logical column can never resurrect the
     dropped era's bytes; null-fill fields absent from files written
@@ -380,7 +274,7 @@ class TxnLogStreamReader(DataSourceStreamReader):
         self._want = (
             [f.name for f in schema.fields] if schema is not None else None
         )
-        self.view = _LogView(options["path"])
+        self.path = options["path"]
         self.ignore_changes = (
             str(options.get("ignorechanges", "false")).lower() == "true"
         )
@@ -405,17 +299,10 @@ class TxnLogStreamReader(DataSourceStreamReader):
         # logical rename is resolved ONCE at stream start and applied
         # per batch (pinned like the stream's schema itself) — correct
         # across any number of renames mid-stream, because a rename
-        # never changes physical names and never adds files. Protocol
-        # gate mirrors TxnLogTable._check_protocol (reader v2 = column
-        # mapping).
-        state = self.view.cmap_state()
-        need = (state.get("protocol") or {}).get("min_reader", 1)
-        if need > 2:
-            raise RuntimeError(
-                f"txnlog stream: table requires reader protocol "
-                f"{need}; this source supports 2"
-            )
-        self._logical_to_phys = dict(state.get("map") or {})
+        # never changes physical names and never adds files.
+        t = _log(self.path)
+        t._check_protocol(None)
+        self._logical_to_phys = dict(t._mapping_at(None))
         self._arrow_types = (
             _declared_arrow_types(schema) if schema is not None else {}
         )
@@ -425,7 +312,6 @@ class TxnLogStreamReader(DataSourceStreamReader):
             # startingVersion v ⇒ the first batch INCLUDES version v
             self._pos = self.starting - 1
             return {"version": self.starting - 1}
-        vs = self.view.versions()
         # default: consume the table from the beginning (version 0's
         # init rides the first batch), matching Delta's default of
         # processing the full existing snapshot first
@@ -433,7 +319,8 @@ class TxnLogStreamReader(DataSourceStreamReader):
         return {"version": -1}
 
     def latestOffset(self) -> dict:
-        vs = self.view.versions()
+        t = _log(self.path)
+        vs = t.versions()
         newest = vs[-1] if vs else -1
         if self.max_files <= 0 or self._pos is None or newest <= self._pos:
             return {"version": newest}
@@ -447,7 +334,7 @@ class TxnLogStreamReader(DataSourceStreamReader):
         for v in vs:
             if v <= self._pos:
                 continue
-            n = len(self.view.added_data_files(end, v, True))
+            n = len(_added_data_files(t, end, v, True))
             if taken and taken + n > self.max_files:
                 break
             taken += n
@@ -460,34 +347,16 @@ class TxnLogStreamReader(DataSourceStreamReader):
         self, start: dict, end: dict
     ) -> Sequence[InputPartition]:
         self._pos = int(end["version"])
-        files = self.view.added_data_files(
-            int(start["version"]), int(end["version"]), self.ignore_changes
+        files = _added_data_files(
+            _log(self.path),
+            int(start["version"]),
+            int(end["version"]),
+            self.ignore_changes,
         )
         return [_FilePartition(p) for p in files]
 
     def read(self, partition: _FilePartition) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.path)
-        # Spark's default parquet timestamp encoding (INT96) reads back
-        # through pyarrow as timestamp[ns], which the engine's Arrow
-        # bridge rejects (UNSUPPORTED_ARROWTYPE). Spark timestamps are
-        # microsecond-precision, so the ns->us cast is exact for any
-        # Spark-written file (and matches Spark's own read semantics
-        # for genuinely-ns data).
-        fields = []
-        changed = False
-        for f in table.schema:
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
-                fields.append(
-                    pa.field(f.name, pa.timestamp("us", f.type.tz))
-                )
-                changed = True
-            else:
-                fields.append(f)
-        if changed:
-            table = table.cast(pa.schema(fields))
+        table = _read_file(partition.path)
         if self._want is not None:
             table = _project_file_table(
                 table, self._want, self._logical_to_phys,
@@ -505,8 +374,9 @@ class TxnLogStreamReader(DataSourceStreamReader):
 
 class TxnLogBatchReader(DataSourceReader):
     """``spark.read.format("txnlog")`` — the table as a BATCH source
-    (Delta's ``spark.read.format("delta")`` parity), usable without
-    constructing a :class:`TxnLogTable`. Options:
+    (Delta's ``spark.read.format("delta")`` parity). The log is
+    replayed on the driver through :class:`TxnLogTable`; executors get
+    only plain file lists, maps and row-id bases. Options:
 
     - ``path`` (required)
     - ``versionAsOf`` — read the snapshot at that commit version
@@ -533,31 +403,12 @@ class TxnLogBatchReader(DataSourceReader):
     full-snapshot scan."""
 
     def __init__(self, options: dict, schema) -> None:
-        import datetime as _dt
-
         self.path = options["path"]
-        view = _LogView(self.path)
-        version = options.get("versionasof")
-        self.version = int(version) if version is not None else None
-        ts_opt = options.get("timestampasof")
-        if ts_opt is not None:
-            if self.version is not None:
-                raise ValueError(
-                    "txnlog batch read: pass versionAsOf OR "
-                    "timestampAsOf, not both"
-                )
-            try:
-                ts = float(ts_opt)
-            except ValueError:
-                ts = _dt.datetime.fromisoformat(ts_opt).timestamp()
-            self.version = view.version_at(ts)
-        state = view.cmap_state(self.version)
-        need = (state.get("protocol") or {}).get("min_reader", 1)
-        if need > 2:
-            raise RuntimeError(
-                f"txnlog batch read: table requires reader protocol "
-                f"{need}; this source supports 2"
-            )
+        t = _log(self.path)
+        self.version = _as_of_version(t, options)
+        # _split_live runs the reader-protocol gate first
+        data, dvs = t._split_live(self.version)
+        state = t._cmap_at(self.version)
         self._logical_to_phys = dict(state.get("map") or {})
         self._rowids = str(
             options.get("rowids", "false")
@@ -584,30 +435,20 @@ class TxnLogBatchReader(DataSourceReader):
             n for n in declared if not (self._rowids and n == "_row_id")
         ]
         self._arrow_types = _declared_arrow_types(schema)
-        data, dvs = view.live_at(self.version)
-        self._files = [
-            p if os.path.isabs(p) else os.path.join(self.path, p)
-            for p in data
-        ]
+        self._files = [_abs(self.path, p) for p in data]
         self._rowid_bases: dict[str, int] = {}
         if self._rowids:
-            rel_bases = view.row_id_bases(self.version)
+            rel_bases = t._row_id_bases(self.version)[0]
             self._rowid_bases = {
-                (p if os.path.isabs(p) else os.path.join(self.path, p)): b
-                for p, b in rel_bases.items()
+                _abs(self.path, p): b for p, b in rel_bases.items()
             }
         self._dv_col = None
         self._dv_keys: frozenset = frozenset()
         if dvs:
             import pyarrow.parquet as pq
 
-            tabs = [
-                pq.read_table(
-                    p if os.path.isabs(p) else os.path.join(self.path, p)
-                )
-                for p in dvs
-            ]
-            cols = {tuple(t.column_names) for t in tabs}
+            tabs = [pq.read_table(_abs(self.path, p)) for p in dvs]
+            cols = {tuple(tab.column_names) for tab in tabs}
             names = next(iter(cols))
             if len(cols) != 1 or len(names) != 1:
                 raise RuntimeError(
@@ -617,7 +458,7 @@ class TxnLogBatchReader(DataSourceReader):
                 )
             self._dv_col = names[0]
             self._dv_keys = frozenset(
-                k for t in tabs for k in t.column(0).to_pylist()
+                k for tab in tabs for k in tab.column(0).to_pylist()
             )
 
     def partitions(self) -> Sequence[InputPartition]:
@@ -626,21 +467,8 @@ class TxnLogBatchReader(DataSourceReader):
     def read(self, partition: _FilePartition) -> Iterator:
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        table = pq.read_table(partition.path)
-        fields = []
-        changed = False
-        for f in table.schema:
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
-                fields.append(
-                    pa.field(f.name, pa.timestamp("us", f.type.tz))
-                )
-                changed = True
-            else:
-                fields.append(f)
-        if changed:
-            table = table.cast(pa.schema(fields))
+        table = _read_file(partition.path)
         # Row tracking: grab the physical id column (preserving
         # compactions materialize it) BEFORE the schema projection
         # drops it; fresh files derive ids from base + file position.
@@ -754,60 +582,28 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
 
     # -- driver side --------------------------------------------------------
     def _resolved_table_schema(self):
-        """The TABLE's authoritative schema, never the stream's:
-        newest checkpoint/metadata schema from the log walk (the same
-        precedence as ``TxnLogTable._schema_at``), else inferred from
-        an existing data file, else — for a virgin table with no data
-        — the stream's schema, which then legitimately DEFINES the
-        table. Without this resolution the throwaway commit table's
-        ``_base_schema`` would be the stream DataFrame's schema, and a
-        sink commit crossing a CHECKPOINT_EVERY boundary would persist
-        that ad-hoc schema into the checkpoint's ``schema`` field —
-        silently rewriting the table's effective schema for every
-        subsequent reader."""
-        import pyspark.sql.types as T
-
-        view = _LogView(self.path)
-        for v in reversed(view.versions()):
-            ck_path = os.path.join(
-                view.log_dir, f"{v:020d}.checkpoint.json"
-            )
-            if os.path.exists(ck_path):
-                with open(ck_path, encoding="utf-8") as f:
-                    ck = json.load(f)
-                if "schema" in ck:
-                    return T.StructType.fromJson(ck["schema"])
-            for a in view.entry(v)["actions"]:
-                if "metadata" in a:
-                    return T.StructType.fromJson(a["metadata"]["schema"])
-        sample = view.any_data_file()
-        if sample is not None:
-            import pyarrow.parquet as pq
-
-            arrow = pq.read_schema(sample)
-            return T.StructType(
-                [
-                    T.StructField(f.name, _arrow_field_spark_type(f))
-                    for f in arrow
-                ]
-            )
-        return self.schema
+        """The TABLE's authoritative schema, never the stream's (see
+        ``_table_schema``); only a virgin table with no data takes the
+        stream's, which then legitimately DEFINES the table. Without
+        this resolution the throwaway commit table's ``_base_schema``
+        would be the stream DataFrame's schema, and a sink commit
+        crossing a CHECKPOINT_EVERY boundary would persist that ad-hoc
+        schema into the checkpoint's ``schema`` field — silently
+        rewriting the table's effective schema for every subsequent
+        reader."""
+        return _table_schema(_log(self.path)) or self.schema
 
     def _table(self):
         from ..operators.txnlog import TxnLogTable
 
-        state = _LogView(self.path).cmap_state()
-        need_w = (state.get("protocol") or {}).get("min_writer", 1)
+        log = _log(self.path)
         # writer protocol 3 = row tracking, which the sink satisfies
         # by construction: its commits are pure appends whose add
         # actions carry exact rowcounts, which is all the lazy row-id
         # assignment needs — streaming ingest into a row-tracked table
         # gives every record a stable id with zero coordination
-        if need_w > 3:
-            raise RuntimeError(
-                f"txnlog sink: table requires writer protocol "
-                f"{need_w}; this sink supports 3"
-            )
+        log._check_protocol(None, write=True)
+        state = log._cmap_at(None)
         if state.get("map"):
             # executors stage files named by the STREAM's (logical)
             # columns and record stats under those names — both would
@@ -918,8 +714,7 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
         for v in range(start, end + 1):
             if not os.path.exists(t._log_path(v)):
                 return False
-            with open(t._log_path(v), encoding="utf-8") as f:
-                entry = json.load(f)
+            entry = t._entry(v)
             if entry.get("op") == "restore":
                 return False
             for a in entry["actions"]:
@@ -951,59 +746,19 @@ class TxnLogStreamDataSource(DataSource):
         return "txnlog"
 
     def schema(self) -> str:
-        view = _LogView(self.options["path"])
-        upto = self.options.get("versionasof")
-        ts_opt = self.options.get("timestampasof")
-        if upto is not None:
-            upto = int(upto)
-        elif ts_opt is not None:
-            import datetime as _dt
-
-            try:
-                ts = float(ts_opt)
-            except ValueError:
-                ts = _dt.datetime.fromisoformat(ts_opt).timestamp()
-            upto = view.version_at(ts)
-        rowids = str(
-            self.options.get("rowids", "false")
-        ).lower() in ("true", "1")
-        rid_suffix = ", `_row_id` bigint" if rowids else ""
-        logged = view.logical_schema_json(upto)
-        if logged is not None:
-            # a logged metadata schema is authoritative AND already in
-            # logical names — the only correct source once the table
-            # has renamed/dropped columns (the arrow fallback below
-            # would surface physical/retired names)
-            import pyspark.sql.types as T
-
-            st = T.StructType.fromJson(logged)
-            return (
-                ", ".join(
-                    f"`{f.name}` {f.dataType.simpleString()}"
-                    for f in st.fields
-                )
-                + rid_suffix
-            )
-        sample = view.any_data_file()
-        if sample is None:
+        t = _log(self.options["path"])
+        st = _table_schema(t, _as_of_version(t, self.options))
+        if st is None:
             raise ValueError(
                 f"txnlog table at {self.options['path']!r} has no data "
                 "files; pass an explicit .schema(...)"
             )
-        import pyarrow.parquet as pq
-
-        # hide a physically materialized _row_id (preserving rewrites
-        # land it in the files) ONLY on a row-tracked table — on any
-        # other table the name is not reserved and a user column
-        # called _row_id must surface like every other column
-        tracked = bool(view.cmap_state(upto).get("row_tracking"))
-        arrow = pq.read_schema(sample)
-        cols = ", ".join(
-            f"`{f.name}` {_arrow_field_ddl(f)}"
-            for f in arrow
-            if not (tracked and f.name == "_row_id")
-        )
-        return cols + rid_suffix
+        rowids = str(
+            self.options.get("rowids", "false")
+        ).lower() in ("true", "1")
+        return ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in st.fields
+        ) + (", `_row_id` bigint" if rowids else "")
 
     def reader(self, schema) -> TxnLogBatchReader:
         return TxnLogBatchReader(self.options, schema)

@@ -3,19 +3,28 @@
 ``spark.read.format("delta")`` parity). Property that matters: for
 every committed version, the format reader returns EXACTLY what
 ``TxnLogTable.read(version)`` returns — through deletion vectors,
-column mapping, and time travel — while reading files executor-side
-as Arrow batches with no TxnLogTable (and no library import) on the
-read path."""
+column mapping, time travel and a history that crosses a checkpoint —
+while reading files executor-side as Arrow batches with no
+TxnLogTable (and no library import) on the executors. The log itself
+is read only through TxnLogTable: the source, batch reader and sink
+share its protocol gates, and no other module names the log's
+layout."""
 
 from __future__ import annotations
 
+import ast
 import json
+import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from relational_query_engine_sql_spark.operators.txnlog import TxnLogTable
+from relational_query_engine_sql_spark.operators.txnlog import (
+    CHECKPOINT_EVERY,
+    TxnLogTable,
+)
 from relational_query_engine_sql_spark.sources.txnlog_stream import (
     TxnLogStreamDataSource,
 )
@@ -54,6 +63,36 @@ def table(spark, tmp_path):
     return t
 
 
+@pytest.fixture()
+def long_table(spark, tmp_path):
+    """13 commits, so v11 and v12 replay from the checkpoint at v10;
+    deferred deletes land on both sides of it and a rename before."""
+    spark.dataSource.register(TxnLogStreamDataSource)
+    t = TxnLogTable(spark, str(tmp_path / "long"), SCHEMA, ["id"])
+    t.init(_frame(spark, 0, 10))  # v0
+    for i in range(1, 5):  # v1..v4
+        t.append(_frame(spark, 10 * i, 10 * i + 10))
+    t.delete_keys_deferred(
+        _frame(spark, 0, 50).filter(F.col("id") % 7 == 0).select("id")
+    )  # v5
+    t.rename_column("comment", "note")  # v6
+    for i in range(5, 9):  # v7..v10
+        t.append(
+            _frame(spark, 10 * i, 10 * i + 10, tag="n").withColumnRenamed(
+                "comment", "note"
+            )
+        )
+    t.delete_keys_deferred(
+        _frame(spark, 0, 90).filter(F.col("id") % 5 == 1).select("id")
+    )  # v11
+    t.append(
+        _frame(spark, 90, 95, tag="m").withColumnRenamed("comment", "note")
+    )  # v12
+    assert t.current_version() == 12
+    assert os.path.exists(t._ckpt_path(CHECKPOINT_EVERY))
+    return t
+
+
 def _fmt(spark, path, **opts):
     r = spark.read.format("txnlog").option("path", path)
     for k, v in opts.items():
@@ -61,11 +100,14 @@ def _fmt(spark, path, **opts):
     return r.load()
 
 
-def test_batch_reader_matches_table_read_at_every_version(spark, table):
-    for v in table.versions():
-        want = sorted(table.read(v).collect())
-        got = sorted(_fmt(spark, table.path, versionAsOf=v).collect())
-        assert got == want, f"format reader diverged at v{v}"
+def test_batch_reader_matches_table_read_at_every_version(
+    spark, table, long_table
+):
+    for t in (table, long_table):
+        for v in t.versions():
+            want = sorted(t.read(v).collect())
+            got = sorted(_fmt(spark, t.path, versionAsOf=v).collect())
+            assert got == want, f"format reader diverged at v{v} of {t.path}"
 
 
 def test_batch_reader_current_applies_dv_and_mapping(spark, table):
@@ -116,7 +158,9 @@ def test_batch_reader_refuses_composite_key_dv(spark, tmp_path):
     assert t.read().count() == 17
 
 
-def test_batch_reader_protocol_gate(spark, table):
+def _commit_protocol(table, min_reader, min_writer):
+    """Hand-commit a metadata action that raises the table's protocol
+    beyond what this implementation supports."""
     base = table.current_version()
     entry = {
         "version": base + 1,
@@ -129,7 +173,10 @@ def test_batch_reader_protocol_gate(spark, table):
                     "cmap": {
                         "map": {},
                         "retired": [],
-                        "protocol": {"min_reader": 9, "min_writer": 9},
+                        "protocol": {
+                            "min_reader": min_reader,
+                            "min_writer": min_writer,
+                        },
                     },
                 }
             }
@@ -137,10 +184,49 @@ def test_batch_reader_protocol_gate(spark, table):
     }
     with open(table._log_path(base + 1), "w", encoding="utf-8") as f:
         json.dump(entry, f)
+
+
+def test_batch_reader_protocol_gate(spark, table):
+    _commit_protocol(table, 9, 9)
     with pytest.raises(Exception, match="reader protocol"):
         _fmt(spark, table.path).count()
     # pinned pre-feature versions stay readable
     assert _fmt(spark, table.path, versionAsOf=0).count() == 100
+
+
+def test_stream_reader_protocol_gate(spark, table, tmp_path):
+    _commit_protocol(table, 9, 9)
+    with pytest.raises(Exception, match="reader protocol"):
+        q = (
+            spark.readStream.format("txnlog")
+            .option("path", table.path)
+            .load()
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+
+def test_sink_protocol_gate(spark, table, tmp_path):
+    # readers stay supported, so only the writer gate can refuse
+    _commit_protocol(table, 1, 9)
+    src = str(tmp_path / "src")
+    rows = _frame(spark, 200, 210).withColumnRenamed("comment", "note")
+    rows.write.parquet(src)
+    with pytest.raises(Exception, match="writer protocol"):
+        q = (
+            spark.readStream.schema(rows.schema)
+            .parquet(src)
+            .writeStream.format("txnlog")
+            .option("path", table.path)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    assert table.read().count() == 110  # nothing committed
 
 
 def test_batch_reader_timestamp_as_of_monotonic_under_skew(
@@ -226,3 +312,32 @@ def test_batch_reader_drop_then_readd_does_not_resurrect(spark, tmp_path):
             map(tuple, _fmt(spark, t.path, versionAsOf=v).collect())
         )
         assert got == want, f"format reader diverged at v{v}"
+
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "relational_query_engine_sql_spark"
+LAYOUT = ("_txn_log", ".checkpoint.json")
+
+
+def test_log_layout_is_named_only_by_the_table_module():
+    """One owner of the commit-log format: the log directory's name and
+    the checkpoint suffix appear as string constants only in
+    operators/txnlog.py, so no other module builds log paths or
+    replays checkpoints on its own."""
+    found, owner = [], set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (
+                isinstance(node, ast.Constant) and isinstance(node.value, str)
+            ):
+                continue
+            for name in LAYOUT:
+                if name not in node.value:
+                    continue
+                if rel == "operators/txnlog.py":
+                    owner.add(name)
+                else:
+                    found.append(f"{rel}:{node.lineno} {name!r}")
+    assert owner == set(LAYOUT)
+    assert found == [], f"log layout named outside txnlog.py: {found}"

@@ -324,11 +324,8 @@ def test_format_reader_row_ids_requires_feature(spark, sf_small, tmp_path):
 def test_checkpoint_folds_rowid_state(spark, sf_small, tmp_path):
     """Commit past CHECKPOINT_EVERY: the checkpoint payload carries
     folded (bases, hwm), the seeded walk equals a raw full-history
-    walk, and the Spark-free _LogView agrees (format-reader parity)."""
-    from relational_query_engine_sql_spark.sources.txnlog_stream import (
-        _LogView,
-    )
-
+    walk, and a ``rowIds`` format read returns the library path's ids
+    (format-reader parity)."""
     src = _src(spark, sf_small)
     t = TxnLogTable(
         spark, str(tmp_path / "ckf"), src.schema, ["s_suppkey"]
@@ -363,7 +360,16 @@ def test_checkpoint_folds_rowid_state(spark, sf_small, tmp_path):
             raw_hwm += add.get("rows") or 0
     bases, hwm = t._row_id_bases()
     assert (bases, hwm) == (raw_bases, raw_hwm)
-    assert _LogView(t.path).row_id_bases(t.current_version()) == raw_bases
+    _register(spark)
+    via_format = {
+        r.s_suppkey: r[ROWID_COL]
+        for r in spark.read.format("txnlog")
+        .option("path", t.path)
+        .option("rowIds", "true")
+        .load()
+        .collect()
+    }
+    assert via_format == _ids(t)
 
 
 def test_streaming_sink_rows_get_lazy_ids(spark, sf_small, tmp_path):
