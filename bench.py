@@ -482,12 +482,14 @@ def main() -> None:
     spark.range(64).repartition(64).mapInPandas(
         lambda it: it, "id long"
     ).count()
-    # Per-query codegen warmup at the smallest SF: whole-stage codegen
-    # compiles per plan shape, and measured-cold runs are 2-8x slower
-    # than warm for the codegen-heavy queries (minhash measured 10.2s
-    # cold vs 2.4s warm at sf0.1 with zero plan change). One tiny-SF
-    # pass JIT-compiles every headline plan for pennies so the timed
-    # loop below measures the plan, not the compiler.
+    # Per-query warmup at the smallest SF: measured-cold runs are 2-8x
+    # slower than warm for the codegen-heavy queries (minhash measured
+    # 10.2s cold vs 2.4s warm at sf0.1 with zero plan change). One
+    # tiny-SF pass warms the JVM's JIT for pennies. It does not leave
+    # the headline's generated classes cached: the codegen cache keeps
+    # the 2048 most recent (session.py), the 130 headline queries make
+    # ~1,650, and the tail's classes come after them. Timed passes
+    # 2..k do reuse pass 1's classes.
     warm_dir = os.environ.get(
         "SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001"
     )

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 from functools import partial
 
@@ -407,20 +406,6 @@ class VersionedParquetTable(ParquetTable):
 CascadeSpec = list  # recursive: [(ParquetTable, [dict], CascadeSpec), ...]
 
 
-def _snapshot(table: ParquetTable, df: DataFrame, scratch_root: str) -> DataFrame:
-    """Materialize a doomed-key set so it survives the parent's
-    directory swap (lazy plans would re-read post-swap files).
-
-    Staged to a scratch parquet path and read back — the doomed set of
-    a hot parent (users → friend/request/review) can exceed driver
-    memory at scale, so it never passes through the driver. The scratch
-    directory lives until the top-level cascade completes (the returned
-    frame reads lazily from it)."""
-    path = os.path.join(scratch_root, f"doomed-{uuid.uuid4().hex[:12]}")
-    df.write.mode("overwrite").parquet(path)
-    return table.spark.read.schema(df.schema).parquet(path)
-
-
 def _subtree_paths(spec: CascadeSpec) -> list[str]:
     """Every table path reachable from a cascade spec (for the sibling
     disjointness check below)."""
@@ -435,11 +420,18 @@ def cascade_delete_keys(
     table: ParquetTable,
     keys_df: DataFrame,
     children: CascadeSpec = (),
-    _scratch_root: str | None = None,
 ) -> None:
     """Delete ``table`` rows matching ``keys_df`` (on table.keys),
     depth-first cascading into ``children`` before touching this level
     so every child computes its doomed set against pre-delete data.
+
+    Each level's doomed keys are pinned with an eager local checkpoint
+    before any rewrite, so they survive the directory swaps (a lazy
+    plan would re-read post-swap files). The blocks stay on the
+    executors: the doomed set of a hot parent (users →
+    friend/request/review) can exceed driver memory at scale, so it
+    never passes through the driver. Key sets may hold duplicates:
+    they only feed left-semi and left-anti joins, which ignore them.
 
     Sibling subtrees touch disjoint tables in the common case (one FK
     tree), so they are processed CONCURRENTLY (guide §2.6): each
@@ -453,46 +445,31 @@ def cascade_delete_keys(
     Not atomic. If a sibling subtree fails, the siblings that already
     finished stay deleted, queued siblings do not start, this level is
     not deleted, and the first error propagates."""
-    own_scratch = _scratch_root is None
-    scratch = _scratch_root or tempfile.mkdtemp(prefix="rqe-cascade-")
-    try:
 
-        def one_child(spec) -> None:
-            child, fk_maps, grandchildren = spec
-            doomed_child = None
-            for m in fk_maps:
-                probe = keys_df.select(
-                    *[F.col(pk).alias(cc) for cc, pk in m.items()]
-                ).dropDuplicates()
-                hit = (
-                    child.read()
-                    .join(probe, list(m.keys()), "left_semi")
-                    .select(child.keys)
-                )
-                doomed_child = (
-                    hit if doomed_child is None else doomed_child.union(hit)
-                )
-            cascade_delete_keys(
-                child,
-                _snapshot(child, doomed_child.dropDuplicates(), scratch),
-                grandchildren,
-                _scratch_root=scratch,
+    def one_child(spec) -> None:
+        child, fk_maps, grandchildren = spec
+        doomed_child = None
+        for m in fk_maps:
+            probe = keys_df.select(*[F.col(pk).alias(cc) for cc, pk in m.items()])
+            hit = (
+                child.read()
+                .join(probe, list(m.keys()), "left_semi")
+                .select(child.keys)
             )
+            doomed_child = hit if doomed_child is None else doomed_child.union(hit)
+        cascade_delete_keys(
+            child, doomed_child.localCheckpoint(eager=True), grandchildren
+        )
 
-        sib_paths = [_subtree_paths([c]) for c in children]
-        flat = [p for ps in sib_paths for p in ps]
-        disjoint = len(flat) == len(set(flat))
-        if disjoint:
-            run_independent(
-                table.spark, *[partial(one_child, c) for c in children]
-            )
-        else:
-            for spec in children:
-                one_child(spec)
-        table.delete_keys(keys_df)
-    finally:
-        if own_scratch:
-            shutil.rmtree(scratch, ignore_errors=True)
+    sib_paths = [_subtree_paths([c]) for c in children]
+    flat = [p for ps in sib_paths for p in ps]
+    disjoint = len(flat) == len(set(flat))
+    if disjoint:
+        run_independent(table.spark, *[partial(one_child, c) for c in children])
+    else:
+        for spec in children:
+            one_child(spec)
+    table.delete_keys(keys_df)
 
 
 def cascade_delete(
@@ -500,11 +477,5 @@ def cascade_delete(
 ) -> None:
     """DELETE FROM parent WHERE condition, cascading through the FK
     graph (ON DELETE CASCADE semantics, done explicitly)."""
-    scratch = tempfile.mkdtemp(prefix="rqe-cascade-")
-    try:
-        doomed = _snapshot(
-            parent, parent.read().filter(condition).select(parent.keys), scratch
-        )
-        cascade_delete_keys(parent, doomed, children, _scratch_root=scratch)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    doomed = parent.read().filter(condition).select(parent.keys)
+    cascade_delete_keys(parent, doomed.localCheckpoint(eager=True), children)

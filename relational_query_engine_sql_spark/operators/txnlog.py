@@ -667,10 +667,9 @@ class TxnLogTable(ParquetTable):
             raise ValueError(f"no such version: {version}")
         start, live = 0, {}
         for v in range(version, -1, -1):
-            if os.path.exists(self._ckpt_path(v)):
-                with open(self._ckpt_path(v), encoding="utf-8") as f:
-                    live = json.load(f)["live"]
-                start = v + 1
+            ckpt = self._ckpt_payload(v)
+            if ckpt is not None:
+                live, start = ckpt["live"], v + 1
                 break
         for v in range(start, version + 1):
             entry = self._entry(v)
@@ -1657,12 +1656,14 @@ class TxnLogTable(ParquetTable):
         if any(base.get(c) not in _STATS_COL_TYPES for c in stat_cols):
             return None
         try:
+            import pyarrow.compute as pc
             import pyarrow.parquet as pq
         except ImportError:
             return None
         # ROW gate on top of the byte gate: the bloom slices cost one
         # Python md5 per distinct key (~3 us measured at 2 probes) and
-        # min/max collection ~0.5 s per 1M values per column, so past
+        # float min/max collection (a Python loop, for Spark's NaN
+        # order) ~0.5 s per 1M values per column, so past
         # ~100-400k rows the driver loop exceeds the ~0.5 s Spark job
         # it replaces — and 32 MB of parquet can hold millions of int
         # keys. Footer-only read (no data pages), so the gate is ~free.
@@ -1708,24 +1709,25 @@ class TxnLogTable(ParquetTable):
                 "_rows": tbl.num_rows,
             }
             for i, c in enumerate(stat_cols):
-                vals = [
-                    _norm(v) for v in tbl.column(c).to_pylist()
-                    if v is not None
-                ]
+                if base[c] not in ("float", "double"):
+                    # nulls skipped, like Spark's min/max
+                    mm = pc.min_max(tbl.column(c))
+                    row[f"_mn{i}"] = _norm(mm["min"].as_py())
+                    row[f"_mx{i}"] = _norm(mm["max"].as_py())
+                    continue
+                vals = [v for v in tbl.column(c).to_pylist() if v is not None]
                 if not vals:
                     row[f"_mn{i}"] = None
                     row[f"_mx{i}"] = None
-                elif base[c] in ("float", "double"):
+                else:
                     nn = [v for v in vals if not math.isnan(v)]
-                    # Spark orders NaN greatest: max is NaN when any
-                    # NaN exists; min ignores NaN unless all are NaN
+                    # Arrow's min_max skips NaN, but Spark orders NaN
+                    # greatest: max is NaN when any NaN exists; min
+                    # ignores NaN unless all are NaN
                     row[f"_mn{i}"] = min(nn) if nn else float("nan")
                     row[f"_mx{i}"] = (
                         float("nan") if len(nn) < len(vals) else max(nn)
                     )
-                else:
-                    row[f"_mn{i}"] = min(vals)
-                    row[f"_mx{i}"] = max(vals)
             if want_bloom:
                 slices: list[set] = [set() for _ in range(BLOOM_PROBES)]
                 for v in set(tbl.column(k0).to_pylist()):

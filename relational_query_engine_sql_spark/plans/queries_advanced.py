@@ -752,8 +752,10 @@ _RECO_K = 50
     """,
 )
 def reco_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # no spread(): the distinct below hash-exchanges anyway, and a
+    # round-robin repartition first sorts all rows inside the scan task
     li = (
-        spread(load_table(spark, sf_dir, "lineitem"), spark)
+        load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
         .localCheckpoint(eager=True)  # consumed by n/support/both join sides

@@ -66,6 +66,16 @@ def get_spark(
         # Quiet + lean for headless runs.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Generated-code cache (static, one per JVM). Spark keeps 100
+        # compiled classes, but one round of the perfbench trade_write
+        # mix compiles ~178 and corpus_dedup ~160, and bench.py's
+        # 130-query headline ~1,650, so every warm round evicted and
+        # recompiled nearly all of them, each restarting in the JVM
+        # interpreter. 2048 holds the headline: a second sf0.001 pass
+        # of it recompiled 22 classes, against 1,460 with 1000 entries.
+        # The JVM unloaded none of the evicted classes in those runs, so
+        # keeping them costs no more Metaspace than the churn did.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
     )
     # Local mode puts driver AND all executor threads in one JVM —
     # Spark's 1g default heap GC-thrashes under a 32-thread shuffle and

@@ -174,6 +174,11 @@ def spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     no-op: we only repartition when the scan came back narrower than
     defaultParallelism, never force a plan-wide shuffle on data that is
     already spread.
+
+    The round-robin repartition sorts every row inside the scan task
+    first (``spark.sql.execution.sortBeforeRepartition``), so use it
+    only before heavy narrow work, never right before an aggregate or
+    distinct, whose own hash exchange spreads the rows anyway.
     """
     n = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:

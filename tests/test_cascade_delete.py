@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from relational_query_engine_sql_spark import fixtures
 from relational_query_engine_sql_spark.operators.mutation import (
@@ -14,6 +15,7 @@ from relational_query_engine_sql_spark.operators.mutation import (
     cascade_delete,
 )
 from relational_query_engine_sql_spark.schemas import DOMAIN_KEYS, DOMAIN_SCHEMAS
+from relational_query_engine_sql_spark.sources import local_frame
 
 
 @pytest.fixture()
@@ -125,3 +127,33 @@ def test_cascade_noop_when_condition_matches_nothing(spark, domain_tables):
     )
     after = {n: tb.read().count() for n, tb in t.items()}
     assert before == after
+
+
+def test_row_hit_by_two_fk_maps_is_deleted_once(spark, tmp_path):
+    """A child row whose two FKs both point at doomed parents is
+    deleted exactly once, and its own children with it."""
+
+    def table(name, ddl, keys, rows):
+        schema = T.StructType.fromDDL(ddl)
+        t = ParquetTable(spark, str(tmp_path / name), schema, keys=keys)
+        t.init(local_frame(spark, rows, schema))
+        return t
+
+    users = table("users", "userid INT", ["userid"], [(1,), (2,), (3,)])
+    link = table(
+        "link", "linkid INT, a INT, b INT", ["linkid"],
+        [(10, 1, 2), (11, 2, 3), (12, 3, 3)],
+    )
+    note = table(
+        "note", "noteid INT, linkid INT", ["noteid"],
+        [(100, 10), (101, 10), (102, 11), (103, 12)],
+    )
+    spec = [(link, [{"a": "userid"}, {"b": "userid"}], [
+        (note, [{"linkid": "linkid"}], []),
+    ])]
+
+    cascade_delete(users, F.col("userid").isin(1, 2), spec)
+
+    assert sorted(r.userid for r in users.read().collect()) == [3]
+    assert sorted(tuple(r) for r in link.read().collect()) == [(12, 3, 3)]
+    assert sorted(tuple(r) for r in note.read().collect()) == [(103, 12)]

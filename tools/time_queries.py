@@ -3,7 +3,9 @@
 
 Usage: python tools/time_queries.py [-k N] [--sf DIR] name [name ...]
 Prints one JSON line {name: best_sec, ...} plus per-run details on
-stderr. Same methodology as bench.py (count() action, clearCache
+stderr, each with the number of classes whole-stage codegen compiled
+during the run (0 once the plan's generated code is cached). Same
+methodology as bench.py (count() action, clearCache
 between queries, warm pass at sf0.001 first).
 """
 from __future__ import annotations
@@ -45,18 +47,24 @@ def main() -> None:
                 print(f"warm FAIL {n}: {ex}", file=sys.stderr)
         spark.catalog.clearCache()
 
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount
+    )
     best: dict[str, float] = {}
     for rep in range(args.k):
         for n in args.names:
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"time:{n}")
+            c0 = compiles()
             t0 = time.perf_counter()
             try:
                 plans.get(n).fn(spark, args.sf).count()
                 took = round(time.perf_counter() - t0, 3)
                 if n not in best or took < best[n]:
                     best[n] = took
-                print(f"run{rep} {n} {took}s", file=sys.stderr, flush=True)
+                print(f"run{rep} {n} {took}s compiles={compiles() - c0}",
+                      file=sys.stderr, flush=True)
             except Exception as ex:
                 print(f"FAIL {n}: {type(ex).__name__}: {ex}"[:300],
                       file=sys.stderr)
