@@ -14,6 +14,18 @@ transform plans are single-shuffle (anti-join on the key). For a
 100 TB fact table you'd partition the files by key range/date and
 rewrite only affected partitions (dynamic partition overwrite) —
 ``ParquetTable(partition_by=...)`` does exactly that.
+
+Every file write goes through ``sources.write_parquet``, which has two
+arms. A frame with no ``partition_by`` whose optimizer size estimate is
+at most ``DRIVER_WRITE_MAX_BYTES`` (4 MiB; set
+``$SPARK_GRAFT_DRIVER_WRITE_MAX_BYTES``, 0 forces Spark's writer) is
+collected as Arrow and written by pyarrow on the driver; every other
+frame takes Spark's writer. Both lay files out alike: one file per
+non-empty Spark partition plus partition 0's, so ``file_count`` and
+``compact`` read the same either way. A Spark write job pays ~60 ms
+of writer and committer set-up whatever its size; the collect that
+replaces it is still one job, so the driver arm cuts time per write,
+not the number of jobs.
 """
 
 from __future__ import annotations
@@ -28,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import run_independent
-from ..sources import local_frame
+from ..sources import local_frame, write_parquet
 
 
 def merge_frame(
@@ -93,7 +105,9 @@ class ParquetTable:
 
     Writes go to a staging directory then swap in atomically
     (best-effort local rename; object stores would commit via a
-    manifest). Readers always see a complete table.
+    manifest). Readers always see a complete table. Small frames are
+    written on the driver, larger ones by Spark (see the module
+    docstring); ``append`` and ``insert_ignore`` add files in place.
     """
 
     def __init__(
@@ -121,18 +135,27 @@ class ParquetTable:
         return self.spark.read.schema(self.schema).parquet(self.path)
 
     def _conform(self, df: DataFrame) -> DataFrame:
+        # a frame already in the table's column order and types (every
+        # read, and most derived frames) is returned as it is: the
+        # cast projection costs several py4j calls per column
+        want = [(f.name, f.dataType) for f in self.schema.fields]
+        if [(f.name, f.dataType) for f in df.schema.fields] == want:
+            return df
         return df.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in self.schema.fields]
         )
 
     # -- write --------------------------------------------------------------
 
-    def _swap_in(self, df: DataFrame) -> None:
+    def _stage(self, df: DataFrame) -> str:
+        """Write the conformed ``df`` to a fresh staging directory next
+        to the table and return its path."""
         staging = f"{self.path}.staging-{uuid.uuid4().hex[:8]}"
-        writer = self._conform(df).write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(staging)
+        write_parquet(self._conform(df), staging, "error", self.partition_by)
+        return staging
+
+    def _swap_in(self, df: DataFrame) -> None:
+        staging = self._stage(df)
         backup = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
         if os.path.exists(self.path):
             os.rename(self.path, backup)
@@ -146,7 +169,7 @@ class ParquetTable:
     # S3 — plain row append (INSERT ... RETURNING; the rows are already
     # known to the caller, so nothing to return).
     def append(self, rows: DataFrame) -> None:
-        self._conform(rows).write.mode("append").parquet(self.path)
+        write_parquet(self._conform(rows), self.path, "append")
 
     # S4 — idempotent insert (ON CONFLICT DO NOTHING,
     # src/routes/stocks.js:137-142, users.js:208-213): keep existing
@@ -160,7 +183,7 @@ class ParquetTable:
         )
         n = fresh.count()
         if n:
-            fresh.write.mode("append").parquet(self.path)
+            write_parquet(fresh, self.path, "append")
         return n
 
     # S5 — upsert (ON CONFLICT ... DO UPDATE SET col = EXCLUDED.col,
@@ -301,11 +324,7 @@ class VersionedParquetTable(ParquetTable):
         )
 
     def _swap_in(self, df: DataFrame) -> None:
-        staging = f"{self.path}.staging-{uuid.uuid4().hex[:8]}"
-        writer = self._conform(df).write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(staging)
+        staging = self._stage(df)
         os.makedirs(self.path, exist_ok=True)
         cur = self.current_version()
         os.rename(staging, self._vdir(0 if cur is None else cur + 1))
@@ -349,11 +368,7 @@ class VersionedParquetTable(ParquetTable):
         Delta deployment puts the same CAS on the commit-log entry; an
         object store on a manifest PUT-if-absent). Raises
         :class:`CommitConflict`; returns the committed version."""
-        staging = f"{self.path}.staging-{uuid.uuid4().hex[:8]}"
-        writer = self._conform(df).write.mode("overwrite")
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(staging)
+        staging = self._stage(df)
         os.makedirs(self.path, exist_ok=True)
         target_v = 0 if expected_version is None else expected_version + 1
         cur = self.current_version()

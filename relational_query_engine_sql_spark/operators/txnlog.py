@@ -68,7 +68,7 @@ import uuid
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..sources import local_frame
+from ..sources import local_frame, write_parquet
 from .mutation import CommitConflict, ParquetTable, merge_frame
 
 
@@ -1799,9 +1799,13 @@ class TxnLogTable(ParquetTable):
 
         if dv:
             schema = self._dv_schema()
-            df.select(
-                *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-            ).write.mode("error").parquet(out_dir)
+            write_parquet(
+                df.select(
+                    *[F.col(f.name).cast(f.dataType) for f in schema.fields]
+                ),
+                out_dir,
+                "error",
+            )
         elif parted:
             # hive-style p_<col>=<value> directories via DUPLICATED
             # partition columns: partitionBy drops its columns from
@@ -1814,12 +1818,12 @@ class TxnLogTable(ParquetTable):
             out = _prep(df)
             for c in self.partition_by:
                 out = out.withColumn(f"p_{c}", F.col(c).cast("string"))
-            out.write.mode("error").partitionBy(
-                *[f"p_{c}" for c in self.partition_by]
-            ).parquet(out_dir)
+            write_parquet(
+                out, out_dir, "error", [f"p_{c}" for c in self.partition_by]
+            )
         else:
             schema = self._physical_schema(None)
-            _prep(df).write.mode("error").parquet(out_dir)
+            write_parquet(_prep(df), out_dir, "error")
         if carry_rowid:
             # the files physically contain the id column: include it
             # in the stats-pass read schema (its per-file min/max then
@@ -1912,7 +1916,13 @@ class TxnLogTable(ParquetTable):
         # (a 1k-row commit's stats job costs ~0.6 s of pure job-launch
         # overhead; the pyarrow read is ~5 ms). At production scale a
         # commit blows the size gate immediately and the distributed
-        # stats pass below runs unchanged.
+        # stats pass below runs unchanged. The files themselves came
+        # from write_parquet: written on the driver by pyarrow when the
+        # frame's size estimate is at most DRIVER_WRITE_MAX_BYTES and it
+        # is not partitioned, by Spark's writer otherwise, in the same
+        # one-file-per-partition layout. Both passes read the files, so
+        # they work whichever arm wrote them. The driver arm's collect
+        # is a job too: it saves writer set-up time, not jobs.
         stat_rows = (
             None
             if (active or gencols)

@@ -5,6 +5,7 @@ from .catalog import (
     register_views,
     spread,
     table_rows,
+    write_parquet,
 )
 from .csv_ingest import (
     clean_ohlcv,
@@ -26,4 +27,5 @@ __all__ = [
     "spread",
     "symbol_registry",
     "table_rows",
+    "write_parquet",
 ]

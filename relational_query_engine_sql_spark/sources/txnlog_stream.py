@@ -558,7 +558,8 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
         import uuid as _uuid
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
+
+        from .catalog import write_arrow_file
 
         batches = list(iterator)
         if not batches:
@@ -567,7 +568,7 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
         rel = f"data/sink-{_uuid.uuid4().hex[:12]}/part-{_uuid.uuid4().hex[:8]}.parquet"
         full = os.path.join(self.path, rel)
         os.makedirs(os.path.dirname(full), exist_ok=True)
-        pq.write_table(table, full)
+        write_arrow_file(table, full, self.schema)
         stats = {}
         import pyarrow.compute as pc
 

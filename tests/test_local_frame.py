@@ -10,8 +10,9 @@
   and after a failure starts no further thunk; jobs it starts keep the
   caller's job group.
 - No module in the package calls ``createDataFrame`` directly except
-  ``local_frame`` itself and the fixtures' pandas input, and only
-  ``run_independent`` builds a thread pool.
+  ``local_frame`` itself and the fixtures' pandas input, only
+  ``run_independent`` builds a thread pool, and only
+  ``write_parquet`` collects Arrow and writes parquet with pyarrow.
 """
 
 from __future__ import annotations
@@ -246,6 +247,10 @@ _ALLOWED = {
     # overlap independent actions with session.run_independent
     "ThreadPoolExecutor": {("session.py", "run_independent")},
     "inheritable_thread_target": {("session.py", "run_independent")},
+    # Arrow writes go through sources.write_parquet, whose files match
+    # Spark's layout and footer
+    "toArrow": {("sources/catalog.py", "_partitions")},
+    "write_table": {("sources/catalog.py", "write_arrow_file")},
 }
 
 
