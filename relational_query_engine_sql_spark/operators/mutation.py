@@ -16,13 +16,14 @@ rewrite only affected partitions (dynamic partition overwrite) —
 ``ParquetTable(partition_by=...)`` does exactly that.
 
 Every file write goes through ``sources.write_parquet``, which has two
-arms. A frame with no ``partition_by`` whose optimizer size estimate is
-at most ``DRIVER_WRITE_MAX_BYTES`` (4 MiB; set
-``$SPARK_GRAFT_DRIVER_WRITE_MAX_BYTES``, 0 forces Spark's writer) is
-collected as Arrow and written by pyarrow on the driver; every other
-frame takes Spark's writer. Both lay files out alike: one file per
-non-empty Spark partition plus partition 0's, so ``file_count`` and
-``compact`` read the same either way. A Spark write job pays ~60 ms
+arms. A frame with no ``partition_by``, no row-multiplying plan node
+(explode, Python map or UDTF) and an optimizer size estimate under
+``DRIVER_WRITE_MAX_BYTES`` (4 MiB) is collected as Arrow and
+written by pyarrow on the driver; every other frame takes Spark's
+writer. Both lay files out alike: one file per non-empty Spark
+partition plus partition 0's, so ``file_count`` and ``compact`` read
+the same either way (rows already on the driver, a ``local_frame``,
+go to one file on the driver arm). A Spark write job pays ~60 ms
 of writer and committer set-up whatever its size; the collect that
 replaces it is still one job, so the driver arm cuts time per write,
 not the number of jobs.

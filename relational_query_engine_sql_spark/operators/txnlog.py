@@ -1918,7 +1918,7 @@ class TxnLogTable(ParquetTable):
         # commit blows the size gate immediately and the distributed
         # stats pass below runs unchanged. The files themselves came
         # from write_parquet: written on the driver by pyarrow when the
-        # frame's size estimate is at most DRIVER_WRITE_MAX_BYTES and it
+        # frame's size estimate is under DRIVER_WRITE_MAX_BYTES and it
         # is not partitioned, by Spark's writer otherwise, in the same
         # one-file-per-partition layout. Both passes read the files, so
         # they work whichever arm wrote them. The driver arm's collect

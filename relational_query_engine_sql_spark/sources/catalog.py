@@ -10,7 +10,7 @@ bulk source, ``.gitignore:5``) lives in ``csv_ingest.py``.
 from __future__ import annotations
 
 import os
-import shutil
+import re
 import uuid
 import weakref
 from collections.abc import Iterable
@@ -95,9 +95,9 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
-# Largest optimizer size estimate (bytes) that ``write_parquet`` writes
-# on the driver; $SPARK_GRAFT_DRIVER_WRITE_MAX_BYTES overrides it per
-# call, and 0 forces Spark's writer. Median ms of repeated overwrites of
+# ``write_parquet`` writes on the driver when the optimizer's size
+# estimate (bytes) is below this, read at call time, so 0 sends every
+# write to Spark's writer. Median ms of repeated overwrites of
 # each sf0.1 table at local[4] on a 4-vCPU host:
 #
 #   table     size estimate  Spark writer  driver arm
@@ -132,7 +132,16 @@ _ARROW_WRITABLE = (
     T.TimestampType,
     T.TimestampNTZType,
 )
+# Plan nodes that can emit more rows than they read. The size estimate
+# scales their child's size by row width only, so under one of these a
+# small estimate says nothing about what a collect would pull.
+_ROW_MULTIPLYING = re.compile(
+    r"^[\s:+|-]*(Generate|MapIn\w+|FlatMap\w+|\w*EvalPythonUDTF)\b",
+    re.MULTILINE,
+)
 _PID = "__write_partition_id"
+# Rows whose distinct values decide a column's dictionary encoding.
+_DICT_SAMPLE = 10_000
 
 
 def _arrow_writable(dt: T.DataType) -> bool:
@@ -143,9 +152,29 @@ def _arrow_writable(dt: T.DataType) -> bool:
     return type(dt) in _ARROW_WRITABLE
 
 
+def _dictionary_columns(table) -> list[str]:
+    """Flat columns worth dictionary-encoding: at most one distinct
+    value per two rows among the first ``_DICT_SAMPLE``. Spark's
+    parquet writer makes the same call from its first page, falling
+    back to plain pages when the dictionary does not pay; pyarrow would
+    dictionary-encode unique columns too, which makes a customer-sized
+    file ~25% larger than Spark's instead of ~10% smaller."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    head = table.slice(0, _DICT_SAMPLE)
+    return [
+        name
+        for name, col in zip(head.column_names, head.columns)
+        if not pa.types.is_nested(col.type)
+        and 2 * pc.count_distinct(col, mode="all").as_py() <= len(col)
+    ]
+
+
 def write_arrow_file(table, path: str, schema: T.StructType) -> None:
     """One parquet file from an Arrow table, as Spark's writer makes
-    it: snappy pages, the Spark schema JSON under
+    it: snappy pages, dictionary pages only for low-cardinality columns,
+    the Spark schema JSON under
     ``org.apache.spark.sql.parquet.row.metadata`` (Spark reads it back
     as the file's schema) and the writer version, which makes Spark
     read dates and timestamps as proleptic Gregorian, as pyarrow wrote
@@ -163,6 +192,7 @@ def write_arrow_file(table, path: str, schema: T.StructType) -> None:
         table.replace_schema_metadata(meta),
         path,
         compression="snappy",
+        use_dictionary=_dictionary_columns(table),
         store_schema=False,
     )
 
@@ -172,41 +202,45 @@ def write_parquet(
 ) -> None:
     """``df.write.mode(mode).partitionBy(*partition_by).parquet(path)``,
     on the driver when the frame is small. The inverse of
-    :func:`local_frame`.
+    :func:`local_frame`. ``mode`` is ``error`` (fail if ``path``
+    exists) or ``append`` (add files).
 
     A Spark write job pays ~60 ms of file-writer and committer set-up
-    however few rows it writes. When there is no ``partition_by``,
-    every column type is in ``_ARROW_WRITABLE`` and the optimizer's
-    size estimate (``sizeInBytes``, the figure that decides broadcast
-    joins; reading it runs no job) is at or below
-    ``DRIVER_WRITE_MAX_BYTES``, the rows are collected as Arrow with
-    their Spark partition id instead and written with pyarrow. The
-    files are laid out as Spark lays them out: one
+    however few rows it writes. The rows are collected as Arrow with
+    their Spark partition id instead, and written with pyarrow, when
+    there is no ``partition_by``, every column type is in
+    ``_ARROW_WRITABLE``, the optimized plan has no row-multiplying node
+    (``_ROW_MULTIPLYING``) and its size estimate (``sizeInBytes``, the
+    figure that decides broadcast joins; reading it runs no job) is
+    below ``DRIVER_WRITE_MAX_BYTES``. The estimate is the only bound
+    on what the collect pulls: it can be low for a plan that grows its
+    rows elsewhere, which is why the node check is there.
+
+    The files are laid out as Spark lays them out: one
     ``part-<pid>-<uuid>-c000.snappy.parquet`` per non-empty partition
     plus always partition 0's (empty if it holds no rows), rows in
     partition order, then ``_SUCCESS``. So file counts and per-file
-    contents are the same on both arms. The collect is itself one job,
-    so the driver arm saves time per write, not jobs.
+    contents are the same on both arms, with one exception: rows
+    already on the driver (a ``LocalRelation`` plan, as from
+    ``local_frame``) all read partition 0, because the optimizer folds
+    the partition-id projection into the relation, and go to one file
+    where Spark would slice them into up to one per core. The collect
+    is itself one job, so the driver arm saves time per write, not
+    jobs.
 
-    ``mode`` is ``error`` (fail if ``path`` exists), ``overwrite``
-    (replace it) or ``append`` (add files). Files are written under a
-    ``_temporary-*`` directory of ``path``, which readers skip, and
-    renamed into place once all are written. Cached plans that read
-    ``path`` are refreshed, as Spark's writer refreshes them."""
-    spark = df.sparkSession
-    limit = int(
-        os.environ.get(
-            "SPARK_GRAFT_DRIVER_WRITE_MAX_BYTES", DRIVER_WRITE_MAX_BYTES
-        )
-    )
-    plan = df._jdf.queryExecution().optimizedPlan() if limit > 0 else None
+    Files are written under a ``_temporary-*`` directory of ``path``,
+    which readers skip, and renamed into place once all are written.
+    Cached plans that read ``path`` are refreshed, as Spark's writer
+    refreshes them."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    plan = df._jdf.queryExecution().optimizedPlan()
     driver = (
-        plan is not None
-        and not partition_by
-        and mode in ("error", "overwrite", "append")
-        and _PID not in df.columns
+        not partition_by
         and _arrow_writable(df.schema)
-        and plan.stats().sizeInBytes() <= limit
+        and plan.stats().sizeInBytes() < DRIVER_WRITE_MAX_BYTES
+        and not _ROW_MULTIPLYING.search(plan.treeString())
     )
     if not driver:
         writer = df.write.mode(mode)
@@ -214,11 +248,17 @@ def write_parquet(
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
         return
-    if mode == "error" and os.path.exists(path):
+    if mode != "append" and os.path.exists(path):
         raise FileExistsError(f"path {path} already exists")
-    pieces = _partitions(df, plan.nodeName() == "LocalRelation")
-    if mode == "overwrite" and os.path.exists(path):
-        shutil.rmtree(path)
+    table = df.withColumn(_PID, F.spark_partition_id()).toArrow()
+    pids = table.column(_PID).to_numpy()
+    data = table.drop_columns([_PID])
+    starts = np.flatnonzero(np.diff(pids, prepend=-1)).tolist()
+    pieces = {
+        int(pids[a]): data.slice(a, b - a)
+        for a, b in zip(starts, starts[1:] + [len(pids)])
+    }
+    pieces.setdefault(0, data.slice(0, 0))
     job = uuid.uuid4()
     staging = os.path.join(path, f"_temporary-{job.hex}")
     os.makedirs(staging)
@@ -229,45 +269,7 @@ def write_parquet(
         os.rename(os.path.join(staging, name), os.path.join(path, name))
     os.rmdir(staging)
     open(os.path.join(path, "_SUCCESS"), "w").close()
-    spark.catalog.refreshByPath(path)
-
-
-def _partitions(df: DataFrame, local: bool) -> dict:
-    """``df``'s rows as Arrow, one slice per Spark partition that the
-    writer gives a file: {partition id: rows in order} for every
-    non-empty partition, and partition 0 always."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    if local:
-        # The optimizer folds a projection over a LocalRelation into
-        # the relation, so a partition-id column would read 0 on every
-        # row. The relation's scan spreads its n rows the way
-        # SparkContext.parallelize does: p = min(n, parallelism)
-        # partitions, partition i holding rows [i*n//p, (i+1)*n//p).
-        spark = df.sparkSession
-        data = df.toArrow()
-        n = data.num_rows
-        p = min(
-            max(n, 1),
-            int(
-                spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
-                or spark.sparkContext.defaultParallelism
-            ),
-        )
-        firsts = [i * n // p for i in range(p)]
-        pids = np.searchsorted(firsts, np.arange(n), side="right") - 1
-    else:
-        table = df.withColumn(_PID, F.spark_partition_id()).toArrow()
-        pids = table.column(_PID).to_numpy()
-        data = table.drop_columns([_PID])
-    starts = np.flatnonzero(np.diff(pids, prepend=-1)).tolist()
-    pieces = {
-        int(pids[a]): data.slice(a, b - a)
-        for a, b in zip(starts, starts[1:] + [len(pids)])
-    }
-    pieces.setdefault(0, data.slice(0, 0))
-    return pieces
+    df.sparkSession.catalog.refreshByPath(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

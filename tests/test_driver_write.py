@@ -2,13 +2,13 @@
 
 Every case runs twice, once at the default size gate (small frames are
 collected as Arrow and written by pyarrow on the driver) and once with
-``SPARK_GRAFT_DRIVER_WRITE_MAX_BYTES=0`` (Spark's writer). A file's
+``catalog.DRIVER_WRITE_MAX_BYTES`` set to 0 (Spark's writer). A file's
 ``created_by`` footer field names its writer (``parquet-cpp-arrow`` or
 ``parquet-mr``), which tells the tests which arm ran.
 
 - Rows of every column type the engine writes, with nulls and with
   zero rows, read back equal with ``spark.read.schema(...)``, in the
-  same number of files.
+  same number of files (rows already on the driver: one file).
 - ``compact(4)`` and a range-clustered ``compact`` log the same
   per-file stats.
 - The txnlog data-file schema fallback sees the same Spark types.
@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from relational_query_engine_sql_spark.operators.mutation import ParquetTable
 from relational_query_engine_sql_spark.operators.txnlog import TxnLogTable
 from relational_query_engine_sql_spark.sources import (
+    catalog,
     local_frame,
     write_parquet,
 )
@@ -41,8 +42,7 @@ from relational_query_engine_sql_spark.sources.txnlog_stream import (
     _table_schema,
 )
 
-GATE = "SPARK_GRAFT_DRIVER_WRITE_MAX_BYTES"
-ARMS = {"driver": None, "spark": "0"}
+ARMS = {"driver": catalog.DRIVER_WRITE_MAX_BYTES, "spark": 0}
 
 TYPES = T.StructType(
     [
@@ -90,10 +90,7 @@ ROWS = [
 
 
 def _set_arm(monkeypatch, arm: str) -> None:
-    if ARMS[arm] is None:
-        monkeypatch.delenv(GATE, raising=False)
-    else:
-        monkeypatch.setenv(GATE, ARMS[arm])
+    monkeypatch.setattr(catalog, "DRIVER_WRITE_MAX_BYTES", ARMS[arm])
 
 
 def _files(path: str) -> list[str]:
@@ -127,18 +124,21 @@ def _canon(rows) -> list:
 def test_type_matrix_reads_back_equal_on_both_arms(
     spark, tmp_path, monkeypatch, n
 ):
-    src = local_frame(spark, ROWS[:n], TYPES)
-    want = _canon(src.collect())
+    local = local_frame(spark, ROWS[:n], TYPES)
+    want = _canon(local.collect())
     counts = {}
     for arm in ARMS:
         _set_arm(monkeypatch, arm)
-        path = str(tmp_path / arm)
-        write_parquet(src, path, "error")
-        assert _written_by(path) == {arm}
-        got = spark.read.schema(TYPES).parquet(path).collect()
-        assert _canon(got) == want, arm
-        counts[arm] = len(_files(path))
-    assert counts["driver"] == counts["spark"], counts
+        for name, src in [("local", local), ("spread", local.repartition(2))]:
+            path = str(tmp_path / arm / name)
+            write_parquet(src, path, "error")
+            assert _written_by(path) == {arm}
+            got = spark.read.schema(TYPES).parquet(path).collect()
+            assert _canon(got) == want, (arm, name)
+            counts[arm, name] = len(_files(path))
+    assert counts["driver", "spread"] == counts["spark", "spread"], counts
+    # rows already on the driver all read partition 0: one file
+    assert counts["driver", "local"] == 1, counts
 
 
 @pytest.mark.parametrize(
@@ -156,7 +156,7 @@ def test_file_layout_matches_spark(spark, tmp_path, monkeypatch, build):
     for arm in ARMS:
         _set_arm(monkeypatch, arm)
         path = str(tmp_path / arm)
-        write_parquet(build(spark), path, "overwrite")
+        write_parquet(build(spark), path, "error")
         assert _written_by(path) == {arm}
         assert os.path.exists(os.path.join(path, "_SUCCESS"))
         layout[arm] = [
@@ -233,3 +233,13 @@ def test_error_mode_onto_existing_directory_raises(
     with pytest.raises(Exception, match="already exists"):
         write_parquet(df, path, "error")
     assert _files(path) == before
+
+
+def test_row_multiplying_plan_takes_spark_writer(spark, tmp_path):
+    # the size estimate of an explode is its input's, scaled by row
+    # width: 3 rows in, 3,000 out, estimated far under the gate
+    df = spark.range(3).select(F.explode(F.sequence(F.lit(1), F.lit(1000))))
+    path = str(tmp_path / "t")
+    write_parquet(df, path, "error")
+    assert _written_by(path) == {"spark"}
+    assert spark.read.parquet(path).count() == 3000

@@ -249,7 +249,7 @@ _ALLOWED = {
     "inheritable_thread_target": {("session.py", "run_independent")},
     # Arrow writes go through sources.write_parquet, whose files match
     # Spark's layout and footer
-    "toArrow": {("sources/catalog.py", "_partitions")},
+    "toArrow": {("sources/catalog.py", "write_parquet")},
     "write_table": {("sources/catalog.py", "write_arrow_file")},
 }
 
