@@ -36,9 +36,10 @@ FILE granularity:
   and commits at exactly that version + 1, so losers — including a
   writer whose read-compute window was raced — get
   :class:`CommitConflict` and rebase.
-- Every 10th commit also writes a checkpoint of the full live-file
-  set, so snapshot reconstruction replays at most 10 deltas instead
-  of the whole history (Delta's ``_last_checkpoint`` mechanic).
+- Every 10th commit also writes a checkpoint of the full table state
+  (live-file set and table metadata), so snapshot reconstruction
+  replays at most 10 deltas instead of the whole history (Delta's
+  ``_last_checkpoint`` mechanic).
 
 Reference semantics covered: INSERT / ON CONFLICT DO NOTHING /
 ON CONFLICT DO UPDATE / conditional UPDATE / DELETE
@@ -499,6 +500,24 @@ class TxnLogTable(ParquetTable):
         generated: dict[str, str] | None = None,
         **kwargs,
     ) -> None:
+        # in-flight schema-evolution overrides (append merge_schema):
+        # set only while an evolving write stages its files, so the
+        # staging path conforms/writes against the WIDENED schema the
+        # same commit is about to declare — never persisted, the
+        # metadata action in that commit is the durable record
+        self._pending_schema = None
+        self._pending_cmap: dict | None = None
+        # version-keyed cache of replayed table states (_snapshot; Delta
+        # caches snapshots the same way): a committed version is
+        # immutable, so caching by version is always correct —
+        # concurrent writers create NEW versions, which miss the cache
+        # naturally. Plan-time pruning consults the live set per probe
+        # and the schema per FILE (_typed_part); uncached, the 200-file
+        # sf1 probe spent ~1.1 s (live set) and 5.8 s (schema, per
+        # 8-key lookup) re-parsing log JSON (SCALE.md round-7 notes).
+        # Set before ParquetTable.__init__ so every metadata read works
+        # from the first attribute assignment on.
+        self._snapshots: dict[int, dict] = {}
         super().__init__(*args, **kwargs)
         self.backend = commit_backend or LocalCommitBackend()
         # GENERATED columns declared at creation ({name: SQL expr});
@@ -511,45 +530,18 @@ class TxnLogTable(ParquetTable):
                 raise ValueError(f"generated column not in schema: {g}")
             if g in self.keys:
                 raise ValueError(f"key column cannot be generated: {g}")
-        # in-flight schema-evolution overrides (append merge_schema):
-        # set only while an evolving write stages its files, so the
-        # staging path conforms/writes against the WIDENED schema the
-        # same commit is about to declare — never persisted, the
-        # metadata action in that commit is the durable record
-        self._pending_schema = None
-        self._pending_cmap: dict | None = None
-        # version-keyed SNAPSHOT CACHE for the replayed live-file map
-        # (Delta caches snapshots the same way): a table version is
-        # immutable once committed, so caching by version is always
-        # correct — concurrent writers create NEW versions, which miss
-        # the cache naturally. Without it every plan-time probe
-        # (scan_candidates / lookup / read) re-parses the whole log;
-        # at the 200-file sf1 probe that was ~1.1 s of driver-side
-        # JSON per call (SCALE.md round-7 notes).
-        self._snap_cache: dict[int, dict] = {}
-        # same idea for the effective schema: _schema_at walks log
-        # entries (json.load per version — entries carry KB-scale
-        # bloom hexes), and the plan-time pruning path consults the
-        # schema once per FILE per probe (_typed_part). At the 200-file
-        # sf1 probe the uncached walk was 5.8 s of redundant JSON per
-        # 8-key lookup.
-        self._schema_cache: dict[int, object] = {}
         # sidecar-path -> {file relpath: mask hex}; sidecar files are
         # immutable once committed (staged with their data dir), so
         # the cache never invalidates
         self._bloom_sidecars: dict[str, dict] = {}
-        # version-keyed COLUMN-MAPPING state cache (same immutability
-        # argument as the snapshot/schema caches above)
-        self._cmap_cache: dict[int, dict] = {}
         # Validate only the CONSTRUCTOR-declared partitioning against
         # the constructor-declared base schema. The partition_by
-        # property resolves the LOG's evolved spec once the caches
-        # above exist — a spec set later (set_partitioning) may name a
-        # column added via add_columns, which the base schema predates;
-        # validating the resolved spec here made every such table
-        # unopenable through the original constructor schema. The
-        # evolved spec is validated against the evolved schema at
-        # set_partitioning time.
+        # property resolves the LOG's evolved spec — a spec set later
+        # (set_partitioning) may name a column added via add_columns,
+        # which the base schema predates; validating the resolved spec
+        # here made every such table unopenable through the original
+        # constructor schema. The evolved spec is validated against the
+        # evolved schema at set_partitioning time.
         bad = [
             c
             for c in (self.__dict__.get("_ctor_partition_by") or [])
@@ -575,12 +567,9 @@ class TxnLogTable(ParquetTable):
 
     @property
     def partition_by(self) -> list[str]:
-        # during ParquetTable.__init__ the txnlog caches don't exist
-        # yet — resolve to the constructor value until they do
-        if "_cmap_cache" in self.__dict__:
-            spec = self._cmap_at(None).get("part_spec")
-            if spec is not None:
-                return list(spec)
+        spec = self._cmap_at(None).get("part_spec")
+        if spec is not None:
+            return list(spec)
         return list(self.__dict__.get("_ctor_partition_by") or [])
 
     @partition_by.setter
@@ -651,54 +640,108 @@ class TxnLogTable(ParquetTable):
     def exists(self) -> bool:
         return self.current_version() is not None
 
-    def _live(self, version: int | None = None) -> dict[str, dict]:
-        """relpath -> {rows, stats} of the files live at ``version``,
-        replayed from the newest checkpoint at or before it."""
-        if version is None:
-            version = self.current_version()
-        if version is None:
-            return {}
-        cached = self._snap_cache.get(version)
-        if cached is not None:
-            # shallow copy: callers may add/pop entries of THEIR view;
-            # per-file meta dicts are treated as immutable everywhere
-            return dict(cached)
+    def _snapshot(self, version: int) -> dict:
+        """The whole table state at committed ``version``, in the
+        checkpoint payload's shape: ``live`` (relpath -> file meta),
+        ``schema`` (the logged StructType, None if none was ever
+        logged), ``constraints`` (name -> CHECK expr), ``txn`` (app id
+        -> newest streaming-txn version), ``cmap`` (column-mapping
+        state) and ``rowid`` ({bases, hwm} of the lazy row-id
+        assignment). One walk back to the newest version that is
+        cached or checkpointed, then ONE forward fold of the entries
+        after it (Delta's snapshot = checkpoint + log tail), so no
+        read replays more than CHECKPOINT_EVERY entries. The returned
+        state is shared with the cache: callers never mutate it."""
+        import pyspark.sql.types as T
+
+        snap = self._snapshots.get(version)
+        if snap is not None:
+            return snap
         if not os.path.exists(self._log_path(version)):
             raise ValueError(f"no such version: {version}")
-        start, live = 0, {}
+        start, seed = 0, None
         for v in range(version, -1, -1):
-            ckpt = self._ckpt_payload(v)
-            if ckpt is not None:
-                live, start = ckpt["live"], v + 1
+            seed = self._snapshots.get(v)
+            if seed is None:
+                seed = self._ckpt_payload(v)
+                if seed is not None:
+                    seed["schema"] = T.StructType.fromJson(seed["schema"])
+            if seed is not None:
+                start = v + 1
                 break
+        if seed is None:
+            seed = {
+                "live": {},
+                "schema": None,
+                "constraints": {},
+                "txn": {},
+                "cmap": _default_cmap(),
+                "rowid": {"bases": {}, "hwm": 0},
+            }
+        live = dict(seed["live"])
+        schema, schema_json = seed["schema"], None
+        constraints = dict(seed["constraints"])
+        txn = dict(seed["txn"])
+        cmap = seed["cmap"]
+        bases = dict(seed["rowid"]["bases"])
+        hwm = seed["rowid"]["hwm"]
         for v in range(start, version + 1):
-            entry = self._entry(v)
-            for a in entry["actions"]:
-                if "add" in a:
-                    live[a["add"]["path"]] = {
-                        "rows": a["add"]["rows"],
-                        "stats": a["add"].get("stats"),
+            for a in self._entry(v)["actions"]:
+                add = a.get("add")
+                if add:
+                    live[add["path"]] = {
+                        "rows": add["rows"],
+                        "stats": add.get("stats"),
                         **(
-                            {"bloom": a["add"]["bloom"]}
-                            if a["add"].get("bloom")
-                            else {}
+                            {"bloom": add["bloom"]} if add.get("bloom") else {}
                         ),
-                        **(
-                            {"part": a["add"]["part"]}
-                            if a["add"].get("part")
-                            else {}
-                        ),
-                        **({"dv": True} if a["add"].get("dv") else {}),
+                        **({"part": add["part"]} if add.get("part") else {}),
+                        **({"dv": True} if add.get("dv") else {}),
                     }
+                    # lazy row ids: each fresh data add takes the next
+                    # [hwm, hwm+rows) range in commit order; DV files,
+                    # materialized rewrites and re-referenced paths
+                    # (restore/clone keep the FIRST assignment) take none
+                    if not (
+                        add.get("dv")
+                        or add.get("rowid_materialized")
+                        or add["path"] in bases
+                    ):
+                        bases[add["path"]] = hwm
+                        hwm += add.get("rows") or 0
                 elif "remove" in a:
                     live.pop(a["remove"]["path"], None)
-                # "metadata" actions don't touch the file set
-        self._snap_cache[version] = live
-        if len(self._snap_cache) > 8:  # keep recent snapshots only
-            self._snap_cache.pop(min(self._snap_cache))
-        return dict(live)
-
-    # -- schema evolution (Delta metadata-action shape) ---------------------
+                meta = a.get("metadata")
+                if meta:
+                    # every metadata action states the full schema; the
+                    # cmap state only when the action carries it
+                    schema_json = meta["schema"]
+                    cmap = meta.get("cmap", cmap)
+                c = a.get("constraint")
+                if c:
+                    if c.get("drop"):
+                        constraints.pop(c["name"], None)
+                    else:
+                        constraints[c["name"]] = c["expr"]
+                mark = a.get("txn")
+                if mark:
+                    txn[mark["app"]] = max(
+                        mark["version"], txn.get(mark["app"], mark["version"])
+                    )
+        if schema_json is not None:
+            schema = T.StructType.fromJson(schema_json)
+        snap = {
+            "live": live,
+            "schema": schema,
+            "constraints": constraints,
+            "txn": txn,
+            "cmap": cmap,
+            "rowid": {"bases": bases, "hwm": hwm},
+        }
+        self._snapshots[version] = snap
+        if len(self._snapshots) > 8:  # keep recent versions only
+            self._snapshots.pop(min(self._snapshots), None)
+        return snap
 
     def _ckpt_payload(self, v: int) -> dict | None:
         """Checkpoint payload at exactly version ``v``, or None."""
@@ -707,50 +750,29 @@ class TxnLogTable(ParquetTable):
         with open(self._ckpt_path(v), encoding="utf-8") as f:
             return json.load(f)
 
+    def _live(self, version: int | None = None) -> dict[str, dict]:
+        """relpath -> {rows, stats} of the files live at ``version``."""
+        if version is None:
+            version = self.current_version()
+        if version is None:
+            return {}
+        # shallow copy: callers may add/pop entries of THEIR view;
+        # per-file meta dicts are treated as immutable everywhere
+        return dict(self._snapshot(version)["live"])
+
+    # -- schema evolution (Delta metadata-action shape) ---------------------
+
     def _schema_at(self, version: int | None):
         """Effective schema at ``version``: the newest metadata action
-        at or before it, else the constructor schema. Checkpoints fold
-        the accumulated schema in (Delta checkpoints carry metaData
-        for the same reason), so the newest-first walk reads at most
-        CHECKPOINT_EVERY entries, not the whole history; checkpoints
-        written before this field existed just don't stop the walk."""
-        import pyspark.sql.types as T
-
-        pending = getattr(self, "_pending_schema", None)
-        if version is None and pending is not None:
-            return pending
+        at or before it, else the constructor schema."""
+        if version is None and self._pending_schema is not None:
+            return self._pending_schema
         if version is None:
             version = self.current_version()
         if version is None:
             return self._base_schema
-        cache = getattr(self, "_schema_cache", None)
-        if cache is not None and version in cache:
-            return cache[version]
-        out = None
-        for v in range(version, -1, -1):
-            ck = self._ckpt_payload(v)
-            if ck is not None and "schema" in ck:
-                # the checkpoint at v is written AFTER commit v and
-                # already reflects any metadata action in entry v
-                out = T.StructType.fromJson(ck["schema"])
-                break
-            if not os.path.exists(self._log_path(v)):
-                continue
-            entry = self._entry(v)
-            for a in entry["actions"]:
-                if "metadata" in a:
-                    out = T.StructType.fromJson(a["metadata"]["schema"])
-                    break
-            if out is not None:
-                break
-        if out is None:
-            out = self._base_schema
-        # version-keyed: the schema AT a committed version is immutable
-        if cache is not None:
-            cache[version] = out
-            if len(cache) > 8:
-                cache.pop(min(cache))
-        return out
+        schema = self._snapshot(version)["schema"]
+        return self._base_schema if schema is None else schema
 
     # -- column mapping + protocol (Delta columnMapping 'name' mode) --------
     #
@@ -767,44 +789,16 @@ class TxnLogTable(ParquetTable):
     # written under any era keeps pruning under every later one.
 
     def _cmap_at(self, version: int | None) -> dict:
-        """Column-mapping state at ``version``: the newest checkpoint
-        at or before it (checkpoints fold the state like they fold
-        schema), else the newest metadata action CARRYING the state
-        (actions without the field — pre-feature writers, plain
-        add_columns — are transparent to the walk), else the default.
-        Pre-feature checkpoints stop the walk with the default: no
-        rename can predate the feature that records it."""
-        pending = getattr(self, "_pending_cmap", None)
-        if version is None and pending is not None:
-            return pending
+        """Column-mapping state at ``version``: the newest metadata
+        action CARRYING the state (actions without the field — plain
+        add_columns — leave it unchanged), else the default."""
+        if version is None and self._pending_cmap is not None:
+            return self._pending_cmap
         if version is None:
             version = self.current_version()
         if version is None:
             return _default_cmap()
-        cached = self._cmap_cache.get(version)
-        if cached is not None:
-            return cached
-        out = None
-        for v in range(version, -1, -1):
-            ck = self._ckpt_payload(v)
-            if ck is not None:
-                out = ck.get("cmap", _default_cmap())
-                break
-            if not os.path.exists(self._log_path(v)):
-                continue
-            entry = self._entry(v)
-            for a in entry["actions"]:
-                if "metadata" in a and "cmap" in a["metadata"]:
-                    out = a["metadata"]["cmap"]
-                    break
-            if out is not None:
-                break
-        if out is None:
-            out = _default_cmap()
-        self._cmap_cache[version] = out
-        if len(self._cmap_cache) > 8:
-            self._cmap_cache.pop(min(self._cmap_cache))
-        return out
+        return self._snapshot(version)["cmap"]
 
     def _mapping_at(self, version: int | None) -> dict[str, str]:
         """logical -> physical for the columns whose names differ."""
@@ -1145,42 +1139,15 @@ class TxnLogTable(ParquetTable):
     # -- CHECK constraints (Delta ALTER TABLE ADD CONSTRAINT shape) ----------
 
     def constraints(self, version: int | None = None) -> dict[str, str]:
-        """Active CHECK constraints at ``version``: the accumulated
-        constraint set from the newest checkpoint at or before it,
-        plus the adds/drops of the entries after — at most
-        CHECKPOINT_EVERY entry reads per call. This matters because
-        ``_write_files`` consults the active set on EVERY write: an
-        un-checkpointed full-history walk would cost O(versions) file
-        reads per write, O(V^2) over a table's lifetime, against the
-        design goal that checkpoints bound replay. Checkpoints written
-        before the field existed fall back to the full oldest-first
-        walk (log entries are never deleted, so it is always
-        complete)."""
+        """Active CHECK constraints at ``version`` (a fresh dict).
+        ``_write_files`` consults the active set on EVERY write; the
+        snapshot replay keeps that at most CHECKPOINT_EVERY entry reads
+        per new version instead of an O(versions) walk per write."""
         if version is None:
             version = self.current_version()
-        out: dict[str, str] = {}
         if version is None:
-            return out
-        start = 0
-        for v in range(version, -1, -1):
-            ck = self._ckpt_payload(v)
-            if ck is not None and "constraints" in ck:
-                out = dict(ck["constraints"])
-                start = v + 1
-                break
-        for v in range(start, version + 1):
-            if not os.path.exists(self._log_path(v)):
-                continue
-            entry = self._entry(v)
-            for a in entry["actions"]:
-                c = a.get("constraint")
-                if not c:
-                    continue
-                if c.get("drop"):
-                    out.pop(c["name"], None)
-                else:
-                    out[c["name"]] = c["expr"]
-        return out
+            return {}
+        return dict(self._snapshot(version)["constraints"])
 
     def add_constraint(self, name: str, expr: str) -> int:
         """``ALTER TABLE ADD CONSTRAINT name CHECK (expr)``: existing
@@ -2109,30 +2076,21 @@ class TxnLogTable(ParquetTable):
                 shutil.rmtree(os.path.dirname(p), ignore_errors=True)
             raise CommitConflict(f"v{target} committed concurrently")
         if target % CHECKPOINT_EVERY == 0 and target > 0:
-            # checkpoints publish atomically (temp + rename): a reader
-            # racing the writer — or a crash mid-write — must never
-            # observe a torn checkpoint, which would make every
-            # version >= it unreadable until manually deleted. Besides
-            # the live-file set, the payload folds in the accumulated
-            # TABLE METADATA — schema, CHECK constraints, streaming
-            # txn markers (exactly what Delta checkpoints carry as
-            # metaData/SetTransaction) — so _schema_at/constraints/
-            # last_txn_version replay <= CHECKPOINT_EVERY entries
-            # instead of walking the whole history on every call.
+            # the checkpoint IS the replayed snapshot at target: the
+            # live-file set plus the accumulated table metadata (schema,
+            # CHECK constraints, streaming txn markers, column mapping,
+            # row-id assignment — what Delta checkpoints carry as
+            # metaData/SetTransaction), so a later snapshot seeds here
+            # and replays <= CHECKPOINT_EVERY entries. The schema falls
+            # back to the constructor's when none was ever logged.
+            # Published atomically (temp + rename): a reader racing the
+            # writer — or a crash mid-write — must never observe a torn
+            # checkpoint, which would make every version >= it
+            # unreadable until manually deleted.
             payload = {
-                "live": self._live(target),
+                **self._snapshot(target),
                 "schema": self._schema_at(target).jsonValue(),
-                "constraints": self.constraints(target),
-                "txn": self._txn_markers(target),
-                "cmap": self._cmap_at(target),
             }
-            if self.row_tracking_enabled(target):
-                # fold the lazy row-id assignment like the live-file
-                # set: later walks seed here instead of replaying the
-                # whole history (the O(entries) cost the SCALE notes
-                # attribute to a checkpoint-less table)
-                bases, hwm = self._row_id_bases(target)
-                payload["rowid"] = {"bases": bases, "hwm": hwm}
             self.backend.publish_atomic(
                 self._ckpt_path(target), json.dumps(payload)
             )
@@ -2700,31 +2658,11 @@ class TxnLogTable(ParquetTable):
         )
 
     def _txn_markers(self, version: int | None) -> dict[str, int]:
-        """app_id -> newest txn version at ``version``, replayed from
-        the newest checkpoint carrying the ``txn`` map (at most
-        CHECKPOINT_EVERY entry reads); pre-field checkpoints fall back
-        to the full walk."""
-        out: dict[str, int] = {}
+        """app_id -> newest txn version at ``version`` (a fresh dict),
+        read from the replayed snapshot."""
         if version is None:
-            return out
-        start = 0
-        for v in range(version, -1, -1):
-            ck = self._ckpt_payload(v)
-            if ck is not None and "txn" in ck:
-                out = dict(ck["txn"])
-                start = v + 1
-                break
-        for v in range(start, version + 1):
-            if not os.path.exists(self._log_path(v)):
-                continue
-            entry = self._entry(v)
-            for a in entry["actions"]:
-                t = a.get("txn")
-                if t:
-                    out[t["app"]] = max(
-                        t["version"], out.get(t["app"], t["version"])
-                    )
-        return out
+            return {}
+        return dict(self._snapshot(version)["txn"])
 
     def last_txn_version(self, app_id: str) -> int | None:
         """Newest streaming-transaction version committed for
@@ -2732,9 +2670,7 @@ class TxnLogTable(ParquetTable):
         idempotence handshake for exactly-once micro-batch sinks.
         Checkpoints fold the accumulated marker map in (Delta
         checkpoints carry SetTransaction for the same reason), so the
-        walk is bounded; log entries are never deleted (vacuum removes
-        data files only), so the fallback walk always finds the
-        marker."""
+        replay is bounded."""
         return self._txn_markers(self.current_version()).get(app_id)
 
     def append_once(
@@ -3312,9 +3248,8 @@ class TxnLogTable(ParquetTable):
     # separate non-materialized file set so they take fresh lazy ids
     # above the high-water mark (change HISTORY is the CDF's job; the
     # id names the row itself). At 100 TB
-    # the lazy walk is metadata-plane (one pass over log JSON, no data
-    # reads); a production build would fold (bases, hwm) into the
-    # periodic checkpoint exactly like the live-file set.
+    # the lazy walk is metadata-plane (log JSON only, no data reads),
+    # and every checkpoint folds (bases, hwm) like the live-file set.
 
     def enable_row_tracking(self) -> int:
         """Feature-gate commit: marks the table row-tracked and bumps
@@ -3346,44 +3281,20 @@ class TxnLogTable(ParquetTable):
     def _row_id_bases(
         self, version: int | None = None
     ) -> tuple[dict[str, int], int]:
-        """(relpath -> base row id, high-water mark) at ``version``:
-        one metadata-plane walk of the log in commit order, seeded
-        from the newest checkpoint carrying folded rowid state (so the
-        walk replays <= CHECKPOINT_EVERY entries, like _live). Adds
-        flagged ``rowid_materialized`` carry their ids physically and
-        are skipped; a path re-referenced by restore/clone keeps its
-        FIRST assignment (the log prefix is immutable, so this is
-        stable across any later history)."""
+        """(relpath -> base row id, high-water mark) at ``version``, a
+        fresh dict. The snapshot folds the assignment for every table,
+        tracked or not, so a table that turns tracking on later gets
+        the same ids a full-history walk would give. Adds flagged
+        ``rowid_materialized`` carry their ids physically and are
+        skipped; a path re-referenced by restore/clone keeps its FIRST
+        assignment (the log prefix is immutable, so this is stable
+        across any later history)."""
         if version is None:
             version = self.current_version()
-        bases: dict[str, int] = {}
-        hwm = 0
         if version is None:
-            return bases, hwm
-        start = 0
-        for v in range(version, -1, -1):
-            ck = self._ckpt_payload(v)
-            if ck is not None and "rowid" in ck:
-                bases = dict(ck["rowid"]["bases"])
-                hwm = ck["rowid"]["hwm"]
-                start = v + 1
-                break
-        for v in range(start, version + 1):
-            if not os.path.exists(self._log_path(v)):
-                continue
-            entry = self._entry(v)
-            for a in entry["actions"]:
-                add = a.get("add")
-                if (
-                    not add
-                    or add.get("dv")
-                    or add.get("rowid_materialized")
-                    or add["path"] in bases
-                ):
-                    continue
-                bases[add["path"]] = hwm
-                hwm += add.get("rows") or 0
-        return bases, hwm
+            return {}, 0
+        rowid = self._snapshot(version)["rowid"]
+        return dict(rowid["bases"]), rowid["hwm"]
 
     def _attach_row_ids(
         self, data: dict[str, dict], version: int | None

@@ -582,29 +582,21 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
         return _StagedFile(rel, table.num_rows, stats or None)
 
     # -- driver side --------------------------------------------------------
-    def _resolved_table_schema(self):
-        """The TABLE's authoritative schema, never the stream's (see
-        ``_table_schema``); only a virgin table with no data takes the
-        stream's, which then legitimately DEFINES the table. Without
-        this resolution the throwaway commit table's ``_base_schema``
-        would be the stream DataFrame's schema, and a sink commit
-        crossing a CHECKPOINT_EVERY boundary would persist that ad-hoc
-        schema into the checkpoint's ``schema`` field — silently
-        rewriting the table's effective schema for every subsequent
-        reader."""
-        return _table_schema(_log(self.path)) or self.schema
-
     def _table(self):
-        from ..operators.txnlog import TxnLogTable
-
-        log = _log(self.path)
+        """The ONE ``TxnLogTable`` a micro-batch commit works on: it
+        runs the protocol/mapping gates, resolves the schema, and
+        commits, so the log is replayed once per batch (the snapshot
+        cache carries it through ``constraints``, ``last_txn_version``
+        and the checkpoint ``_commit`` may write). Driver-side metadata
+        work only — no SparkSession is needed, and none is passed."""
+        t = _log(self.path)
         # writer protocol 3 = row tracking, which the sink satisfies
         # by construction: its commits are pure appends whose add
         # actions carry exact rowcounts, which is all the lazy row-id
         # assignment needs — streaming ingest into a row-tracked table
         # gives every record a stable id with zero coordination
-        log._check_protocol(None, write=True)
-        state = log._cmap_at(None)
+        t._check_protocol(None, write=True)
+        state = t._cmap_at(None)
         if state.get("map"):
             # executors stage files named by the STREAM's (logical)
             # columns and record stats under those names — both would
@@ -628,7 +620,10 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
                 "columns (the sink path bypasses generation and "
                 "validation); ingest via foreachBatch + append_once"
             )
-        resolved = self._resolved_table_schema()
+        # The TABLE's authoritative schema, never the stream's (see
+        # ``_table_schema``); only a virgin table with no data takes
+        # the stream's, which then legitimately DEFINES the table.
+        resolved = _table_schema(t) or self.schema
         # conform-or-reject: the stream must carry exactly the table's
         # columns with the table's types (order and nullability are
         # immaterial — files are read by name under an explicit
@@ -648,12 +643,13 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
                 f"stream has {got} — align the stream's columns/types "
                 "or evolve the table first (add_columns)"
             )
-        # driver-side metadata work only — no SparkSession needed, and
-        # none is passed (read paths are never touched here). The
-        # RESOLVED schema (not the stream's) becomes _base_schema, so
-        # any checkpoint this commit writes persists the table's own
-        # schema.
-        return TxnLogTable(None, self.path, resolved, ["__none__"])
+        # the RESOLVED schema becomes the base schema, so a commit
+        # crossing a CHECKPOINT_EVERY boundary persists the table's own
+        # schema into the checkpoint — never the empty reader schema
+        # or the stream's, either of which would silently rewrite the
+        # table's effective schema for every later reader
+        t.schema = resolved
+        return t
 
     def commit(self, messages, batchId: int) -> None:
         from ..operators.txnlog import CommitConflict

@@ -3,6 +3,8 @@ memory sink, results pinned to the batch equivalents."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1207,11 +1209,7 @@ def test_stream_sink_conforms_to_table_schema(spark, tmp_path):
             [schema["val"], schema["k"], schema["grp"]]
         ),
     )
-    assert [f.name for f in w._resolved_table_schema().fields] == [
-        "k",
-        "grp",
-        "val",
-    ]
+    assert [f.name for f in w._table().schema.fields] == ["k", "grp", "val"]
 
 
 def test_txnlog_source_windowed_state_survives_restart(
@@ -1376,3 +1374,67 @@ def test_txnlog_sink_starts_on_a_thread_without_active_session(
     t.join()
     assert "err" not in out, out.get("err")
     assert out["rows"]
+
+
+def test_txnlog_sink_commit_reads_each_entry_once(tmp_path, monkeypatch):
+    """One sink micro-batch commit replays the log once: on a table 9
+    entries past its checkpoint, the protocol/mapping gates, the
+    schema resolution, the constraint and txn-marker checks and the
+    checkpoint the commit writes share one table, so no log entry is
+    read twice. Driver-side only: the sink stages Arrow files itself,
+    so no session is involved."""
+    from collections import Counter
+
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    import relational_query_engine_sql_spark.operators.txnlog as txn
+    from relational_query_engine_sql_spark.sources.txnlog_stream import (
+        TxnLogStreamWriter,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("v", T.StringType()),
+        ]
+    )
+    path = str(tmp_path / "table")
+
+    def batch(i):
+        return pa.record_batch(
+            [pa.array([i], pa.int64()), pa.array([f"r{i}"], pa.string())],
+            names=["k", "v"],
+        )
+
+    def sink_commit(i):
+        w = TxnLogStreamWriter({"path": path, "keys": "k"}, schema)
+        w.commit([w.write(iter([batch(i)]))], i)
+
+    every = txn.CHECKPOINT_EVERY
+    for i in range(2 * every):  # v0 .. v(2*every-1)
+        sink_commit(i)
+    probe = txn.TxnLogTable(None, path, schema, [])
+    head = probe.current_version()
+    assert head == 2 * every - 1
+    assert os.path.exists(probe._ckpt_path(every))
+    assert not os.path.exists(probe._ckpt_path(head))
+
+    reads: Counter = Counter()
+    real_entry = txn.TxnLogTable._entry
+
+    def counting_entry(self, v):
+        reads[v] += 1
+        return real_entry(self, v)
+
+    monkeypatch.setattr(txn.TxnLogTable, "_entry", counting_entry)
+    sink_commit(2 * every)  # commits v(2*every): a checkpoint crossing
+    assert probe.current_version() == 2 * every
+    assert os.path.exists(probe._ckpt_path(2 * every))
+    assert reads, "the commit replayed nothing"
+    assert max(reads.values()) == 1, dict(reads)
+    assert set(reads) <= set(range(every + 1, 2 * every + 1))
+    # the checkpoint persists the table's schema and every txn marker
+    state = txn.TxnLogTable(None, path, T.StructType([]), [])
+    assert state._schema_at(None).fieldNames() == ["k", "v"]
+    assert state._txn_markers(2 * every) == {"txnlog-sink": 2 * every}

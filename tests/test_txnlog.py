@@ -196,37 +196,93 @@ def test_time_travel_and_history(spark, base, tmp_path):
 def test_checkpoint_replay_matches_incremental(
     spark, base, tmp_path, monkeypatch
 ):
-    """Cross CHECKPOINT_EVERY commits; the checkpointed replay must
-    yield the same live set (and rows) as a from-zero replay.
-    CHECKPOINT_EVERY is lowered to 3 so crossing it costs 3 commits,
-    not 10 — the property is the crossing, not the cadence."""
+    """Cross CHECKPOINT_EVERY commits with schema, constraint, txn
+    marker, column-mapping and row-tracking changes; at every version
+    the checkpoint-seeded replay must yield the same WHOLE table state
+    as a from-zero replay. Each replay runs on a fresh table, so no
+    cached snapshot stands in for either. CHECKPOINT_EVERY is lowered
+    to 3 so crossing it costs 3 commits, not 10 — the property is the
+    crossing, not the cadence."""
+    from collections import Counter
+
     import relational_query_engine_sql_spark.operators.txnlog as txn
 
     monkeypatch.setattr(txn, "CHECKPOINT_EVERY", 3)
-    t = TxnLogTable(spark, str(tmp_path / "t"), SCHEMA, ["k"])
-    t.init(base)
-    for i in range(3):  # v3 crosses the (patched) CHECKPOINT_EVERY
-        t.upsert(_rows(spark, [(i, f"u{i}", float(i))]))
-    v = t.current_version()
-    assert v == 3
-    ckpts = [
+    path = str(tmp_path / "t")
+    t = TxnLogTable(spark, path, SCHEMA, ["k"])
+    t.enable_row_tracking()  # v0
+    t.init(base)  # v1
+    t.upsert(_rows(spark, [(0, "u0", 0.0)]))  # v2
+    t.add_columns({"note": "string"})  # v3: checkpoint
+    t.add_constraint("nonneg", "val >= 0")  # v4
+    assert t.append_once(
+        _rows(spark, [(1000, "u1", 1.0)]).withColumn("note", F.lit("x")),
+        "app",
+        7,
+    )  # v5
+    t.upsert(
+        _rows(spark, [(2, "u2", 2.0)]).withColumn("note", F.lit("y"))
+    )  # v6: checkpoint
+    t.append(
+        _rows(spark, [(1001, "n", 3.0)]).withColumn("note", F.lit("z"))
+    )  # v7
+    head = t.current_version()
+    assert head == 7
+    ckpts = sorted(
         f
         for f in os.listdir(t._log_dir())
         if f.endswith(".checkpoint.json")
-    ]
-    assert ckpts, "no checkpoint written across the crossing commits"
-    # replay from zero by hiding the checkpoint files
-    from_ckpt = t._live(v)
-    for c in ckpts:
+    )
+    assert ckpts == [os.path.basename(t._ckpt_path(v)) for v in (3, 6)]
+    assert set(t._ckpt_payload(6)) == {
+        "live", "schema", "constraints", "txn", "cmap", "rowid"
+    }
+
+    reads: Counter = Counter()
+    real_entry = TxnLogTable._entry
+
+    def counting_entry(self, v):
+        reads[v] += 1
+        return real_entry(self, v)
+
+    monkeypatch.setattr(TxnLogTable, "_entry", counting_entry)
+
+    def states():
+        # newest first, so each version seeds from its own checkpoint
+        # (or from zero), never from an older version's cached state
+        fresh = TxnLogTable(spark, path, SCHEMA, ["k"])
+        return {
+            v: (
+                fresh._live(v),
+                fresh._schema_at(v),
+                fresh._cmap_at(v),
+                fresh.constraints(v),
+                fresh._txn_markers(v),
+                fresh._row_id_bases(v),
+            )
+            for v in range(head, -1, -1)
+        }
+
+    from_ckpt = states()
+    assert reads[3] == reads[6] == 0 and reads[7] == 1  # seeded
+    reads.clear()
+    for c in ckpts:  # replay from zero by hiding the checkpoint files
         os.rename(
             os.path.join(t._log_dir(), c), os.path.join(t._log_dir(), c + ".bak")
         )
-    from_zero = t._live(v)
+    from_zero = states()
     for c in ckpts:
         os.rename(
             os.path.join(t._log_dir(), c + ".bak"), os.path.join(t._log_dir(), c)
         )
+    assert reads[0] == head + 1  # every version replayed from v0
     assert from_ckpt == from_zero
+    live, schema, cmap, cons, markers, (bases, hwm) = from_zero[head]
+    assert schema.fieldNames() == ["k", "grp", "val", "note"]
+    assert cmap.get("row_tracking") is True
+    assert cons == {"nonneg": "val >= 0"}
+    assert markers == {"app": 7}
+    assert live and bases and hwm >= 100  # init's rows took lazy ids
     assert t.read().filter(F.col("grp").startswith("u")).count() == 3
 
 

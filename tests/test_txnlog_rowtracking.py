@@ -321,23 +321,32 @@ def test_format_reader_row_ids_requires_feature(spark, sf_small, tmp_path):
         ).load().collect()
 
 
-def test_checkpoint_folds_rowid_state(spark, sf_small, tmp_path):
+@pytest.mark.parametrize("enable_at", ["before_init", "after_v10"])
+def test_checkpoint_folds_rowid_state(spark, sf_small, tmp_path, enable_at):
     """Commit past CHECKPOINT_EVERY: the checkpoint payload carries
-    folded (bases, hwm), the seeded walk equals a raw full-history
-    walk, and a ``rowIds`` format read returns the library path's ids
-    (format-reader parity)."""
+    folded (bases, hwm) whether tracking was on before it or turned on
+    only after it, the seeded walk (on this table and on a fresh one)
+    equals a raw full-history walk, and a ``rowIds`` format read
+    returns the library path's ids (format-reader parity)."""
     src = _src(spark, sf_small)
     t = TxnLogTable(
         spark, str(tmp_path / "ckf"), src.schema, ["s_suppkey"]
     )
-    t.enable_row_tracking()
+    if enable_at == "before_init":
+        t.enable_row_tracking()  # v0
     keys = sorted(
         r.s_suppkey for r in src.select("s_suppkey").collect()
-    )[:12]
+    )[:10]
+    assert len(keys) == 10
     t.init(_sorted1(src.filter(F.col("s_suppkey") == keys[0])))
-    for k in keys[1:]:
+    for k in keys[1:-1]:
         t.append(_sorted1(src.filter(F.col("s_suppkey") == k)))
+    while t.current_version() < 10:  # rewrites reach the checkpoint
+        t.upsert(_sorted1(src.filter(F.col("s_suppkey") == keys[0])))
     assert os.path.exists(t._ckpt_path(10))
+    if enable_at == "after_v10":
+        t.enable_row_tracking()  # v11
+    t.append(_sorted1(src.filter(F.col("s_suppkey") == keys[-1])))
     with open(t._ckpt_path(10), encoding="utf-8") as f:
         ck = json.load(f)
     assert "rowid" in ck and ck["rowid"]["hwm"] > 0
@@ -358,8 +367,9 @@ def test_checkpoint_folds_rowid_state(spark, sf_small, tmp_path):
                 continue
             raw_bases[add["path"]] = raw_hwm
             raw_hwm += add.get("rows") or 0
-    bases, hwm = t._row_id_bases()
-    assert (bases, hwm) == (raw_bases, raw_hwm)
+    assert t._row_id_bases() == (raw_bases, raw_hwm)
+    fresh = TxnLogTable(spark, t.path, src.schema, ["s_suppkey"])
+    assert fresh._row_id_bases() == (raw_bases, raw_hwm)
     _register(spark)
     via_format = {
         r.s_suppkey: r[ROWID_COL]
