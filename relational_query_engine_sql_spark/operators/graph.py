@@ -36,13 +36,11 @@ state survives executor loss.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources import local_frame
+from ..sources import collect_at_most, local_frame
 
 # Edge-count gate for the driver-side union-find fast path. Near-dup
 # edge sets are usually tiny relative to the corpus (pairs only exist
@@ -50,27 +48,22 @@ from ..sources import local_frame
 # at 100 TB they can be billions of rows, so the driver path is
 # GATED — above the gate the distributed loop below runs unchanged.
 # 500k edges ≈ 8 MB of long pairs, well under any driver budget.
-# Read at call time so tests (and deployments) can retune per run.
-def _driver_max_edges() -> int:
-    return int(
-        os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "500000")
-    )
+# Read at call time, so 0 (set on the module) forces the loop.
+DRIVER_MAX_EDGES = 500_000
 
 
 _INTEGRAL = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
 
 
-def _driver_components(edges: DataFrame, pdf=None) -> DataFrame:
-    """Union-find over a collected edge list — exact min-label.
+def _driver_components(edges: DataFrame, table) -> DataFrame:
+    """Union-find over ``table``, the collected (a, b) edge list of
+    ``edges`` — exact min-label.
 
     Python int comparison is identical to Spark's integral-type
     ordering, and "minimum node id per component" has a unique answer,
     so the result is bit-for-bit the distributed loop's fixpoint. The
-    caller gates on edge count and integral node types (and may pass
-    the already-collected pandas edge list).
+    caller gates on edge count and integral node types.
     """
-    if pdf is None:
-        pdf = edges.toPandas()
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -81,8 +74,8 @@ def _driver_components(edges: DataFrame, pdf=None) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    a_vals = pdf["a"].tolist()
-    b_vals = pdf["b"].tolist()
+    a_vals = table.column("a").to_pylist()
+    b_vals = table.column("b").to_pylist()
     for a, b in zip(a_vals, b_vals):
         ra, rb = find(a), find(b)
         if ra != rb:
@@ -148,21 +141,15 @@ def connected_components(
     # small the graph, and dedup graphs at bench scale are a few
     # hundred edges. When the (checkpointed) edge list is small and
     # integrally typed, collect it and run union-find on the driver —
-    # exact same min-labels, zero loop jobs. ONE limit(gate+1) collect
-    # over the already-materialized checkpoint both decides the gate
-    # and delivers the edges (was a count job + a separate toPandas);
-    # above the gate the wasted transfer is bounded at gate+1 rows and
-    # the distributed loop runs as before (also for non-integral ids).
+    # exact same min-labels, zero loop jobs. ONE collect_at_most over
+    # the already-materialized checkpoint both decides the gate and
+    # delivers the edges; the distributed loop runs above the gate and
+    # for non-integral ids.
     ntype = e.schema["a"].dataType
-    gate = _driver_max_edges()
-    if (
-        gate > 0
-        and isinstance(ntype, _INTEGRAL)
-        and e.schema["b"].dataType == ntype
-    ):
-        pdf = e.limit(gate + 1).toPandas()
-        if len(pdf) <= gate:
-            return _driver_components(e, pdf=pdf)
+    if isinstance(ntype, _INTEGRAL) and e.schema["b"].dataType == ntype:
+        table = collect_at_most(e, DRIVER_MAX_EDGES)
+        if table is not None:
+            return _driver_components(e, table)
 
     # Symmetrize once so one join per round propagates both directions.
     sym = e.unionByName(

@@ -180,6 +180,13 @@ _BLOOM_KEY_TYPES = {
     "date",
 }
 
+# Gates of the driver-side stats pass (``_driver_stat_rows``), read at
+# call time, so a byte gate of 0 (set on the module) sends every
+# commit to the Spark aggregate. The row gates are explained there.
+DRIVER_STATS_MAX_BYTES = 32 * 1024 * 1024
+DRIVER_STATS_MAX_ROWS = 400_000
+DRIVER_STATS_MAX_BLOOM_ROWS = 100_000
+
 
 def _bloom_positions_py(v, m: int, j: int) -> list[int] | None:
     """Driver-side probe positions for a lookup value against a mask
@@ -1588,8 +1595,8 @@ class TxnLogTable(ParquetTable):
         URI, "_rows", "_mn{i}"/"_mx{i}" per stat column, "_bp{j}" raw
         16-bit bloom probe slices), or None when ineligible (files
         above the size gate, a stat column type whose collected value
-        the pyarrow path can't reproduce bit-for-bit, or pyarrow
-        unavailable) — the caller then runs the distributed pass.
+        the pyarrow path can't reproduce bit-for-bit) — the caller then
+        runs the distributed pass.
 
         Value parity with the Spark aggregate, column type by type:
         ints/strings/floats/dates/Decimals collect to the same Python
@@ -1605,16 +1612,11 @@ class TxnLogTable(ParquetTable):
         ``_BLOOM_KEY_TYPES`` gate that ``want_bloom`` implies."""
         if not leaves:
             return []
-        limit = int(
-            os.environ.get(
-                "SPARK_GRAFT_TXNLOG_DRIVER_STATS_MAX_BYTES",
-                str(32 * 1024 * 1024),
-            )
-        )
         try:
-            if sum(os.path.getsize(f) for f in leaves) > limit:
-                return None
+            nbytes = sum(os.path.getsize(f) for f in leaves)
         except OSError:
+            return None
+        if nbytes > DRIVER_STATS_MAX_BYTES:
             return None
         base = {
             f.name: f.dataType.simpleString().split("(")[0]
@@ -1622,31 +1624,27 @@ class TxnLogTable(ParquetTable):
         }
         if any(base.get(c) not in _STATS_COL_TYPES for c in stat_cols):
             return None
-        try:
-            import pyarrow.compute as pc
-            import pyarrow.parquet as pq
-        except ImportError:
-            return None
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
         # ROW gate on top of the byte gate: the bloom slices cost one
         # Python md5 per distinct key (~3 us measured at 2 probes) and
         # float min/max collection (a Python loop, for Spark's NaN
         # order) ~0.5 s per 1M values per column, so past
-        # ~100-400k rows the driver loop exceeds the ~0.5 s Spark job
-        # it replaces — and 32 MB of parquet can hold millions of int
-        # keys. Footer-only read (no data pages), so the gate is ~free.
+        # DRIVER_STATS_MAX_BLOOM_ROWS (bloom-keyed) or
+        # DRIVER_STATS_MAX_ROWS rows the driver loop exceeds the ~0.5 s
+        # Spark job it replaces — and 32 MB of parquet can hold
+        # millions of int keys. Footer-only read (no data pages), so
+        # the gate is ~free.
         try:
             total_rows = sum(
                 pq.ParquetFile(f).metadata.num_rows for f in leaves
             )
         except Exception:
             return None
-        row_limit = int(
-            os.environ.get(
-                "SPARK_GRAFT_TXNLOG_DRIVER_STATS_MAX_ROWS",
-                str(100_000 if want_bloom else 400_000),
-            )
-        )
-        if total_rows > row_limit:
+        if total_rows > (
+            DRIVER_STATS_MAX_BLOOM_ROWS if want_bloom else DRIVER_STATS_MAX_ROWS
+        ):
             return None
         import hashlib
         from urllib.parse import quote

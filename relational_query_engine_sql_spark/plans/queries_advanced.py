@@ -50,7 +50,6 @@ detection, histograms, and LLM context packing.
 
 from __future__ import annotations
 
-import os as _os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,8 +57,19 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources import load_table, local_frame, spread
+from ..sources import collect_at_most, load_table, local_frame, spread
 from .registry import query
+
+# Gates of the driver fast paths below, read at call time, so 0 (set
+# on the module) forces the distributed loops. The hierarchy gate
+# bounds one collect of (key, parent) long pairs. The pagerank gate
+# bounds n² for n graph nodes, an edge-count ceiling each query has
+# in hand before it collects anything (the rank arithmetic needs n):
+# a collect_at_most over the walk's edge aggregate would run its heavy
+# events shuffle only to throw it away above the gate, before the
+# distributed loop computes it again.
+HIERARCHY_DRIVER_MAX_ROWS = 250_000
+PAGERANK_DRIVER_MAX_EDGES = 100_000
 
 # --------------------------------------------------------------------------
 # Recursive hierarchy: iterative frontier loop vs WITH RECURSIVE.
@@ -67,22 +77,22 @@ from .registry import query
 
 
 def _driver_hierarchy_depths(
-    spark: SparkSession, sup: DataFrame, rows=None
+    spark: SparkSession, sup: DataFrame, table
 ) -> DataFrame:
-    """BFS over the collected (s_suppkey, parent) pairs — the exact
-    integer twin of the distributed frontier loop: seeds are the
-    s_suppkey = 0 rows, children are s_suppkey > 0 rows keyed by their
-    parent value, and a node whose parent chain passes through a
-    missing intermediate is orphaned by both paths. Caller gates on
-    row count (and may pass the already-collected rows)."""
+    """BFS over ``table``, the collected (s_suppkey, parent) pairs of
+    ``sup`` — the exact integer twin of the distributed frontier loop:
+    seeds are the s_suppkey = 0 rows, children are s_suppkey > 0 rows
+    keyed by their parent value, and a node whose parent chain passes
+    through a missing intermediate is orphaned by both paths. Caller
+    gates on row count."""
     children: dict[int, list[int]] = {}
     seed: list[int] = []
-    for r in rows if rows is not None else sup.collect():
-        k = r["s_suppkey"]
+    keys = table.column("s_suppkey").to_pylist()
+    for k, parent in zip(keys, table.column("parent").to_pylist()):
         if k == 0:
             seed.append(k)
         elif k > 0:
-            children.setdefault(r["parent"], []).append(k)
+            children.setdefault(parent, []).append(k)
     out_rows: list[tuple[int, int]] = [(k, 0) for k in seed]
     frontier_keys = seed
     depth = 0
@@ -145,16 +155,11 @@ def sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reachability (missing intermediate nodes still orphan their
     # subtree). Above the gate the keyed-join loop below runs
     # unchanged, so a genuinely large hierarchy keeps the scale path.
-    cap = int(
-        _os.environ.get("SPARK_GRAFT_HIERARCHY_DRIVER_MAX_ROWS", "250000")
-    )
-    if cap > 0:
-        # ONE limit(cap+1) collect both decides the gate and delivers
-        # the node table (was a count job + a separate collect); above
-        # the gate the wasted transfer is bounded at cap+1 rows.
-        rows = sup.limit(cap + 1).collect()
-        if len(rows) <= cap:
-            return _driver_hierarchy_depths(spark, sup, rows=rows)
+    # ONE collect_at_most both decides the gate and delivers the node
+    # table.
+    table = collect_at_most(sup, HIERARCHY_DRIVER_MAX_ROWS)
+    if table is not None:
+        return _driver_hierarchy_depths(spark, sup, table)
     frontier = sup.filter(F.col("s_suppkey") == 0).select(
         "s_suppkey", F.lit(0).alias("depth")
     )
@@ -550,10 +555,7 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arbitrary-but-fixed order under the same rounding. The final
     # rounding stays IN SPARK (F.round is HALF_UP; Python round is
     # not). Above the gate the keyed-join loop runs unchanged.
-    edge_cap = int(
-        _os.environ.get("SPARK_GRAFT_PAGERANK_DRIVER_MAX_EDGES", "100000")
-    )
-    if n * n <= edge_cap:
+    if n * n <= PAGERANK_DRIVER_MAX_EDGES:
         erows = sorted(
             (r["a"], r["b"], r["d"])
             for r in sym.join(deg, "a").collect()
@@ -1013,18 +1015,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reproduces Spark's DECIMAL div bit-for-bit, order-independent.
     # A vocabulary explosion falls back to the keyed-join loop below —
     # same arithmetic, unchanged results.
-    edge_cap = int(
-        _os.environ.get("SPARK_GRAFT_PAGERANK_DRIVER_MAX_EDGES", "100000")
-    )
-    erows = (
-        [
+    if n_nodes * n_nodes <= PAGERANK_DRIVER_MAX_EDGES:
+        erows = [
             (r["src"], r["dst"], int(r["w"]), int(r["wout"]))
             for r in edges2.collect()
         ]
-        if n_nodes * n_nodes <= edge_cap
-        else None
-    )
-    if erows is not None:
         rank = {n: _PRW_SCALE // n_nodes for n in node_list}
         for _ in range(_PRW_ITERS):
             s: dict[str, int] = {}

@@ -26,6 +26,10 @@ from .registry import query
 
 from contextlib import contextmanager
 
+# Shuffle partitions of the stateful live-stream rows; see
+# ``_stream_shuffle``.
+STREAM_SHUFFLE_PARTITIONS = 8
+
 
 @contextmanager
 def _stream_shuffle(spark: SparkSession):
@@ -40,12 +44,11 @@ def _stream_shuffle(spark: SparkSession):
     flag on stream_txnlog_windowed, fixed by this pin; this helper
     extends the same fix to every stateful live-stream row. A
     production deployment sizes this to state-key cardinality the same
-    way ($SPARK_GRAFT_STREAM_SHUFFLE, default 8)."""
-    import os
-
-    n = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+    way (STREAM_SHUFFLE_PARTITIONS)."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
+    )
     try:
         yield
     finally:

@@ -1,4 +1,5 @@
 from .catalog import (
+    collect_at_most,
     load_table,
     load_tables,
     local_frame,
@@ -17,6 +18,7 @@ from .csv_ingest import (
 
 __all__ = [
     "clean_ohlcv",
+    "collect_at_most",
     "corrupt_rows",
     "ingest_ohlcv_csv",
     "load_table",

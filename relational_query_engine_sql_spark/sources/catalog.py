@@ -95,6 +95,22 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
+def collect_at_most(df: DataFrame, cap: int):
+    """``df``'s rows as an Arrow table when it has at most ``cap`` of
+    them, else None: the one collect that both decides a driver gate
+    and delivers the rows. ``cap <= 0`` runs no job.
+
+    ``limit(cap + 1).toArrow()`` is one Spark job; ``collect()`` of the
+    same limit can run ``executeTake``, which scans partitions in
+    growing rounds (3 jobs over a checkpointed 8-partition frame).
+    Above the gate the wasted transfer is bounded at ``cap + 1``
+    rows."""
+    if cap <= 0:
+        return None
+    table = df.limit(cap + 1).toArrow()
+    return table if table.num_rows <= cap else None
+
+
 # ``write_parquet`` writes on the driver when the optimizer's size
 # estimate (bytes) is below this, read at call time, so 0 sends every
 # write to Spark's writer. Median ms of repeated overwrites of

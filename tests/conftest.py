@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -27,6 +28,22 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
 # fitting the time budget; the pre-round-close full pass raises it:
 #   SPARK_GRAFT_PROP_EXAMPLES=10 python -m pytest tests/ -q
 PROP_EXAMPLES = int(os.environ.get("SPARK_GRAFT_PROP_EXAMPLES", "4"))
+
+
+def job_ids(spark, group: str | None) -> list[int]:
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def in_job_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, job ids)."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, job_ids(spark, group)
 
 
 @pytest.fixture(scope="session")

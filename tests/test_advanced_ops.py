@@ -13,6 +13,7 @@ import pytest
 
 from relational_query_engine_sql_spark import plans
 from relational_query_engine_sql_spark.sources import load_table
+from tests.conftest import in_job_group
 
 
 def test_recursive_hierarchy_depth_closed_form(spark, sf_small):
@@ -41,18 +42,18 @@ def test_hierarchy_driver_path_matches_distributed(spark, sf_small, monkeypatch)
     monkeypatch.setattr(
         qa,
         "_driver_hierarchy_depths",
-        lambda s, d, rows=None: calls.append(1) or real(s, d, rows=rows),
+        lambda s, d, table: calls.append(1) or real(s, d, table),
     )
     fn = plans.get("sql_recursive_hierarchy").fn
 
-    monkeypatch.setenv("SPARK_GRAFT_HIERARCHY_DRIVER_MAX_ROWS", "0")
+    monkeypatch.setattr(qa, "HIERARCHY_DRIVER_MAX_ROWS", 0)
     dist = fn(spark, sf_small)
     dist_rows = sorted(
         (r["s_suppkey"], r["depth"]) for r in dist.collect()
     )
     assert calls == []  # gate 0 → distributed loop
 
-    monkeypatch.setenv("SPARK_GRAFT_HIERARCHY_DRIVER_MAX_ROWS", "250000")
+    monkeypatch.setattr(qa, "HIERARCHY_DRIVER_MAX_ROWS", 250_000)
     drv = fn(spark, sf_small)
     drv_rows = sorted((r["s_suppkey"], r["depth"]) for r in drv.collect())
     assert calls == [1]  # small table → driver BFS
@@ -71,17 +72,23 @@ def test_pagerank_driver_path_matches_distributed(
     keyed-join loop's ranks (the query's observable — both paths sum
     in an arbitrary-but-fixed order under fixed-point or 6 dp
     rounding, exactly the property the cross-engine oracle already
-    relies on)."""
-    fn = plans.get(name).fn
+    relies on). Each gate setting must take the arm it names: the
+    distributed loop runs a checkpoint job per iteration, which the
+    driver loop does not."""
+    from relational_query_engine_sql_spark.plans import queries_advanced as qa
 
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_MAX_EDGES", "0")
-    dist = fn(spark, sf_small)
+    fn = plans.get(name).fn
+    iters = qa._PR_ITERS if name == "graph_pagerank_fixed" else qa._PRW_ITERS
+
+    monkeypatch.setattr(qa, "PAGERANK_DRIVER_MAX_EDGES", 0)
+    dist, dist_jobs = in_job_group(spark, lambda: fn(spark, sf_small))
     dist_rows = sorted(tuple(r) for r in dist.collect())
 
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_MAX_EDGES", "100000")
-    drv = fn(spark, sf_small)
+    monkeypatch.setattr(qa, "PAGERANK_DRIVER_MAX_EDGES", 100_000)
+    drv, drv_jobs = in_job_group(spark, lambda: fn(spark, sf_small))
     drv_rows = sorted(tuple(r) for r in drv.collect())
 
+    assert len(dist_jobs) >= len(drv_jobs) + iters, (dist_jobs, drv_jobs)
     assert drv_rows and drv_rows == dist_rows
     assert [(f.name, f.dataType) for f in drv.schema] == [
         (f.name, f.dataType) for f in dist.schema

@@ -59,15 +59,15 @@ def test_cc_driver_path_matches_distributed(spark, monkeypatch):
     monkeypatch.setattr(
         graph,
         "_driver_components",
-        lambda e, pdf=None: calls.append(1) or real(e, pdf=pdf),
+        lambda e, table: calls.append(1) or real(e, table),
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "0")
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 0)
     dist = graph.connected_components(edges)
     dist_rows = sorted((r["node"], r["label"]) for r in dist.collect())
     assert calls == []  # gate 0 → distributed loop
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "500000")
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 500_000)
     drv = graph.connected_components(edges)
     drv_rows = sorted((r["node"], r["label"]) for r in drv.collect())
     assert calls == [1]  # small integral edge list → driver path
@@ -87,9 +87,9 @@ def test_cc_driver_gate_falls_back_when_exceeded(spark, monkeypatch):
     monkeypatch.setattr(
         graph,
         "_driver_components",
-        lambda e, pdf=None: calls.append(1) or real(e, pdf=pdf),
+        lambda e, table: calls.append(1) or real(e, table),
     )
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "2")
+    monkeypatch.setattr(graph, "DRIVER_MAX_EDGES", 2)
     got = {
         (r["node"], r["label"])
         for r in graph.connected_components(edges).collect()

@@ -6,13 +6,18 @@
   ``LocalRelation`` with no ``ExistingRDD`` scan.
 - A repeated ``load_table`` of an unchanged file runs no Spark job; a
   rewritten or re-stamped file is inferred again.
+- ``collect_at_most`` returns a frame's rows up to its cap, None past
+  it, in one Spark job; a cap of 0 runs none.
 - ``session.run_independent`` returns its results in argument order,
   and after a failure starts no further thunk; jobs it starts keep the
   caller's job group.
 - No module in the package calls ``createDataFrame`` directly except
   ``local_frame`` itself and the fixtures' pandas input, only
-  ``run_independent`` builds a thread pool, and only
-  ``write_parquet`` collects Arrow and writes parquet with pyarrow.
+  ``run_independent`` builds a thread pool, only ``write_parquet``
+  and ``collect_at_most`` collect Arrow, and only ``write_parquet``'s
+  file writer writes parquet with pyarrow.
+- The package reads only four deployment settings from the
+  environment; tuning gates are module constants.
 """
 
 from __future__ import annotations
@@ -22,7 +27,6 @@ import datetime as dt
 import os
 import shutil
 import time
-import uuid
 from decimal import Decimal
 from functools import partial
 from pathlib import Path
@@ -37,9 +41,11 @@ from relational_query_engine_sql_spark.schemas import DRIVER_TABLES
 from relational_query_engine_sql_spark.session import run_independent
 from relational_query_engine_sql_spark.sources import (
     catalog,
+    collect_at_most,
     load_table,
     local_frame,
 )
+from tests.conftest import in_job_group, job_ids
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "relational_query_engine_sql_spark"
@@ -84,22 +90,6 @@ ALL_ROWS = [
 ]
 
 
-def _jobs(spark, group: str) -> list[int]:
-    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
-
-
-def _in_group(spark, fn):
-    """Run ``fn`` under a fresh job group; return (result, job ids)."""
-    sc = spark.sparkContext
-    group = f"test-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, _jobs(spark, group)
-
-
 @pytest.mark.parametrize("n", [len(ALL_ROWS), 0], ids=["rows", "empty"])
 def test_local_frame_matches_create_dataframe(spark, n):
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
@@ -138,22 +128,22 @@ def test_load_table_reuses_inferred_schema(spark, sf_small, tmp_path):
     def load():
         return load_table(spark, str(tmp_path), "nation")
 
-    first, jobs = _in_group(spark, load)
+    first, jobs = in_job_group(spark, load)
     assert jobs, "the first read infers the schema with a Spark job"
-    again, jobs = _in_group(spark, load)
+    again, jobs = in_job_group(spark, load)
     assert jobs == [], f"unchanged file re-inferred: jobs {jobs}"
     assert again.schema == first.schema
     assert sorted(again.collect()) == sorted(first.collect())
 
     # rewritten with another schema (new size and mtime): inferred again
     pq.write_table(pa.table({"n_nationkey": [1], "extra": ["x"]}), path)
-    new, jobs = _in_group(spark, load)
+    new, jobs = in_job_group(spark, load)
     assert jobs, "a rewritten file must be inferred again"
     assert new.columns == ["n_nationkey", "extra"]
     # same bytes, new mtime only: inferred again
     st = os.stat(path)
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-    _, jobs = _in_group(spark, load)
+    _, jobs = in_job_group(spark, load)
     assert jobs, "a re-stamped file must be inferred again"
 
 
@@ -165,14 +155,28 @@ def test_load_table_directory_listing_invalidates(spark, tmp_path):
     def load():
         return load_table(spark, str(tmp_path), "t")
 
-    first, jobs = _in_group(spark, load)
+    first, jobs = in_job_group(spark, load)
     assert jobs and first.count() == 2
-    _, jobs = _in_group(spark, load)
+    _, jobs = in_job_group(spark, load)
     assert jobs == []
     pq.write_table(pa.table({"k": [3]}), d / "part-1.parquet")
-    grown, jobs = _in_group(spark, load)
+    grown, jobs = in_job_group(spark, load)
     assert jobs, "an added data file must be inferred again"
     assert grown.count() == 3
+
+
+@pytest.mark.parametrize("n", [5, 6], ids=["at_cap", "over_cap"])
+def test_collect_at_most_boundary(spark, n):
+    # a limit-collect() over these 8 checkpointed partitions runs 3 jobs
+    df = spark.range(0, n, 1, 8).localCheckpoint(eager=True)
+    table, jobs = in_job_group(spark, lambda: collect_at_most(df, 5))
+    assert len(jobs) == 1, jobs
+    if n <= 5:
+        assert table.column("id").to_pylist() == list(range(n))
+    else:
+        assert table is None
+    nothing, jobs = in_job_group(spark, lambda: collect_at_most(df, 0))
+    assert nothing is None and jobs == []
 
 
 def test_cached_schema_equals_inferred_for_driver_tables(spark, sf_small):
@@ -200,10 +204,10 @@ def test_pool_jobs_keep_the_caller_job_group(spark, sf_small, name):
     """Each query overlaps independent actions with run_independent (s7
     clones four tables and cascades through two sibling subtrees); none
     of their jobs may lose the caller's job group."""
-    untagged_before = set(_jobs(spark, None))
+    untagged_before = set(job_ids(spark, None))
     q = plans.get(name)
-    rows, tagged = _in_group(spark, lambda: q.fn(spark, sf_small).collect())
-    new_untagged = set(_jobs(spark, None)) - untagged_before
+    rows, tagged = in_job_group(spark, lambda: q.fn(spark, sf_small).collect())
+    new_untagged = set(job_ids(spark, None)) - untagged_before
     assert rows and tagged
     assert new_untagged == set(), f"{len(new_untagged)} jobs lost the group"
 
@@ -249,8 +253,26 @@ _ALLOWED = {
     "inheritable_thread_target": {("session.py", "run_independent")},
     # Arrow writes go through sources.write_parquet, whose files match
     # Spark's layout and footer
-    "toArrow": {("sources/catalog.py", "write_parquet")},
+    "toArrow": {
+        ("sources/catalog.py", "write_parquet"),
+        # one job decides a driver gate and delivers its rows
+        ("sources/catalog.py", "collect_at_most"),
+    },
     "write_table": {("sources/catalog.py", "write_arrow_file")},
+}
+
+# The only environment the package reads: deployment settings, at
+# these sites. Tuning gates are module constants a test or an A/B sets
+# on the module, never environment variables.
+_ENV_SITES = {
+    ("session.py", "get_spark"),
+    ("sources/catalog.py", "DEFAULT_SF_DIR"),
+}
+_ENV_NAMES = {
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_WAREHOUSE",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_DRIVER_MEMORY",
 }
 
 
@@ -262,25 +284,70 @@ def _call_name(call: ast.Call) -> str | None:
     return None
 
 
-@pytest.mark.parametrize("call", sorted(_ALLOWED))
-def test_call_only_at_allowed_sites(call):
-    found = []
+def _sites(match):
+    """(file, scope, node) for every node of the package that
+    ``match`` accepts; scope is the enclosing function's name, or at
+    module level the name a one-target assignment binds."""
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
 
-        def walk(node, fn_name):
+        def walk(node, scope):
             for child in ast.iter_child_nodes(node):
-                name = fn_name
+                name = scope
                 if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     name = child.name
-                if (
-                    isinstance(child, ast.Call)
-                    and _call_name(child) == call
-                    and (rel, fn_name) not in _ALLOWED[call]
+                elif (
+                    scope is None
+                    and isinstance(child, ast.Assign)
+                    and len(child.targets) == 1
+                    and isinstance(child.targets[0], ast.Name)
                 ):
-                    found.append(f"{rel}:{child.lineno} in {fn_name}")
-                walk(child, name)
+                    name = child.targets[0].id
+                if match(child):
+                    yield rel, scope, child
+                yield from walk(child, name)
 
-        walk(ast.parse(path.read_text(), str(path)), None)
+        yield from walk(ast.parse(path.read_text(), str(path)), None)
+
+
+@pytest.mark.parametrize("call", sorted(_ALLOWED))
+def test_call_only_at_allowed_sites(call):
+    found = [
+        f"{rel}:{node.lineno} in {scope}"
+        for rel, scope, node in _sites(
+            lambda n: isinstance(n, ast.Call) and _call_name(n) == call
+        )
+        if (rel, scope) not in _ALLOWED[call]
+    ]
     sites = sorted(_ALLOWED[call])
     assert found == [], f"{call} outside {sites}: {', '.join(found)}"
+
+
+def _env_ref(node) -> bool:
+    name = getattr(node, "attr", getattr(node, "id", None))
+    return isinstance(node, (ast.Attribute, ast.Name)) and name in (
+        "environ",
+        "getenv",
+    )
+
+
+def test_environment_read_only_for_deployment_settings():
+    refs = list(_sites(_env_ref))
+    outside = [
+        f"{rel}:{node.lineno} in {scope}"
+        for rel, scope, node in refs
+        if (rel, scope) not in _ENV_SITES
+    ]
+    assert outside == [], f"environment read outside {sorted(_ENV_SITES)}"
+    # each is an environ.get("<deployment setting>", default)
+    gets = [
+        node.args[0].value
+        for _, _, node in _sites(
+            lambda n: isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "get"
+            and _env_ref(n.func.value)
+        )
+    ]
+    assert len(gets) == len(refs)
+    assert set(gets) == _ENV_NAMES

@@ -18,6 +18,7 @@ import os
 import pytest
 from pyspark.sql import types as T
 
+from relational_query_engine_sql_spark.operators import txnlog
 from relational_query_engine_sql_spark.operators.txnlog import TxnLogTable
 
 SCHEMA = T.StructType(
@@ -89,13 +90,10 @@ def _comparable(t: TxnLogTable) -> list[tuple]:
 
 
 def _build(spark, path, monkeypatch, fast: bool, partition_by=None):
-    if fast:
-        monkeypatch.delenv(
-            "SPARK_GRAFT_TXNLOG_DRIVER_STATS_MAX_BYTES", raising=False
-        )
-    else:
+    if not fast:
         # byte gate 0 forces every commit onto the distributed pass
-        monkeypatch.setenv("SPARK_GRAFT_TXNLOG_DRIVER_STATS_MAX_BYTES", "0")
+        # (until the test ends: build the fast table first)
+        monkeypatch.setattr(txnlog, "DRIVER_STATS_MAX_BYTES", 0)
     t = TxnLogTable(spark, str(path), SCHEMA, ["k"], partition_by=partition_by)
     taken: list[bool] = []
     orig = t._driver_stat_rows
@@ -108,9 +106,6 @@ def _build(spark, path, monkeypatch, fast: bool, partition_by=None):
     monkeypatch.setattr(t, "_driver_stat_rows", spy)
     t.init(_rows(spark, 0, 60))
     t.append(_rows(spark, 100, 130))
-    monkeypatch.delenv(
-        "SPARK_GRAFT_TXNLOG_DRIVER_STATS_MAX_BYTES", raising=False
-    )
     return t, taken
 
 
@@ -137,7 +132,8 @@ def test_driver_stats_parity_with_distributed_pass(
 def test_driver_stats_row_gate_falls_back(spark, tmp_path, monkeypatch):
     """Above the row gate the fast path declines (returns None) so the
     distributed pass keeps covering large commits."""
-    monkeypatch.setenv("SPARK_GRAFT_TXNLOG_DRIVER_STATS_MAX_ROWS", "10")
+    monkeypatch.setattr(txnlog, "DRIVER_STATS_MAX_ROWS", 10)
+    monkeypatch.setattr(txnlog, "DRIVER_STATS_MAX_BLOOM_ROWS", 10)
     t, taken = _build(spark, tmp_path / "gated", monkeypatch, True)
     assert taken and not any(taken)  # every commit exceeded 10 rows
     # stats still recorded (by the distributed pass)

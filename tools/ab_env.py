@@ -1,22 +1,26 @@
 #!/usr/bin/env python
-"""Interleaved A/B of driver-side ENV gates in one session.
+"""Interleaved A/B of the engine's driver-gate constants in one session.
 
 Same rationale as ab_conf.py (steal drifts within minutes, so two
 sequential sessions measure the host, not the change), but for the
-os.environ gates the driver fast paths read at call time
-(SPARK_GRAFT_CC_DRIVER_MAX_EDGES, SPARK_GRAFT_PAGERANK_DRIVER_MAX_EDGES,
-...): both arms run inside ONE session, alternating per query per
-round, and per-arm minima are reported.
+module constants the driver fast paths read at call time
+(operators.graph.DRIVER_MAX_EDGES,
+plans.queries_advanced.PAGERANK_DRIVER_MAX_EDGES, ...): both arms run
+inside ONE session, alternating per query per round, and per-arm
+minima are reported.
 
 Usage:
-  python tools/ab_env.py -k 3 --set KEY=VALUE [--set ...] name...
+  python tools/ab_env.py -k 3 --set module.NAME=VALUE [--set ...] name...
 
-The "base" arm is the current environment; the "variant" arm applies
-the --set overrides (value "" unsets).
+``module`` is relative to the package and VALUE a Python literal, e.g.
+``--set operators.graph.DRIVER_MAX_EDGES=0``. The "base" arm keeps the
+constants' current values; the "variant" arm sets the --set values.
 """
 from __future__ import annotations
 
 import argparse
+import ast
+import importlib
 import json
 import os
 import sys
@@ -28,16 +32,27 @@ from relational_query_engine_sql_spark import plans
 from relational_query_engine_sql_spark.session import get_spark
 
 
+def _target(key: str) -> tuple:
+    mod, name = key.rsplit(".", 1)
+    module = importlib.import_module(f"relational_query_engine_sql_spark.{mod}")
+    if not hasattr(module, name):
+        raise SystemExit(f"no constant {name} in {module.__name__}")
+    return module, name
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
     ap.add_argument("-k", type=int, default=3)
-    ap.add_argument("--set", action="append", default=[], dest="envs")
+    ap.add_argument("--set", action="append", default=[], dest="sets")
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
-    variant = dict(kv.split("=", 1) for kv in args.envs)
-    base = {k: os.environ.get(k) for k in variant}
+    variant = {
+        _target(k): ast.literal_eval(v)
+        for k, v in (kv.split("=", 1) for kv in args.sets)
+    }
+    base = {t: getattr(*t) for t in variant}
 
     spark = get_spark(app_name="ab_env")
     plans.get("a1_pricing_summary").fn(spark, args.sf).count()
@@ -51,18 +66,15 @@ def main() -> None:
             print(f"warm FAIL {n}: {ex}", file=sys.stderr)
     spark.catalog.clearCache()
 
-    def apply(env: dict) -> None:
-        for k, v in env.items():
-            if v in (None, ""):
-                os.environ.pop(k, None)
-            else:
-                os.environ[k] = v
+    def apply(values: dict) -> None:
+        for (module, name), v in values.items():
+            setattr(module, name, v)
 
     best: dict[str, dict[str, float]] = {"base": {}, "variant": {}}
     for rep in range(args.k):
         for n in args.names:
-            for arm, env in (("base", base), ("variant", variant)):
-                apply(env)
+            for arm, values in (("base", base), ("variant", variant)):
+                apply(values)
                 spark.catalog.clearCache()
                 spark.sparkContext.setJobDescription(f"{arm}:{n}")
                 t0 = time.perf_counter()
