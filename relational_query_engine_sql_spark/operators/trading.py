@@ -24,7 +24,7 @@ group size is bounded by trades-per-position, not table size.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -76,39 +76,11 @@ def _fold_position(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def apply_trades(
-    holdings: DataFrame, trades: DataFrame, route: bool = True
-) -> DataFrame:
-    """Apply a trade batch to positions.
-
-    ``holdings``: (portfolioid, symbol, shares, avgprice[, ...]).
-    ``trades``: (portfolioid, symbol, side BUY|SELL, shares, price, ts).
-    Returns the new position table (portfolioid, symbol, shares,
-    avgprice, rejected) — rows with shares == 0 are closed positions.
-
-    With ``route=True`` (default) each position is routed adaptively:
-    positions whose batch is provably price-path-independent — every
-    BUY strictly precedes every SELL (ties route to the fold) and
-    cumulative sells never overdraw, so no rejection can occur —
-    collapse to the closed-form JVM aggregate; only genuinely
-    stateful positions cross the Arrow boundary into the sequential
-    Python fold. The routing predicate is computed by the SAME keyed
-    aggregate the closed form needs, so qualifying positions cost two
-    aggregates and a join, all map-side combinable. At 100 TB this is
-    the difference between "every trade row flows through Python" and
-    "Python sees only the pathological positions" (typically none:
-    batch imports and end-of-day files are sorted). The fold and the
-    closed form are pinned equal on qualifying batches in
-    tests/test_mutation.py.
-
-    NOTE: with ``route=True`` this call is EAGER — the position table
-    is localCheckpointed and the stateful-key probe runs Spark jobs at
-    call time (that is what lets an all-closed-form batch skip
-    planning the Python fold subtree entirely). Callers composing
-    plans without executing them should pass ``route=False``.
-    """
-    if not route:
-        return _apply_trades_fold(holdings, trades)
+def _positions(holdings: DataFrame, trades: DataFrame) -> DataFrame:
+    """One row per position: the batch's BUY shares and cost, SELL
+    shares, last BUY and first SELL time, and the holding it starts
+    from — the keyed aggregate both the routing predicate and the
+    closed form read."""
     t = trades.select(
         "portfolioid",
         "symbol",
@@ -138,7 +110,7 @@ def apply_trades(
         F.col("shares").cast("int").alias("_h_sh"),
         F.col("avgprice").cast("double").alias("_h_avg"),
     )
-    pos = agg.join(h, ["portfolioid", "symbol"], "full_outer").select(
+    return agg.join(h, ["portfolioid", "symbol"], "full_outer").select(
         "portfolioid",
         "symbol",
         F.coalesce("_buy_sh", F.lit(0)).alias("_buy_sh"),
@@ -148,27 +120,37 @@ def apply_trades(
         "_min_sell",
         F.coalesce("_h_sh", F.lit(0)).alias("_h_sh"),
         F.coalesce("_h_avg", F.lit(0.0)).alias("_h_avg"),
-    ).localCheckpoint(eager=True)
-    # ^ pos feeds the closed-form branch AND the stateful-key probe; it
-    # is one row per POSITION (not per trade), so the cut is metadata-
-    # scale and saves re-running the trade aggregate + full-outer join
-    # per branch.
-    # NULL-safe qualification: positions with no sells (or no buys)
-    # trivially have no BUY-after-SELL interleaving.
+    )
+
+
+def _path_dependent() -> Column:
+    """True for a position whose fold depends on trade order: a BUY at
+    or after a SELL, or sells that overdraw the position. NULL-safe:
+    positions with no sells (or no buys) trivially have no
+    BUY-after-SELL interleaving."""
     interleaved = (
         F.col("_min_sell").isNotNull()
         & F.col("_max_buy").isNotNull()
         & (F.col("_max_buy") >= F.col("_min_sell"))
     )
     overdrawn = F.col("_h_sh") + F.col("_buy_sh") < F.col("_sell_sh")
-    stateful = interleaved | overdrawn
-    ok = pos.filter(~stateful)
+    return interleaved | overdrawn
+
+
+def _closed_form(pos: DataFrame) -> DataFrame:
+    """The fold's result for path-independent positions of
+    :func:`_positions`:
+
+        shares   = h + Σ buy_sh − Σ sell_sh
+        avgprice = (h·h_avg + Σ buy_sh·price) / (h + Σ buy_sh)
+        rejected = 0
+    """
     total_in = F.col("_h_sh") + F.col("_buy_sh")
     shares = total_in - F.col("_sell_sh")
     avg = (
         F.col("_h_sh") * F.col("_h_avg") + F.col("_buy_cost")
     ) / total_in
-    closed = ok.select(
+    return pos.select(
         "portfolioid",
         "symbol",
         shares.cast("int").alias("shares"),
@@ -177,6 +159,42 @@ def apply_trades(
         .alias("avgprice"),
         F.lit(0).alias("rejected"),
     )
+
+
+def apply_trades(holdings: DataFrame, trades: DataFrame) -> DataFrame:
+    """Apply a trade batch to positions.
+
+    ``holdings``: (portfolioid, symbol, shares, avgprice[, ...]).
+    ``trades``: (portfolioid, symbol, side BUY|SELL, shares, price, ts).
+    Returns the new position table (portfolioid, symbol, shares,
+    avgprice, rejected) — rows with shares == 0 are closed positions.
+
+    Each position is routed adaptively: positions whose batch is
+    provably price-path-independent — every BUY strictly precedes
+    every SELL (ties route to the fold) and cumulative sells never
+    overdraw, so no rejection can occur — collapse to the closed-form
+    JVM aggregate; only genuinely stateful positions cross the Arrow
+    boundary into the sequential Python fold. The routing predicate is
+    computed by the SAME keyed aggregate the closed form needs, so
+    qualifying positions cost two aggregates and a join, all map-side
+    combinable. At 100 TB this is the difference between "every trade
+    row flows through Python" and "Python sees only the pathological
+    positions" (typically none: batch imports and end-of-day files are
+    sorted). The closed form is pinned equal to the fold on qualifying
+    batches in tests/test_mutation.py.
+
+    NOTE: this call is EAGER — the position table is localCheckpointed
+    and the stateful-key probe runs Spark jobs at call time (that is
+    what lets an all-closed-form batch skip planning the Python fold
+    subtree entirely).
+    """
+    pos = _positions(holdings, trades).localCheckpoint(eager=True)
+    # ^ pos feeds the closed-form branch AND the stateful-key probe; it
+    # is one row per POSITION (not per trade), so the cut is metadata-
+    # scale and saves re-running the trade aggregate + full-outer join
+    # per branch.
+    stateful = _path_dependent()
+    closed = _closed_form(pos.filter(~stateful))
     bad_keys = pos.filter(stateful).select("portfolioid", "symbol")
     # Typical batches (sorted imports, end-of-day files) have ZERO
     # stateful positions; the probe is one cheap scan of the
@@ -232,11 +250,8 @@ def apply_trades_closed_form(
     a SELL overdraws the position (rejection depends on running
     state). When, per position, every BUY precedes every SELL and
     cumulative sells never exceed holding+buys, the fold collapses to
-    closed form — exactly the form the u2 oracle uses:
-
-        shares   = h + Σ buy_sh − Σ sell_sh
-        avgprice = (h·h_avg + Σ buy_sh·price) / (h + Σ buy_sh)
-        rejected = 0
+    closed form (:func:`_closed_form`) — exactly the form the u2
+    oracle uses.
 
     Two keyed aggregates and a join instead of a per-group Python
     fold: no Arrow boundary, map-side partial aggregation, and no
@@ -247,76 +262,20 @@ def apply_trades_closed_form(
     position) and raises ``ValueError`` naming the violating
     positions; the fold remains the general path.
     """
-    t = trades.select(
-        "portfolioid",
-        "symbol",
-        F.col("shares").cast("int").alias("sh"),
-        F.col("price").cast("double").alias("p"),
-        "side",
-        F.col("ts").cast("timestamp").alias("ts"),
-    )
-    agg = t.groupBy("portfolioid", "symbol").agg(
-        F.sum(F.when(F.col("side") == "BUY", F.col("sh")).otherwise(0)).alias(
-            "_buy_sh"
-        ),
-        F.sum(
-            F.when(F.col("side") == "BUY", F.col("sh") * F.col("p")).otherwise(
-                0.0
-            )
-        ).alias("_buy_cost"),
-        F.sum(F.when(F.col("side") != "BUY", F.col("sh")).otherwise(0)).alias(
-            "_sell_sh"
-        ),
-        F.max(F.when(F.col("side") == "BUY", F.col("ts"))).alias("_max_buy"),
-        F.min(F.when(F.col("side") != "BUY", F.col("ts"))).alias("_min_sell"),
-    )
-    h = holdings.select(
-        "portfolioid",
-        "symbol",
-        F.col("shares").cast("int").alias("_h_sh"),
-        F.col("avgprice").cast("double").alias("_h_avg"),
-    )
-    pos = agg.join(h, ["portfolioid", "symbol"], "full_outer").select(
-        "portfolioid",
-        "symbol",
-        F.coalesce("_buy_sh", F.lit(0)).alias("_buy_sh"),
-        F.coalesce("_buy_cost", F.lit(0.0)).alias("_buy_cost"),
-        F.coalesce("_sell_sh", F.lit(0)).alias("_sell_sh"),
-        "_max_buy",
-        "_min_sell",
-        F.coalesce("_h_sh", F.lit(0)).alias("_h_sh"),
-        F.coalesce("_h_avg", F.lit(0.0)).alias("_h_avg"),
-    )
+    pos = _positions(holdings, trades)
     if verify:
-        bad = pos.filter(
-            (
-                F.col("_min_sell").isNotNull()
-                & F.col("_max_buy").isNotNull()
-                & (F.col("_max_buy") >= F.col("_min_sell"))
-            )
-            | (F.col("_h_sh") + F.col("_buy_sh") < F.col("_sell_sh"))
+        sample = (
+            pos.filter(_path_dependent())
+            .select("portfolioid", "symbol")
+            .take(5)
         )
-        sample = bad.select("portfolioid", "symbol").take(5)
         if sample:
             raise ValueError(
                 "trade batch is not price-path-independent (BUY after "
                 f"SELL or overdrawn position) for e.g. {sample}; use "
                 "apply_trades"
             )
-    total_in = F.col("_h_sh") + F.col("_buy_sh")
-    shares = total_in - F.col("_sell_sh")
-    avg = (
-        F.col("_h_sh") * F.col("_h_avg") + F.col("_buy_cost")
-    ) / total_in
-    return pos.select(
-        "portfolioid",
-        "symbol",
-        shares.cast("int").alias("shares"),
-        F.when(shares == 0, F.lit(None).cast("double"))
-        .otherwise(F.round(avg, 4))
-        .alias("avgprice"),
-        F.lit(0).alias("rejected"),
-    )
+    return _closed_form(pos)
 
 
 def ledger_entries(trades: DataFrame, start_id: int = 1) -> DataFrame:

@@ -428,6 +428,19 @@ def _thaw(v):
     return v
 
 
+def _uri_path(uri: str) -> str:
+    """The filesystem path an ``input_file_name()`` URI names: query
+    stripped, percent-decoded ONCE (a space is %20, a hive-escaped dir
+    p_c=A%25B is A%2525B in URI form), ``file:`` scheme dropped,
+    normalized."""
+    from urllib.parse import unquote
+
+    p = unquote(uri.split("?", 1)[0])
+    if p.startswith("file:"):
+        p = "/" + p[len("file:") :].lstrip("/")
+    return os.path.normpath(p)
+
+
 def _col_overlaps(rng: list | None, lo, hi) -> bool:
     """Can a file whose column range is ``rng=[min,max]`` contain any
     value in [lo, hi]? Unknown/incomparable stats → True (prune is an
@@ -858,44 +871,151 @@ class TxnLogTable(ParquetTable):
             ]
         )
 
-    def _scan_files(
+    def _tombstones(self, dv_paths) -> DataFrame:
+        """The keys tombstoned by the deletion-vector files
+        ``dv_paths`` — the one read of DV files (key columns are never
+        column-mapped)."""
+        if not dv_paths:
+            return local_frame(self.spark, [], self._dv_schema())
+        return self.spark.read.schema(self._dv_schema()).parquet(
+            *[os.path.join(self.path, p) for p in dv_paths]
+        )
+
+    def _scan(
         self,
         relpaths: list[str],
-        version: int | None = None,
-        schema=None,
+        version: int | None,
+        dvs=(),
+        row_ids: bool = False,
     ) -> DataFrame:
-        """Read data files (physical column names on disk) back as the
-        LOGICAL schema at ``version`` — the single read path every
-        batch consumer goes through, so column mapping is applied (or
-        skipped) in exactly one place."""
-        if schema is None:
-            schema = self._schema_at(version)
-        m = self._mapping_at(version)
-        if not relpaths:
-            return local_frame(self.spark, [], schema)
+        """The merge-on-read scan every batch read, lookup and rewrite
+        goes through: data files (physical column names on disk) read
+        back as the LOGICAL schema at ``version``, with the stable
+        ``_row_id`` attached when ``row_ids``, minus the keys
+        tombstoned by the deletion-vector files ``dvs`` (one broadcast
+        anti-join — a Delta/Iceberg v2 DV read).
+
+        Row ids: files written by a preserving rewrite carry the id
+        physically (the column is trusted over the lazy formula — this
+        also self-heals a restore that re-referenced materialized files
+        without the flag); fresh files compute base +
+        _metadata.row_index with the per-file base joined in from a
+        broadcast map."""
         import pyspark.sql.types as T
 
-        phys = (
-            T.StructType(
-                [
-                    T.StructField(
-                        m.get(f.name, f.name), f.dataType, f.nullable
-                    )
-                    for f in schema.fields
-                ]
+        schema = self._schema_at(version)
+        if not relpaths:
+            if row_ids:
+                schema = T.StructType(
+                    list(schema.fields)
+                    + [T.StructField(ROWID_COL, T.LongType(), False)]
+                )
+            return local_frame(self.spark, [], schema)
+        phys = self._physical_schema(version)
+        logical_sel = [
+            F.col(p.name).alias(f.name)
+            for p, f in zip(phys.fields, schema.fields)
+        ]
+        read = lambda rels, sch: (  # noqa: E731
+            self.spark.read.schema(sch).parquet(
+                *[os.path.join(self.path, p) for p in rels]
             )
-            if m
-            else schema
         )
-        df = self.spark.read.schema(phys).parquet(
-            *[os.path.join(self.path, p) for p in relpaths]
-        )
-        if m:
-            df = df.select(
-                *[
-                    F.col(m.get(f.name, f.name)).alias(f.name)
-                    for f in schema.fields
-                ]
+        if not row_ids:
+            df = read(relpaths, phys)
+            if self._mapping_at(version):
+                df = df.select(*logical_sel)
+        else:
+            import pyarrow.parquet as pq
+
+            live = self._live(version)
+            mat, fresh = [], []
+            for rel in relpaths:
+                names = pq.read_schema(os.path.join(self.path, rel)).names
+                (mat if ROWID_COL in names else fresh).append(rel)
+            parts = []
+            if fresh:
+                bases, _ = self._row_id_bases(version)
+                # Base-map join key: the basename alone is NOT unique on
+                # a partitioned table — one write job's task emits files
+                # named part-<split>-<job uuid>-c000 into EVERY
+                # partition directory it touches, so identical basenames
+                # coexist across p_*= dirs (the same trap
+                # _files_matching documents). The partition values are
+                # recorded in the log (each add's partitionValues) AND
+                # present in the data (files are self-contained), so
+                # (basename, partition values) is an exact equi-join key
+                # with no URI decoding and no suffix-match BNLJ. Files
+                # are grouped by their recorded spec — spec evolution
+                # leaves old-era files carrying old-era partitionValues
+                # — and each group joins on its own key set.
+                by_spec: dict[tuple, list[str]] = {}
+                for rel in fresh:
+                    spec = tuple(sorted(live[rel].get("part") or {}))
+                    by_spec.setdefault(spec, []).append(rel)
+                known = set(schema.fieldNames())
+                for spec, rels in sorted(by_spec.items()):
+                    missing = [c for c in spec if c not in known]
+                    if missing:
+                        raise RuntimeError(
+                            "row tracking: live file partitioned by "
+                            f"column(s) {missing} absent from the "
+                            "version's schema; cannot disambiguate its "
+                            "row-id base"
+                        )
+                    rows = [
+                        (
+                            os.path.basename(p),
+                            *[
+                                (live[p].get("part") or {}).get(c)
+                                for c in spec
+                            ],
+                            bases[p],
+                        )
+                        for p in rels
+                    ]
+                    ddl = "fname string"
+                    for i in range(len(spec)):
+                        ddl += f", _pv{i} string"
+                    ddl += ", base long"
+                    bmap = local_frame(self.spark, rows, ddl)
+                    df = read(rels, phys).select(
+                        *logical_sel,
+                        F.element_at(
+                            F.split(F.col("_metadata.file_path"), "/"), -1
+                        ).alias("_fname"),
+                        F.col("_metadata.row_index").alias("_ri"),
+                    )
+                    cond = df["_fname"] == bmap["fname"]
+                    for i, c in enumerate(spec):
+                        # the recorded value IS the write-time
+                        # cast-to-string of the column (hive escaping
+                        # already undone at record time), so a
+                        # null-safe string compare is exact
+                        cond = cond & (
+                            df[c].cast("string").eqNullSafe(bmap[f"_pv{i}"])
+                        )
+                    parts.append(
+                        df.join(F.broadcast(bmap), cond).select(
+                            *[df[f.name] for f in schema.fields],
+                            (bmap["base"] + df["_ri"]).alias(ROWID_COL),
+                        )
+                    )
+            if mat:
+                df = read(
+                    mat,
+                    T.StructType(
+                        list(phys.fields)
+                        + [T.StructField(ROWID_COL, T.LongType())]
+                    ),
+                )
+                parts.append(df.select(*logical_sel, F.col(ROWID_COL)))
+            df = parts[0]
+            for extra in parts[1:]:
+                df = df.unionByName(extra)
+        if dvs:
+            df = df.join(
+                F.broadcast(self._tombstones(dvs)), self.keys, "left_anti"
             )
         return df
 
@@ -1315,16 +1435,7 @@ class TxnLogTable(ParquetTable):
         # pre-evolution snapshot shows the schema (and column names —
         # the mapping also resolves per version) of that era
         data, dvs = self._split_live(version)
-        base = self._scan_files(list(data), version)
-        if data and dvs:
-            # merge-on-read: tombstoned keys are subtracted at scan
-            # time by ONE anti-join against the (tiny) union of live
-            # deletion-vector files — a Delta/Iceberg v2 DV read
-            tomb = self.spark.read.schema(self._dv_schema()).parquet(
-                *[os.path.join(self.path, p) for p in dvs]
-            )
-            base = base.join(F.broadcast(tomb), self.keys, "left_anti")
-        return base
+        return self._scan(list(data), version, dvs)
 
     def _resolve_bloom(self, path: str, bloom: dict | None) -> dict | None:
         """Hex-bearing bloom dict for file ``path``: legacy inline
@@ -1392,14 +1503,8 @@ class TxnLogTable(ParquetTable):
         k0 = self.keys[0]
         vals = list(values)
         cands = self.lookup_candidates(vals, version)
-        base = self._scan_files(cands, version)
         _, dvs = self._split_live(version)
-        if dvs:
-            tomb = self.spark.read.schema(self._dv_schema()).parquet(
-                *[os.path.join(self.path, p) for p in dvs]
-            )
-            base = base.join(F.broadcast(tomb), self.keys, "left_anti")
-        return base.filter(F.col(k0).isin(vals))
+        return self._scan(cands, version, dvs).filter(F.col(k0).isin(vals))
 
     def scan_candidates(
         self, col: str, lo, hi, version: int | None = None
@@ -1432,14 +1537,8 @@ class TxnLogTable(ParquetTable):
         files instead of all of them. Merge-on-read deletion vectors
         are honored exactly as in :meth:`read`."""
         cands = self.scan_candidates(col, lo, hi, version)
-        base = self._scan_files(cands, version)
         _, dvs = self._split_live(version)
-        if dvs:
-            tomb = self.spark.read.schema(self._dv_schema()).parquet(
-                *[os.path.join(self.path, p) for p in dvs]
-            )
-            base = base.join(F.broadcast(tomb), self.keys, "left_anti")
-        return base.filter(
+        return self._scan(cands, version, dvs).filter(
             (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
         )
 
@@ -1452,45 +1551,23 @@ class TxnLogTable(ParquetTable):
         deletion vectors changed) the common files' rows for the tiny
         DV-delta key set. Returns the scan list so tests can pin the
         only-churn-is-read property."""
-        schema = self._schema_at(v_to)
         data_from, dv_from = self._split_live(v_from)
         data_to, dv_to = self._split_live(v_to)
-
-        def _read(paths, sch):
-            # deletion-vector reads: keys are never column-mapped
-            if not paths:
-                return local_frame(self.spark, [], sch)
-            return self.spark.read.schema(sch).parquet(
-                *[os.path.join(self.path, p) for p in paths]
-            )
-
         churn_old = [p for p in data_from if p not in data_to]
         churn_new = [p for p in data_to if p not in data_from]
         scanned = churn_old + churn_new
-        old_side = self._scan_files(churn_old, v_to, schema)
-        if dv_from:
-            old_side = old_side.join(
-                F.broadcast(_read(list(dv_from), self._dv_schema())),
-                self.keys,
-                "left_anti",
-            )
-        new_side = self._scan_files(churn_new, v_to, schema)
-        if dv_to:
-            new_side = new_side.join(
-                F.broadcast(_read(list(dv_to), self._dv_schema())),
-                self.keys,
-                "left_anti",
-            )
+        old_side = self._scan(churn_old, v_to, dv_from)
+        new_side = self._scan(churn_new, v_to, dv_to)
         common = [p for p in data_from if p in data_to]
         if common and set(dv_from) != set(dv_to):
             # identical bytes, different visibility: rows of common
             # files whose key entered (newly dead) or left (revived)
             # the DV set between the snapshots
-            t_from = _read(list(dv_from), self._dv_schema())
-            t_to = _read(list(dv_to), self._dv_schema())
+            t_from = self._tombstones(dv_from)
+            t_to = self._tombstones(dv_to)
             newly_dead = t_to.join(t_from, self.keys, "left_anti")
             revived = t_from.join(t_to, self.keys, "left_anti")
-            base = self._scan_files(common, v_to, schema)
+            base = self._scan(common, v_to)
             old_side = old_side.unionByName(
                 base.join(F.broadcast(newly_dead), self.keys, "left_semi")
             )
@@ -1936,21 +2013,14 @@ class TxnLogTable(ParquetTable):
         adds = []
         sidecar_masks: dict[str, str] = {}
         norm_out = os.path.normpath(out_dir)
-        from urllib.parse import unquote
-
         for r in stat_rows:
-            # input_file_name() returns a URI: the FILESYSTEM name is
-            # its single-unquote (space -> %20, and hive-escaped dirs
-            # like p_c=A%25B -> A%2525B in URI form). The log must
-            # store the literal on-disk path or every later consumer
-            # that doesn't URI-decode (pyarrow in the stream reader,
-            # os.remove in the zero-row scrub — which would otherwise
-            # DELETE freshly-written files it fails to match) breaks
-            # on any partition value needing escapes.
-            fp = unquote(r["_f"].split("?", 1)[0])
-            if fp.startswith("file:"):
-                fp = fp[len("file:") :]
-            sub = os.path.relpath(os.path.normpath(fp), norm_out)
+            # The log must store the literal on-disk path, not the URI,
+            # or every later consumer that doesn't URI-decode (pyarrow
+            # in the stream reader, os.remove in the zero-row scrub —
+            # which would otherwise DELETE freshly-written files it
+            # fails to match) breaks on any partition value needing
+            # escapes.
+            sub = os.path.relpath(_uri_path(r["_f"]), norm_out)
             action = {
                 "path": f"{rel_dir}/{sub}",
                 "rows": r["_rows"],
@@ -2233,24 +2303,22 @@ class TxnLogTable(ParquetTable):
                 ]
         return cands
 
-    def _read_files(self, relpaths: list[str]) -> DataFrame:
-        return self._scan_files(relpaths, None)
-
-    def _read_files_mor(
-        self, relpaths: list[str], version: int | None = None
-    ) -> DataFrame:
-        """Read data files with merge-on-read applied: the deletion
-        vectors live at ``version`` are subtracted, so rewrites never
-        re-materialize tombstoned rows (which would resurrect as
-        duplicates once a later write shrinks the DV)."""
-        df = self._read_files(relpaths)
-        _, dvs = self._split_live(version)
-        if dvs:
-            tomb = self.spark.read.schema(self._dv_schema()).parquet(
-                *[os.path.join(self.path, p) for p in dvs]
-            )
-            df = df.join(F.broadcast(tomb), self.keys, "left_anti")
-        return df
+    def _carried(self, relpaths: list[str], base: int | None) -> DataFrame:
+        """The rows a copy-on-write rewrite of ``relpaths`` carries,
+        read merge-on-read against the deletion vectors live at
+        ``base`` so a rewrite never re-materializes a tombstoned row
+        (it would resurrect as a duplicate once a later write shrinks
+        the DV). On a row-tracked table the rows carry ``_row_id``
+        (resolved at ``base``) so every survivor keeps the id it was
+        born with; otherwise the schema resolves at None, where a
+        pending merge_schema widening applies."""
+        tracked = self.row_tracking_enabled(base)
+        return self._scan(
+            relpaths,
+            base if tracked else None,
+            self._split_live(base)[1],
+            row_ids=tracked,
+        )
 
     def _dv_shrink_actions(
         self, incoming_keys: DataFrame, version: int | None = None
@@ -2271,9 +2339,9 @@ class TxnLogTable(ParquetTable):
         for relpath, meta in dvs.items():
             if not _overlaps(meta.get("stats"), bounds, self.keys):
                 continue
-            kept = self.spark.read.schema(self._dv_schema()).parquet(
-                os.path.join(self.path, relpath)
-            ).join(F.broadcast(incoming_keys), self.keys, "left_anti")
+            kept = self._tombstones([relpath]).join(
+                F.broadcast(incoming_keys), self.keys, "left_anti"
+            )
             actions.append({"remove": {"path": relpath}})
             actions.extend(self._write_files(kept, dv=True))
         return actions
@@ -2296,10 +2364,7 @@ class TxnLogTable(ParquetTable):
         _, dvs = self._split_live(version)
         if not dvs:
             return []
-        tomb = self.spark.read.schema(self._dv_schema()).parquet(
-            *[os.path.join(self.path, p) for p in dvs]
-        )
-        revived = tomb.join(
+        revived = self._tombstones(dvs).join(
             incoming_keys, self.keys, "left_semi"
         ).localCheckpoint(eager=True)  # probed, then pruned + shrunk on
         if not revived.take(1):
@@ -2308,7 +2373,7 @@ class TxnLogTable(ParquetTable):
         actions: list[dict] = [{"remove": {"path": p}} for p in doomed]
         if doomed:
             actions.extend(
-                self._write_files(self._read_files_mor(doomed, version))
+                self._write_files(self._scan(doomed, None, dvs))
             )
         actions.extend(self._dv_shrink_actions(revived, version))
         return actions
@@ -2338,6 +2403,29 @@ class TxnLogTable(ParquetTable):
         """
         if bounds is None:
             return False
+
+        def blocks(a: dict) -> bool:
+            if "remove" in a and a["remove"]["path"] in doomed:
+                return True
+            add = a.get("add")
+            return bool(add) and _overlaps(
+                self._file_stats(
+                    {"stats": add.get("stats"), "part": add.get("part")}
+                ),
+                bounds,
+                self.keys,
+            )
+
+        return self._rebase_safe(from_v, to_v, blocks)
+
+    def _rebase_safe(
+        self, from_v: int | None, to_v: int | None, blocks
+    ) -> bool:
+        """The walk every rebase check shares: can a commit staged
+        against ``from_v`` land verbatim on ``to_v``? False on a
+        missing log entry, a restore, a metadata or constraint action
+        (the table changed shape under us), or any action the caller's
+        ``blocks(action)`` flags."""
         start = 0 if from_v is None else from_v + 1
         end = -1 if to_v is None else to_v
         for v in range(start, end + 1):
@@ -2347,18 +2435,7 @@ class TxnLogTable(ParquetTable):
             if entry.get("op") == "restore":
                 return False
             for a in entry["actions"]:
-                if "metadata" in a or "constraint" in a:
-                    return False
-                if "remove" in a and a["remove"]["path"] in doomed:
-                    return False
-                add = a.get("add")
-                if add and _overlaps(
-                    self._file_stats(
-                        {"stats": add.get("stats"), "part": add.get("part")}
-                    ),
-                    bounds,
-                    self.keys,
-                ):
+                if "metadata" in a or "constraint" in a or blocks(a):
                     return False
         return True
 
@@ -2470,26 +2547,17 @@ class TxnLogTable(ParquetTable):
           keys (our new row would land already-tombstoned — the append
           must instead recompute its revive actions).
         """
-        start = 0 if from_v is None else from_v + 1
-        end = -1 if to_v is None else to_v
-        for v in range(start, end + 1):
-            if not os.path.exists(self._log_path(v)):
-                return False
-            entry = self._entry(v)
-            if entry.get("op") == "restore":
-                return False
-            for a in entry["actions"]:
-                if "metadata" in a or "constraint" in a:
-                    return False
-                add = a.get("add")
-                if (
-                    add
-                    and add.get("dv")
-                    and bounds is not None
-                    and _overlaps(add.get("stats"), bounds, self.keys)
-                ):
-                    return False
-        return True
+
+        def blocks(a: dict) -> bool:
+            add = a.get("add")
+            return bool(
+                add
+                and add.get("dv")
+                and bounds is not None
+                and _overlaps(add.get("stats"), bounds, self.keys)
+            )
+
+        return self._rebase_safe(from_v, to_v, blocks)
 
     def _drop_staged(self, adds: list[dict] | None) -> None:
         for a in adds or []:
@@ -2700,7 +2768,9 @@ class TxnLogTable(ParquetTable):
         # existence is judged on the MOR view: a DV-deleted key is NOT
         # existing, so re-inserting it must succeed
         fresh = incoming.join(
-            self._read_files_mor(affected, base).select(self.keys),
+            self._scan(affected, None, self._split_live(base)[1]).select(
+                self.keys
+            ),
             self.keys,
             "left_anti",
         )
@@ -2728,16 +2798,14 @@ class TxnLogTable(ParquetTable):
             if bounds is not None
             else []
         )
+        olds = self._carried(affected, base)
+        kept = olds.join(incoming.select(self.keys), self.keys, "left_anti")
         if self.row_tracking_enabled(base):
             # Delta row-tracking semantics: matched rows KEEP their
             # stable id through the rewrite (inherited via one keyed
             # join against the affected region's ids); brand-new keys
             # land in a separate non-materialized file set and get
             # fresh lazy ids above the high-water mark.
-            olds = self._read_files_mor_with_row_ids(affected, base)
-            kept = olds.join(
-                incoming.select(self.keys), self.keys, "left_anti"
-            )
             inc = incoming.join(
                 olds.select(*self.keys, ROWID_COL),
                 self.keys,
@@ -2750,9 +2818,6 @@ class TxnLogTable(ParquetTable):
                 inc.filter(F.col(ROWID_COL).isNull()).drop(ROWID_COL),
             ]
         else:
-            kept = self._read_files_mor(affected, base).join(
-                incoming.select(self.keys), self.keys, "left_anti"
-            )
             out = kept.unionByName(incoming)
         self._rewrite(
             "upsert",
@@ -2775,12 +2840,9 @@ class TxnLogTable(ParquetTable):
         )
         if not affected:
             return
-        src = (
-            self._read_files_mor_with_row_ids(affected, base)
-            if self.row_tracking_enabled(base)
-            else self._read_files_mor(affected, base)
+        out = self._carried(affected, base).join(
+            keys_df, self.keys, "left_anti"
         )
-        out = src.join(keys_df, self.keys, "left_anti")
         self._rewrite(
             "delete_keys",
             affected,
@@ -2823,33 +2885,31 @@ class TxnLogTable(ParquetTable):
         any one matched — predicate update/delete/replace_where then
         rewrote the whole table instead of the predicate's region
         (found by s36's untouched-files assertion, round 8)."""
-        from urllib.parse import unquote
-
         live = list(self._split_live(version)[0])
         if not live:
             return []
-        hits = set()
-        for r in (
-            self._read_files(live)
+        return self._files_named(
+            self._scan(live, None)
             .filter(condition)
-            .select(F.input_file_name().alias("_f"))
-            .distinct()
-            .collect()
-        ):
-            # input_file_name() is a (possibly percent-encoded) URI:
-            # strip query + scheme, decode, normalize to a local path
-            f = unquote(r["_f"].split("?", 1)[0])
-            if f.startswith("file:"):
-                f = "/" + f.split(":", 1)[1].lstrip("/")
-            hits.add(os.path.normpath(f))
+            .select(F.input_file_name().alias("_f")),
+            live,
+        )
+
+    def _files_named(
+        self, files: DataFrame, relpaths: list[str]
+    ) -> list[str]:
+        """The ``relpaths`` named by the ``_f`` (``input_file_name()``)
+        column of ``files`` — one distinct projection returns file
+        NAMES to the driver, never rows."""
+        hits = {
+            _uri_path(r["_f"])
+            for r in files.select("_f").distinct().collect()
+        }
         root = os.path.normpath(os.path.abspath(self.path))
         return [
             p
-            for p in live
-            if os.path.normpath(
-                p if os.path.isabs(p) else os.path.join(root, p)
-            )
-            in hits
+            for p in relpaths
+            if os.path.normpath(os.path.join(root, p)) in hits
         ]
 
     def update(self, condition: Column, assignments: dict[str, Column]) -> None:
@@ -2861,11 +2921,7 @@ class TxnLogTable(ParquetTable):
         # copy-on-write rewrite — updated rows included (a Delta row id
         # names the row, not the row version; lineage across an update
         # is exactly what the id is for, change history is the CDF's)
-        df = (
-            self._read_files_mor_with_row_ids(affected, base)
-            if self.row_tracking_enabled(base)
-            else self._read_files_mor(affected, base)
-        )
+        df = self._carried(affected, base)
         out = df.select(
             *[
                 F.when(condition, assignments[c]).otherwise(F.col(c)).alias(c)
@@ -2892,12 +2948,9 @@ class TxnLogTable(ParquetTable):
         # keeps its row (SQL DELETE semantics) — matters exactly when
         # a rewritten file carries both matching and NULL-predicate
         # rows (same fix as ParquetTable.delete)
-        src = (
-            self._read_files_mor_with_row_ids(affected, base)
-            if self.row_tracking_enabled(base)
-            else self._read_files_mor(affected, base)
+        out = self._carried(affected, base).filter(
+            ~F.coalesce(condition, F.lit(False))
         )
-        out = src.filter(~F.coalesce(condition, F.lit(False)))
         self._rewrite("delete", affected, out, expected_version=base)
 
     def replace_where(self, rows: DataFrame, condition: Column) -> None:
@@ -2941,7 +2994,7 @@ class TxnLogTable(ParquetTable):
         ]
         if outside:
             clash = (
-                self._read_files_mor(outside, base)
+                self._scan(outside, None, self._split_live(base)[1])
                 .filter(~F.coalesce(condition, F.lit(False)))
                 .join(
                     incoming.select(*self.keys), self.keys, "left_semi"
@@ -2956,12 +3009,9 @@ class TxnLogTable(ParquetTable):
                 )
         tracked = self.row_tracking_enabled(base)
         if affected:
-            src = (
-                self._read_files_mor_with_row_ids(affected, base)
-                if tracked
-                else self._read_files_mor(affected, base)
+            kept = self._carried(affected, base).filter(
+                ~F.coalesce(condition, F.lit(False))
             )
-            kept = src.filter(~F.coalesce(condition, F.lit(False)))
             # carried rows keep their ids (materialized write); the
             # replacement region's rows are NEW rows — fresh lazy ids
             out: DataFrame | list[DataFrame] = (
@@ -3012,7 +3062,6 @@ class TxnLogTable(ParquetTable):
                 list(self.schema.fields)
                 + [T.StructField(ROWID_COL, T.LongType())]
             )
-            target = self._read_files_mor_with_row_ids(affected, base)
             # a source carrying a (user-supplied) _row_id column would
             # be mistaken for an id assignment — ids are allocated by
             # the table, never by callers
@@ -3020,11 +3069,10 @@ class TxnLogTable(ParquetTable):
                 source = source.drop(ROWID_COL)
         else:
             schema = self.schema
-            target = self._read_files_mor(affected, base)
         out = merge_frame(
             schema,
             self.keys,
-            target,
+            self._carried(affected, base),
             source,
             update_assign,
             update_cond,
@@ -3052,7 +3100,7 @@ class TxnLogTable(ParquetTable):
         target_files: int,
         cluster_by: list[str] | None = None,
         zorder_by: tuple[str, ...] | None = None,
-    ) -> None:
+    ) -> int:
         """Small-files compaction; with ``cluster_by``, a CLUSTERED
         rewrite (Delta OPTIMIZE ZORDER / liquid-clustering shape):
         range-partition + sort on the cluster columns so each output
@@ -3061,20 +3109,16 @@ class TxnLogTable(ParquetTable):
         maximally selective — a keyed write then prunes to exactly one
         file instead of every file overlapping a broad hash-mixed
         range. This composes the two halves (stats skipping + layout)
-        the same way a lakehouse does."""
+        the same way a lakehouse does. Returns the committed version."""
         base = self.current_version()
         data, dvs = self._split_live(base)
         live = list(data) + list(dvs)
         # On a row-tracked table compaction MUST preserve ids (the
         # min_writer=3 gate exists to keep unaware writers from
         # breaking lineage — the aware writer can hardly break it
-        # itself): read with ids attached so the rewrite materializes
-        # them, exactly like compact_preserving_row_ids.
-        df = (
-            self.read_with_row_ids(base)
-            if self.row_tracking_enabled(base)
-            else self._read_files_mor(list(data), base)
-        )
+        # itself): the carried rows keep their ids attached, so the
+        # rewrite materializes them.
+        df = self._carried(list(data), base)
         if zorder_by:
             # OPTIMIZE ZORDER: Morton-interleave N NUMERIC dims
             # (operators/layout.py) so each output file owns a small
@@ -3104,7 +3148,7 @@ class TxnLogTable(ParquetTable):
             )
         else:
             df = df.repartition(target_files)
-        self._rewrite("compact", live, df, expected_version=base)
+        return self._rewrite("compact", live, df, expected_version=base)
 
     def compact_small(
         self, max_rows: int, target_files: int | None = None
@@ -3132,11 +3176,7 @@ class TxnLogTable(ParquetTable):
         n_out = target_files or max(1, -(-total // max_rows))
         # same id-preservation rule as compact(): bin-packed rows on a
         # row-tracked table carry their ids into the rewritten files
-        df = (
-            self._read_files_mor_with_row_ids(small, base)
-            if self.row_tracking_enabled(base)
-            else self._read_files_mor(small, base)
-        )
+        df = self._carried(small, base)
         if self.partition_by:
             df = df.repartition(
                 n_out, *[F.col(c) for c in self.partition_by]
@@ -3165,41 +3205,24 @@ class TxnLogTable(ParquetTable):
         data, dvs = self._split_live(base)
         if not dvs:
             return None
-        from urllib.parse import unquote
-
-        tomb = self.spark.read.schema(self._dv_schema()).parquet(
-            *[os.path.join(self.path, p) for p in dvs]
-        )
+        tomb = self._tombstones(dvs)
         # candidate files by stats/bloom overlap, then EXACT: which
         # candidates actually hold a tombstoned row (same discovery
         # shape as _files_matching — file names to the driver, no rows)
         cand = self._affected(tomb, base)
-        hits: list[str] = []
-        if cand:
-            seen = set()
-            for r in (
+        hits = (
+            self._files_named(
                 # file name projected BEFORE the join: input_file_name
                 # is per-scan, and Spark refuses it above a two-source
                 # join
-                self._read_files(cand)
-                .select(
-                    *self.keys, F.input_file_name().alias("_f")
-                )
-                .join(F.broadcast(tomb), self.keys, "left_semi")
-                .select("_f")
-                .distinct()
-                .collect()
-            ):
-                f = unquote(r["_f"].split("?", 1)[0])
-                if f.startswith("file:"):
-                    f = "/" + f.split(":", 1)[1].lstrip("/")
-                seen.add(os.path.normpath(f))
-            root = os.path.normpath(os.path.abspath(self.path))
-            hits = [
-                p
-                for p in cand
-                if os.path.normpath(os.path.join(root, p)) in seen
-            ]
+                self._scan(cand, None)
+                .select(*self.keys, F.input_file_name().alias("_f"))
+                .join(F.broadcast(tomb), self.keys, "left_semi"),
+                cand,
+            )
+            if cand
+            else []
+        )
         if not hits:
             # every DV entry is inert (points at rewritten/removed
             # files): dropping the tombstones is metadata-only
@@ -3208,15 +3231,10 @@ class TxnLogTable(ParquetTable):
                 [{"remove": {"path": p}} for p in dvs],
                 base,
             )
-        src = (
-            self._read_files_mor_with_row_ids(hits, base)
-            if self.row_tracking_enabled(base)
-            else self._read_files_mor(hits, base)
-        )
         return self._rewrite(
             "purge_dv",
             hits + list(dvs),
-            src,
+            self._carried(hits, base),
             expected_version=base,
         )
 
@@ -3294,150 +3312,6 @@ class TxnLogTable(ParquetTable):
         rowid = self._snapshot(version)["rowid"]
         return dict(rowid["bases"]), rowid["hwm"]
 
-    def _attach_row_ids(
-        self, data: dict[str, dict], version: int | None
-    ) -> DataFrame:
-        """Logical-schema read of the given data files with the stable
-        ``_row_id`` column attached (no DV subtraction — callers apply
-        it). Files written by a preserving rewrite carry the id
-        physically (the column is trusted over the lazy formula — this
-        also self-heals a restore that re-referenced materialized files
-        without the flag); fresh files compute base +
-        _metadata.row_index with the per-file base joined in from a
-        broadcast map."""
-        import pyspark.sql.types as T
-
-        schema = self._schema_at(version)
-        out_schema = T.StructType(
-            list(schema.fields)
-            + [T.StructField(ROWID_COL, T.LongType(), False)]
-        )
-        if not data:
-            return local_frame(self.spark, [], out_schema)
-        import pyarrow.parquet as pq
-
-        mat, fresh = [], []
-        for rel in data:
-            names = pq.read_schema(
-                os.path.join(self.path, rel)
-            ).names
-            (mat if ROWID_COL in names else fresh).append(rel)
-        m = self._mapping_at(version)
-        phys_fields = [
-            T.StructField(m.get(f.name, f.name), f.dataType, f.nullable)
-            for f in schema.fields
-        ]
-        logical_sel = [
-            F.col(m.get(f.name, f.name)).alias(f.name)
-            for f in schema.fields
-        ]
-        parts = []
-        if fresh:
-            bases, _ = self._row_id_bases(version)
-            # Base-map join key: the basename alone is NOT unique on a
-            # partitioned table — one write job's task emits files
-            # named part-<split>-<job uuid>-c000 into EVERY partition
-            # directory it touches, so identical basenames coexist
-            # across p_*= dirs (the same trap _files_matching
-            # documents). The partition values are recorded in the log
-            # (each add's partitionValues) AND present in the data
-            # (files are self-contained), so (basename, partition
-            # values) is an exact equi-join key with no URI decoding
-            # and no suffix-match BNLJ. Files are grouped by their
-            # recorded spec — spec evolution leaves old-era files
-            # carrying old-era partitionValues — and each group joins
-            # on its own key set.
-            by_spec: dict[tuple, list[str]] = {}
-            for rel in fresh:
-                spec = tuple(sorted(data[rel].get("part") or {}))
-                by_spec.setdefault(spec, []).append(rel)
-            known = set(schema.fieldNames())
-            for spec, rels in sorted(by_spec.items()):
-                missing = [c for c in spec if c not in known]
-                if missing:
-                    raise RuntimeError(
-                        "row tracking: live file partitioned by "
-                        f"column(s) {missing} absent from the "
-                        "version's schema; cannot disambiguate its "
-                        "row-id base"
-                    )
-                rows = [
-                    (
-                        os.path.basename(p),
-                        *[
-                            (data[p].get("part") or {}).get(c)
-                            for c in spec
-                        ],
-                        bases[p],
-                    )
-                    for p in rels
-                ]
-                ddl = "fname string"
-                for i in range(len(spec)):
-                    ddl += f", _pv{i} string"
-                ddl += ", base long"
-                bmap = local_frame(self.spark, rows, ddl)
-                df = (
-                    self.spark.read.schema(T.StructType(phys_fields))
-                    .parquet(
-                        *[os.path.join(self.path, p) for p in rels]
-                    )
-                    .select(
-                        *logical_sel,
-                        F.element_at(
-                            F.split(
-                                F.col("_metadata.file_path"), "/"
-                            ),
-                            -1,
-                        ).alias("_fname"),
-                        F.col("_metadata.row_index").alias("_ri"),
-                    )
-                )
-                cond = df["_fname"] == bmap["fname"]
-                for i, c in enumerate(spec):
-                    # the recorded value IS the write-time
-                    # cast-to-string of the column (hive escaping
-                    # already undone at record time), so a null-safe
-                    # string compare is exact
-                    cond = cond & (
-                        df[c].cast("string").eqNullSafe(bmap[f"_pv{i}"])
-                    )
-                parts.append(
-                    df.join(F.broadcast(bmap), cond).select(
-                        *[df[f.name] for f in schema.fields],
-                        (bmap["base"] + df["_ri"]).alias(ROWID_COL),
-                    )
-                )
-        if mat:
-            df = self.spark.read.schema(
-                T.StructType(
-                    phys_fields + [T.StructField(ROWID_COL, T.LongType())]
-                )
-            ).parquet(*[os.path.join(self.path, p) for p in mat])
-            parts.append(df.select(*logical_sel, F.col(ROWID_COL)))
-        out = parts[0]
-        for extra in parts[1:]:
-            out = out.unionByName(extra)
-        return out
-
-    def _read_files_mor_with_row_ids(
-        self, relpaths: list[str], version: int | None = None
-    ) -> DataFrame:
-        """:meth:`_read_files_mor` with ``_row_id`` attached — the
-        id-preserving rewrites (update/delete/upsert/merge/compaction
-        on a row-tracked table) read their affected region through
-        this so surviving rows keep the ids they were born with."""
-        data, dvs = self._split_live(version)
-        df = self._attach_row_ids(
-            {p: data[p] for p in relpaths}, version
-        )
-        if dvs:
-            tomb = self.spark.read.schema(self._dv_schema()).parquet(
-                *[os.path.join(self.path, p) for p in dvs]
-            )
-            df = df.join(F.broadcast(tomb), self.keys, "left_anti")
-        return df
-
     def _split_by_rowid(self, out: DataFrame) -> list[DataFrame]:
         """Split a mixed rewrite frame into [carried rows (non-null
         ``_row_id``, written materialized), new rows (null ``_row_id``,
@@ -3457,32 +3331,18 @@ class TxnLogTable(ParquetTable):
                 "(call enable_row_tracking() first)"
             )
         data, dvs = self._split_live(version)
-        out = self._attach_row_ids(data, version)
-        if dvs:
-            tomb = self.spark.read.schema(self._dv_schema()).parquet(
-                *[os.path.join(self.path, p) for p in dvs]
-            )
-            out = out.join(F.broadcast(tomb), self.keys, "left_anti")
-        return out
+        return self._scan(list(data), version, dvs, row_ids=True)
 
     def compact_preserving_row_ids(self, target_files: int) -> int:
-        """Compaction that PRESERVES row ids: reads with ids attached,
-        materializes ``_row_id`` into the rewritten files, and flags
-        the adds so the high-water mark is untouched — after any
-        number of compactions, every surviving row keeps the id it was
-        born with and the next append continues exactly where the
-        pre-compact table left off."""
-        base = self.current_version()
-        if not self.row_tracking_enabled(base):
+        """:meth:`compact` on a table that must be row-tracked: reads
+        with ids attached, materializes ``_row_id`` into the rewritten
+        files, and flags the adds so the high-water mark is untouched —
+        after any number of compactions, every surviving row keeps the
+        id it was born with and the next append continues exactly where
+        the pre-compact table left off."""
+        if not self.row_tracking_enabled(self.current_version()):
             raise RuntimeError("row tracking is not enabled")
-        data, dvs = self._split_live(base)
-        df = self.read_with_row_ids(base).repartition(target_files)
-        return self._rewrite(
-            "compact_rowid",
-            list(data) + list(dvs),
-            df,
-            expected_version=base,
-        )
+        return self.compact(target_files)
 
     # -- optimistic concurrency / retention ----------------------------------
 

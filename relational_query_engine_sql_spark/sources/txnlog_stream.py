@@ -238,7 +238,7 @@ def _declared_arrow_types(schema) -> dict:
 def _project_file_table(table, want, logical_to_phys, arrow_types):
     """Project ONE data file's raw Arrow table (immutable PHYSICAL
     column names on disk) to the logical column list ``want`` — what
-    ``TxnLogTable._scan_files`` (operators/txnlog.py) does through a
+    ``TxnLogTable._scan`` (operators/txnlog.py) does through a
     Spark read schema, done here on Arrow inside the executor: resolve
     each logical name to its PHYSICAL
     name and select by that, so a RETIRED physical column whose name
@@ -697,29 +697,15 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
                 # pure adds: safe over any intervening commit except a
                 # table-shape change or an overlapping DV (unknown key
                 # bounds here, so ANY deletion-vector add blocks)
-                if not self._adds_safe(t, base, new_base):
+                if not t._rebase_safe(
+                    base, new_base, lambda a: bool(a.get("add", {}).get("dv"))
+                ):
                     self._drop(staged)
                     raise
         self._drop(staged)
         raise CommitConflict(
             f"txnlog sink gave up after 10 rebases (batch {batchId})"
         )
-
-    def _adds_safe(self, t, from_v, to_v) -> bool:
-        start = 0 if from_v is None else from_v + 1
-        end = -1 if to_v is None else to_v
-        for v in range(start, end + 1):
-            if not os.path.exists(t._log_path(v)):
-                return False
-            entry = t._entry(v)
-            if entry.get("op") == "restore":
-                return False
-            for a in entry["actions"]:
-                if "metadata" in a or "constraint" in a:
-                    return False
-                if a.get("add", {}).get("dv"):
-                    return False
-        return True
 
     def _drop(self, staged) -> None:
         import shutil

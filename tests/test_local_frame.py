@@ -18,6 +18,10 @@
   file writer writes parquet with pyarrow.
 - The package reads only four deployment settings from the
   environment; tuning gates are module constants.
+- ``TxnLogTable`` reads parquet through one merge-on-read scan: only
+  ``_scan`` and the deletion-vector read ``_tombstones`` (plus the
+  write-time stats pass) call ``spark.read``, and only ``_carried``
+  and ``read_with_row_ids`` ask the scan for row ids.
 """
 
 from __future__ import annotations
@@ -351,3 +355,50 @@ def test_environment_read_only_for_deployment_settings():
     ]
     assert len(gets) == len(refs)
     assert set(gets) == _ENV_NAMES
+
+
+# TxnLogTable's parquet reads: the merge-on-read scan, the one read of
+# deletion-vector files, and the stats pass over files just written.
+_TXNLOG_READS = {"_scan": 1, "_tombstones": 1, "_write_files": 2}
+# the two callers that choose whether the scan attaches _row_id: the
+# copy-on-write rewrites' reader, and the public row-id read
+_ROW_ID_CHOOSERS = {"_carried", "read_with_row_ids"}
+
+
+def test_txnlog_reads_through_one_scan():
+    def txnlog(match):
+        return [
+            (scope, node)
+            for rel, scope, node in _sites(match)
+            if rel == "operators/txnlog.py"
+        ]
+
+    reads: dict[str, int] = {}
+    for scope, _ in txnlog(
+        lambda n: isinstance(n, ast.Attribute)
+        and n.attr == "read"
+        and isinstance(n.value, ast.Attribute)
+        and n.value.attr == "spark"
+    ):
+        reads[scope] = reads.get(scope, 0) + 1
+    assert reads == _TXNLOG_READS
+    choosers = {
+        scope
+        for scope, node in txnlog(
+            lambda n: isinstance(n, ast.Call)
+            and _call_name(n) == "_scan"
+            and any(k.arg == "row_ids" for k in n.keywords)
+        )
+    }
+    assert choosers == _ROW_ID_CHOOSERS
+    defined = {
+        node.name
+        for _, node in txnlog(lambda n: isinstance(n, ast.FunctionDef))
+    }
+    assert not defined & {
+        "_read_files",
+        "_read_files_mor",
+        "_read_files_mor_with_row_ids",
+        "_scan_files",
+        "_attach_row_ids",
+    }

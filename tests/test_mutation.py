@@ -16,6 +16,7 @@ from relational_query_engine_sql_spark.operators.stats_cache import (
     statistics_cache_table,
 )
 from relational_query_engine_sql_spark.operators.trading import (
+    _apply_trades_fold,
     apply_trades,
     apply_trades_closed_form,
     cash_deltas,
@@ -205,7 +206,7 @@ def test_closed_form_matches_fold_on_path_independent_batch(spark):
     )
     fold = {
         (r.portfolioid, r.symbol): r
-        for r in apply_trades(holdings, trades).collect()
+        for r in _apply_trades_fold(holdings, trades).collect()
     }
     closed = {
         (r.portfolioid, r.symbol): r
@@ -269,7 +270,7 @@ def test_closed_form_matches_fold_on_u2_derived_batch(spark):
     trades = buys.unionByName(sells)
     fold = {
         (r.portfolioid, r.symbol): (r.shares, r.avgprice, r.rejected)
-        for r in apply_trades(holdings, trades).collect()
+        for r in _apply_trades_fold(holdings, trades).collect()
     }
     closed = {
         (r.portfolioid, r.symbol): (r.shares, r.avgprice, r.rejected)

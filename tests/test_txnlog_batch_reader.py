@@ -288,7 +288,7 @@ def test_batch_reader_drop_then_readd_does_not_resurrect(spark, tmp_path):
     """Old-era files still carry the RETIRED physical column whose
     name equals the re-added logical column; projecting by name would
     resurrect the dropped era's bytes. The format reader must project
-    by PHYSICAL schema like TxnLogTable._scan_files: NULL over the old
+    by PHYSICAL schema like TxnLogTable._scan: NULL over the old
     files, real values only from post-re-add writes."""
     spark.dataSource.register(TxnLogStreamDataSource)
     t = TxnLogTable(spark, str(tmp_path / "rr"), SCHEMA, ["id"])

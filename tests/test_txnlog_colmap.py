@@ -226,6 +226,48 @@ def test_cdf_across_rename(spark, table):
     assert post["note"] == "upd"
 
 
+@pytest.mark.parametrize(
+    "reader",
+    ["read", "lookup", "read_where", "read_with_row_ids", "table_changes"],
+)
+def test_tracked_mapped_reads_hide_tombstones(spark, table, reader):
+    """On a row-tracked, column-mapped table with live deletion
+    vectors, every read path shows logical column names and hides the
+    tombstoned keys: 205 (a file written after ``v``) is absent even
+    from the change feed, and 7 (a file live at ``v``) shows there
+    only as its delete."""
+    table.rename_column("comment", "note")
+    table.enable_row_tracking()
+    v = table.current_version()
+    table.append(
+        _frame(spark, 200, 210, tag="n").withColumnRenamed("comment", "note")
+    )
+    table.delete_keys_deferred(
+        spark.createDataFrame([(7,), (205,)], "id long")
+    )
+    out = {
+        "read": lambda: table.read(),
+        "lookup": lambda: table.lookup([7, 205, 206]),
+        "read_where": lambda: table.read_where("id", 0, 209),
+        "read_with_row_ids": lambda: table.read_with_row_ids(),
+        "table_changes": lambda: table.table_changes(v),
+    }[reader]()
+    extra = {
+        "read_with_row_ids": ["_row_id"],
+        "table_changes": ["_change_type"],
+    }.get(reader, [])
+    assert out.columns == ["id", "price", "note", "flag"] + extra
+    rows = {r["id"]: r for r in out.collect()}
+    assert 205 not in rows
+    assert rows[206]["note"] == "n206"
+    if reader == "table_changes":
+        assert rows[7]["_change_type"] == "delete"
+        assert rows[7]["note"] == "c7"
+        assert len(rows) == 10  # 9 inserts and the delete
+    else:
+        assert 7 not in rows
+
+
 def test_stream_source_reads_logical_names(spark, tmp_path):
     from relational_query_engine_sql_spark.sources.txnlog_stream import (
         TxnLogStreamDataSource,
@@ -268,7 +310,7 @@ def test_stream_source_drop_then_readd_does_not_resurrect(
 ):
     """Old-era files carry the RETIRED physical column whose name
     equals the re-added logical column; the stream source must project
-    by PHYSICAL schema (TxnLogTable._scan_files parity) so the dropped
+    by PHYSICAL schema (TxnLogTable._scan parity) so the dropped
     era's bytes never resurrect and pre-evolution files null-fill."""
     from relational_query_engine_sql_spark.sources.txnlog_stream import (
         TxnLogStreamDataSource,

@@ -20,9 +20,8 @@ import os
 import sys
 import time
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
@@ -109,6 +108,12 @@ def main() -> int:
     ap.add_argument("--only", default="", help="comma-separated names")
     args = ap.parse_args()
 
+    # the JVM and its Python workers inherit the environment at
+    # session start: without the checkout on PYTHONPATH, a worker
+    # started from another directory cannot import the package
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark()
     con = duckdb.connect()
     for t in DRIVER_TABLES:
