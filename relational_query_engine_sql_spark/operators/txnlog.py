@@ -193,16 +193,13 @@ def _bloom_positions_py(v, m: int, j: int) -> list[int] | None:
     of ``m`` bits / ``j`` probes (the WRITER's recorded geometry);
     None when the value's string form may not match Spark's cast (no
     prune)."""
-    import hashlib
-
     if isinstance(v, bool) or not isinstance(
         v, (int, str, datetime.date)
     ):
         return None
     if isinstance(v, datetime.datetime):  # date subclass, but formats
         return None  # with a time component Spark won't reproduce
-    h = hashlib.md5(str(v).encode()).hexdigest()
-    return [int(h[4 * i : 4 * i + 4], 16) % m for i in range(j)]
+    return [s % m for s in _key_slices(v, j)]
 
 
 def _bloom_contains(bloom: dict, v) -> bool:
@@ -483,6 +480,174 @@ def _overlaps(stats: dict | list | None, bounds: dict, keys: list[str]) -> bool:
         if not _col_overlaps(stats.get(col), lo, hi):
             return False
     return True
+
+
+# -- add-action builder ------------------------------------------------------
+#
+# Every data file either writer stages — TxnLogTable._write_files and
+# the streaming sink's write task (sources/txnlog_stream.py) — gets its
+# add-action here, so the same rows carry the same per-file metadata
+# whichever path wrote them.
+
+
+def _stat_columns(schema, keys: list[str]) -> list[str]:
+    """The columns a file's add-action records min/max stats for:
+    every key column, then the prunable columns of ``schema`` in order
+    up to STATS_MAX_COLS (Delta's dataSkippingNumIndexedCols), so
+    predicate scans — not just keyed mutations — skip files."""
+    cols = list(keys)
+    for f in schema.fields:
+        if len(cols) >= STATS_MAX_COLS:
+            break
+        base = f.dataType.simpleString().split("(")[0]
+        if f.name not in cols and base in _STATS_COL_TYPES:
+            cols.append(f.name)
+    return cols
+
+
+def _bloom_key(schema, keys: list[str]) -> str | None:
+    """The column a file's bloom mask covers: the first key, when its
+    type is one whose driver-side string form matches Spark's cast."""
+    if keys and schema[keys[0]].dataType.simpleString() in _BLOOM_KEY_TYPES:
+        return keys[0]
+    return None
+
+
+def _key_slices(v, j: int = BLOOM_PROBES) -> list[int]:
+    """The ``j`` raw 16-bit probe slices of key ``v``: hex slices
+    [0:4), [4:8), ... of md5(str(v)), the executor-side
+    ``md5(cast(key as string))`` for ``_BLOOM_KEY_TYPES``. A mask of
+    ``m`` bits sets bit ``slice % m``."""
+    import hashlib
+
+    h = hashlib.md5(str(v).encode()).hexdigest()
+    return [int(h[4 * i : 4 * i + 4], 16) for i in range(j)]
+
+
+def _naive_utc(v):
+    """A tz-aware datetime (parquet TIMESTAMP adjusted-to-UTC, or an
+    Arrow batch's session-zone timestamp) as the naive-UTC datetime
+    Spark collects under the pinned UTC session; anything else as is."""
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return v
+
+
+def _arrow_stat_row(tbl, stat_cols: list[str], bloom_col: str | None) -> dict:
+    """One file's stats from its rows as an Arrow table, shaped like a
+    row of the Spark stats aggregate in ``_write_files``: "_rows",
+    "_mn{i}"/"_mx{i}" per stat column, and "_bp{j}" raw 16-bit probe
+    slices of ``bloom_col`` when given.
+
+    Value parity with the aggregate, column type by type:
+    ints/strings/floats/dates/Decimals collect to the same Python
+    objects pyarrow's ``as_py`` yields; timestamps are normalized to
+    naive-UTC; float NaN follows Spark's ordering (NaN greatest: max
+    is NaN when any value is NaN, min ignores NaN unless all are);
+    string comparison is code-point order on both sides (UTF-8 byte
+    order == code-point order); nulls are skipped."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    row: dict = {"_rows": tbl.num_rows}
+    for i, c in enumerate(stat_cols):
+        col = tbl.column(c)
+        if not pa.types.is_floating(col.type):
+            mm = pc.min_max(col)
+            row[f"_mn{i}"] = _naive_utc(mm["min"].as_py())
+            row[f"_mx{i}"] = _naive_utc(mm["max"].as_py())
+            continue
+        # Arrow's min_max skips NaN, so floats take a Python loop
+        vals = [v for v in col.to_pylist() if v is not None]
+        if not vals:
+            row[f"_mn{i}"] = row[f"_mx{i}"] = None
+            continue
+        nn = [v for v in vals if not math.isnan(v)]
+        row[f"_mn{i}"] = min(nn) if nn else math.nan
+        row[f"_mx{i}"] = max(nn) if len(nn) == len(vals) else math.nan
+    if bloom_col is not None:
+        slices: list[set] = [set() for _ in range(BLOOM_PROBES)]
+        for v in set(tbl.column(bloom_col).to_pylist()):
+            if v is not None:
+                for s, p in zip(slices, _key_slices(_naive_utc(v))):
+                    s.add(p)
+        for j, s in enumerate(slices):
+            row[f"_bp{j}"] = sorted(s)
+    return row
+
+
+def _add_actions(
+    root: str,
+    rel_dir: str,
+    files: list[tuple[str, dict]],
+    stat_cols: list[str],
+    partition_by=(),
+    **flags,
+) -> list[dict]:
+    """The add-actions of data files staged under ``rel_dir`` of the
+    table at ``root``. ``files`` is [(relpath, stats row)], each row
+    shaped like ``_arrow_stat_row``'s. An action records the file's
+    row count, [min, max] per stat column as JSON-safe values
+    (``_js``), its partition values parsed from the
+    ``p_<col>=<value>`` directories of ``partition_by`` (Delta's
+    partitionValues, as hive-path strings), a bloom reference when the
+    row carries probe slices, and the ``flags`` that are set.
+
+    The mask is sized per file from the distinct-slice count (~
+    distinct keys; collisions only shrink it, under-sizing m by at
+    most the birthday-bound slack): m = the next power of two >=
+    BLOOM_BITS_PER_KEY x keys, clamped to the slice domain. The up to
+    16 KiB hex masks go to one ``rel_dir/blooms.json`` SIDECAR (Delta's
+    sidecar-index shape): log entries and checkpoints carry only a
+    small {m, j, sidecar} reference, and readers resolve masks lazily,
+    only for range-surviving candidates (``_resolve_bloom``)."""
+    from urllib.parse import unquote
+
+    adds = []
+    masks: dict[str, str] = {}
+    for relpath, r in files:
+        action = {
+            "path": relpath,
+            "rows": r["_rows"],
+            "stats": {
+                k: [_js(r[f"_mn{i}"]), _js(r[f"_mx{i}"])]
+                for i, k in enumerate(stat_cols)
+            },
+        }
+        if partition_by:
+            part: dict[str, str | None] = {}
+            for seg in relpath.split("/")[:-1]:
+                c, eq, v = seg.partition("=")
+                if eq and c.startswith("p_") and c[2:] in partition_by:
+                    part[c[2:]] = (
+                        None
+                        if v == "__HIVE_DEFAULT_PARTITION__"
+                        else unquote(v)
+                    )
+            action["part"] = part
+        if "_bp0" in r:
+            ndv = max(len(r["_bp0"]), 1)
+            m = BLOOM_MIN_BITS
+            while m < ndv * BLOOM_BITS_PER_KEY and m < BLOOM_MAX_BITS:
+                m *= 2
+            mask = 0
+            for j in range(BLOOM_PROBES):
+                for p in r[f"_bp{j}"]:
+                    mask |= 1 << (p % m)
+            masks[relpath] = format(mask, "x")
+            action["bloom"] = {
+                "m": m,
+                "j": BLOOM_PROBES,
+                "sidecar": f"{rel_dir}/blooms.json",
+            }
+        action.update((k, v) for k, v in flags.items() if v)
+        adds.append({"add": action})
+    if masks:
+        with open(
+            os.path.join(root, rel_dir, "blooms.json"), "w", encoding="utf-8"
+        ) as f:
+            json.dump(masks, f)
+    return adds
 
 
 class TxnLogTable(ParquetTable):
@@ -1664,29 +1829,15 @@ class TxnLogTable(ParquetTable):
         leaves: list[str],
         schema,
         stat_cols: list[str],
-        want_bloom: bool,
+        bloom_col: str | None,
     ) -> list[dict] | None:
-        """Per-file stats rows computed driver-side via pyarrow — the
-        small-commit fast path of :meth:`_write_files`. Returns rows
-        shaped exactly like the Spark aggregate's output ("_f" file
-        URI, "_rows", "_mn{i}"/"_mx{i}" per stat column, "_bp{j}" raw
-        16-bit bloom probe slices), or None when ineligible (files
-        above the size gate, a stat column type whose collected value
-        the pyarrow path can't reproduce bit-for-bit) — the caller then
-        runs the distributed pass.
-
-        Value parity with the Spark aggregate, column type by type:
-        ints/strings/floats/dates/Decimals collect to the same Python
-        objects pyarrow's ``as_py`` yields; timestamps are normalized
-        to naive-UTC (the session timezone is pinned UTC, so Spark
-        collects naive-UTC datetimes); float NaN follows Spark's
-        ordering (NaN greatest: max is NaN when any value is NaN, min
-        ignores NaN unless all are); string comparison is code-point
-        order on both sides (UTF-8 byte order == code-point order).
-        Bloom slices reuse the md5(str(key)) form that
-        ``_bloom_positions_py`` already pins as hash-identical to the
-        executor-side ``md5(cast(key as string))`` for the
-        ``_BLOOM_KEY_TYPES`` gate that ``want_bloom`` implies."""
+        """Per-file stats rows taken on the driver by reading the
+        written files with pyarrow — the small-commit fast path of
+        :meth:`_write_files`. Rows are ``_arrow_stat_row``'s plus the
+        "_f" file URI, as the Spark aggregate yields them; None when
+        ineligible (files above the byte or row gates, a stat column
+        type whose collected value the pyarrow path can't reproduce
+        bit-for-bit) — the caller then runs the distributed pass."""
         if not leaves:
             return []
         try:
@@ -1701,7 +1852,6 @@ class TxnLogTable(ParquetTable):
         }
         if any(base.get(c) not in _STATS_COL_TYPES for c in stat_cols):
             return None
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         # ROW gate on top of the byte gate: the bloom slices cost one
@@ -1720,82 +1870,43 @@ class TxnLogTable(ParquetTable):
         except Exception:
             return None
         if total_rows > (
-            DRIVER_STATS_MAX_BLOOM_ROWS if want_bloom else DRIVER_STATS_MAX_ROWS
+            DRIVER_STATS_MAX_BLOOM_ROWS if bloom_col else DRIVER_STATS_MAX_ROWS
         ):
             return None
-        import hashlib
         from urllib.parse import quote
-
-        k0 = self.keys[0]
-        cols = list(dict.fromkeys(stat_cols + ([k0] if want_bloom else [])))
-
-        def _norm(v):
-            # tz-aware (parquet TIMESTAMP adjusted-to-UTC) -> the
-            # naive-UTC datetime Spark collects under the UTC session
-            if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-                return v.astimezone(datetime.timezone.utc).replace(
-                    tzinfo=None
-                )
-            return v
 
         rows: list[dict] = []
         for path in leaves:
             try:
-                tbl = pq.read_table(path, columns=cols)
+                tbl = pq.read_table(path, columns=stat_cols)
             except Exception:
                 return None  # unreadable/odd file: let Spark decide
             if tbl.num_rows == 0:
                 continue  # the Spark aggregate emits no group either
-            row: dict = {
-                "_f": "file:" + quote(path),
-                "_rows": tbl.num_rows,
-            }
-            for i, c in enumerate(stat_cols):
-                if base[c] not in ("float", "double"):
-                    # nulls skipped, like Spark's min/max
-                    mm = pc.min_max(tbl.column(c))
-                    row[f"_mn{i}"] = _norm(mm["min"].as_py())
-                    row[f"_mx{i}"] = _norm(mm["max"].as_py())
-                    continue
-                vals = [v for v in tbl.column(c).to_pylist() if v is not None]
-                if not vals:
-                    row[f"_mn{i}"] = None
-                    row[f"_mx{i}"] = None
-                else:
-                    nn = [v for v in vals if not math.isnan(v)]
-                    # Arrow's min_max skips NaN, but Spark orders NaN
-                    # greatest: max is NaN when any NaN exists; min
-                    # ignores NaN unless all are NaN
-                    row[f"_mn{i}"] = min(nn) if nn else float("nan")
-                    row[f"_mx{i}"] = (
-                        float("nan") if len(nn) < len(vals) else max(nn)
-                    )
-            if want_bloom:
-                slices: list[set] = [set() for _ in range(BLOOM_PROBES)]
-                for v in set(tbl.column(k0).to_pylist()):
-                    if v is None:
-                        continue
-                    h = hashlib.md5(str(_norm(v)).encode()).hexdigest()
-                    for j in range(BLOOM_PROBES):
-                        slices[j].add(int(h[4 * j : 4 * j + 4], 16))
-                for j in range(BLOOM_PROBES):
-                    row[f"_bp{j}"] = sorted(slices[j])
-            rows.append(row)
+            rows.append(
+                {
+                    "_f": "file:" + quote(path),
+                    **_arrow_stat_row(tbl, stat_cols, bloom_col),
+                }
+            )
         return rows
 
     def _write_files(
         self, df: DataFrame, dv: bool = False
     ) -> list[dict]:
         """Write ``df`` as immutable parquet files under data/ and
-        return their add-actions with per-file rowcount + min/max
-        stats for EVERY key column and the first prunable non-key
-        columns up to STATS_MAX_COLS (one aggregate over just the new
-        files — the same write-time stats pass Delta does), so
-        composite-key tables prune on all key columns and predicate
-        scans (:meth:`read_where`) skip files too. Data files also get
-        a first-key Bloom mask in the same pass. ``dv=True`` writes a
-        DELETION-VECTOR file (key columns only) and tags the action so
-        replay can tell data from tombstones."""
+        return their add-actions, built by ``_add_actions`` from one
+        stats row per file: rowcount, min/max stats for the
+        ``_stat_columns`` (every key column, then prunable columns up
+        to STATS_MAX_COLS) and a first-key Bloom mask — the write-time
+        stats pass Delta does — so composite-key tables prune on all
+        key columns and predicate scans (:meth:`read_where`) skip
+        files too. The rows come from reading the written files back:
+        on the driver for small commits, else from one Spark
+        aggregate, which also validates CHECK constraints and
+        GENERATED columns. ``dv=True`` writes a DELETION-VECTOR file
+        (key columns only) and tags the action so replay can tell
+        data from tombstones."""
         # early writer gate: fail before staging any parquet (the
         # _commit gate would catch it anyway, after the write)
         self._check_protocol(None, write=True)
@@ -1829,9 +1940,15 @@ class TxnLogTable(ParquetTable):
                 if gname not in frame.columns:
                     frame = frame.withColumn(gname, F.expr(gexpr))
             m_ = self._mapping_at(None)
+            # a carried frame is read at its base version: columns a
+            # pending merge_schema widening adds are typed nulls
             return frame.select(
                 *[
-                    F.col(f.name)
+                    (
+                        F.col(f.name)
+                        if f.name in frame.columns
+                        else F.lit(None)
+                    )
                     .cast(f.dataType)
                     .alias(m_.get(f.name, f.name))
                     for f in self.schema.fields
@@ -1877,70 +1994,10 @@ class TxnLogTable(ParquetTable):
                 list(schema.fields)
                 + [T.StructField(ROWID_COL, T.LongType())]
             )
-        # stats cover every key column PLUS prunable non-key columns
-        # (capped, Delta's dataSkippingNumIndexedCols mechanic) so
-        # predicate scans — not just keyed mutations — skip files
-        stat_cols = list(self.keys)
-        if not dv:
-            for f_ in schema.fields:
-                if len(stat_cols) >= STATS_MAX_COLS:
-                    break
-                if (
-                    f_.name not in stat_cols
-                    and f_.dataType.simpleString().split("(")[0]
-                    in _STATS_COL_TYPES
-                ):
-                    stat_cols.append(f_.name)
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for i, k in enumerate(stat_cols):
-            aggs.append(F.min(k).alias(f"_mn{i}"))
-            aggs.append(F.max(k).alias(f"_mx{i}"))
-        k0 = self.keys[0]
-        want_bloom = (
-            not dv
-            and self.schema[k0].dataType.simpleString()
-            in _BLOOM_KEY_TYPES
-        )
-        if want_bloom:
-            # distinct RAW 16-bit probe slices per file, folded into
-            # the SAME stats aggregate — the set is bounded by the
-            # slice domain (BLOOM_MAX_BITS) however many rows the file
-            # holds, so this stays metadata. The mask size m is chosen
-            # per file on the driver from the observed distinct-slice
-            # count, then bits land at slice % m: sizing the filter to
-            # the file keeps the false-positive rate flat as files
-            # grow instead of drifting toward 1 at a fixed m. The key
-            # md5 is computed ONCE per row (the _md5k projection added
-            # to stat_src below); each probe reads its own 4-hex-char
-            # slice of it — hashing was the dominant cost of this agg
-            # when evaluated per probe (measured on s13, round 7).
-            for j in range(BLOOM_PROBES):
-                pos = F.expr(
-                    f"cast(conv(substring(_md5k,"
-                    f" {1 + 4 * j}, 4), 16, 10) as int)"
-                )
-                aggs.append(F.collect_set(pos).alias(f"_bp{j}"))
+        stat_cols = _stat_columns(schema, self.keys)
+        bloom_col = None if dv else _bloom_key(self.schema, self.keys)
         active = {} if dv else self.constraints()
-        for ci, (cn, ce) in enumerate(sorted(active.items())):
-            # CHECK enforcement rides the same stats aggregate: count
-            # rows where the expression is FALSE (NULL passes, per the
-            # SQL standard) — zero extra jobs per write
-            aggs.append(
-                F.sum(
-                    F.expr(f"coalesce(not ({ce}), false)").cast("int")
-                ).alias(f"_cv{ci}")
-            )
         gencols = {} if dv else self._gencols_at(None)
-        for gi, (gn, ge) in enumerate(sorted(gencols.items())):
-            # GENERATED ALWAYS AS validation rides the same aggregate:
-            # _conform computed the column when absent, so a non-zero
-            # count here means the CALLER supplied explicit values that
-            # contradict the expression — rejected like a CHECK
-            aggs.append(
-                F.sum(
-                    F.expr(f"cast(not (`{gn}` <=> ({ge})) as int)")
-                ).alias(f"_gv{gi}")
-            )
         # explicit LEAF file list (a directory read on a partitioned
         # write would partition-infer the p_<col>= dirs into extra
         # columns; the fast path below needs the list either way)
@@ -1952,25 +2009,64 @@ class TxnLogTable(ParquetTable):
         ]
         # SMALL-COMMIT FAST PATH: when the freshly-written files are
         # tiny (metadata-scale) and carry no CHECK/GENERATED
-        # validation, per-file stats + bloom slices are computed
-        # driver-side from the parquet files via pyarrow instead of a
-        # Spark aggregate job — same values, ~50x less wall per commit
-        # (a 1k-row commit's stats job costs ~0.6 s of pure job-launch
-        # overhead; the pyarrow read is ~5 ms). At production scale a
-        # commit blows the size gate immediately and the distributed
-        # stats pass below runs unchanged. The files themselves came
-        # from write_parquet: written on the driver by pyarrow when the
-        # frame's size estimate is under DRIVER_WRITE_MAX_BYTES and it
-        # is not partitioned, by Spark's writer otherwise, in the same
-        # one-file-per-partition layout. Both passes read the files, so
-        # they work whichever arm wrote them. The driver arm's collect
-        # is a job too: it saves writer set-up time, not jobs.
+        # validation, the stats rows are taken on the driver from the
+        # parquet files via pyarrow instead of a Spark aggregate job —
+        # same values, ~50x less wall per commit (a 1k-row commit's
+        # stats job costs ~0.6 s of pure job-launch overhead; the
+        # pyarrow read is ~5 ms). At production scale a commit blows
+        # the size gate immediately and the distributed stats pass
+        # below runs unchanged. Either way the rows feed the same
+        # add-action builder the streaming sink uses. The files
+        # themselves came from write_parquet: written on the driver by
+        # pyarrow when the frame's size estimate is under
+        # DRIVER_WRITE_MAX_BYTES and it is not partitioned, by Spark's
+        # writer otherwise, in the same one-file-per-partition layout.
+        # Both passes read the files, so they work whichever arm wrote
+        # them. The driver arm's collect is a job too: it saves writer
+        # set-up time, not jobs.
         stat_rows = (
             None
             if (active or gencols)
-            else self._driver_stat_rows(leaves, schema, stat_cols, want_bloom)
+            else self._driver_stat_rows(leaves, schema, stat_cols, bloom_col)
         )
         if stat_rows is None:
+            aggs = [F.count(F.lit(1)).alias("_rows")]
+            for i, k in enumerate(stat_cols):
+                aggs.append(F.min(k).alias(f"_mn{i}"))
+                aggs.append(F.max(k).alias(f"_mx{i}"))
+            if bloom_col:
+                # distinct RAW 16-bit probe slices per file: the set is
+                # bounded by the slice domain (BLOOM_MAX_BITS) however
+                # many rows the file holds, so this stays metadata. The
+                # key md5 is computed ONCE per row (the _md5k projection
+                # below); each probe reads its own 4-hex-char slice of
+                # it — hashing was the dominant cost of this agg when
+                # evaluated per probe (measured on s13, round 7).
+                for j in range(BLOOM_PROBES):
+                    pos = F.expr(
+                        f"cast(conv(substring(_md5k,"
+                        f" {1 + 4 * j}, 4), 16, 10) as int)"
+                    )
+                    aggs.append(F.collect_set(pos).alias(f"_bp{j}"))
+            for ci, (cn, ce) in enumerate(sorted(active.items())):
+                # CHECK enforcement rides the same stats aggregate:
+                # count rows where the expression is FALSE (NULL
+                # passes, per the SQL standard) — zero extra jobs
+                aggs.append(
+                    F.sum(
+                        F.expr(f"coalesce(not ({ce}), false)").cast("int")
+                    ).alias(f"_cv{ci}")
+                )
+            for gi, (gn, ge) in enumerate(sorted(gencols.items())):
+                # GENERATED ALWAYS AS validation rides it too: _conform
+                # computed the column when absent, so a non-zero count
+                # means the CALLER supplied explicit values that
+                # contradict the expression — rejected like a CHECK
+                aggs.append(
+                    F.sum(
+                        F.expr(f"cast(not (`{gn}` <=> ({ge})) as int)")
+                    ).alias(f"_gv{gi}")
+                )
             if parted:
                 stat_src = (
                     self.spark.read.schema(schema).parquet(*leaves)
@@ -1986,116 +2082,56 @@ class TxnLogTable(ParquetTable):
                 # excluded at rename time)
                 if ph != lg:
                     stat_src = stat_src.withColumn(lg, F.col(ph))
-            if want_bloom:
+            if bloom_col:
                 stat_src = stat_src.withColumn(
-                    "_md5k", F.expr(f"md5(cast(`{k0}` as string))")
+                    "_md5k",
+                    F.expr(f"md5(cast(`{bloom_col}` as string))"),
                 )
-            stat_rows = (
-                stat_src.groupBy(F.input_file_name().alias("_f"))
+            stat_rows = [
+                r.asDict()
+                for r in stat_src.groupBy(F.input_file_name().alias("_f"))
                 .agg(*aggs)
                 .collect()
-            )
-        for ci, (cn, ce) in enumerate(sorted(active.items())):
-            bad = sum(r[f"_cv{ci}"] or 0 for r in stat_rows)
-            if bad:
-                shutil.rmtree(out_dir, ignore_errors=True)
-                raise ConstraintViolation(
-                    f"write violates CHECK {cn!r} ({ce}): {bad} rows"
-                )
-        for gi, (gn, ge) in enumerate(sorted(gencols.items())):
-            bad = sum(r[f"_gv{gi}"] or 0 for r in stat_rows)
-            if bad:
-                shutil.rmtree(out_dir, ignore_errors=True)
-                raise ConstraintViolation(
-                    f"write contradicts GENERATED column {gn!r} "
-                    f"({ge}): {bad} rows"
-                )
-        adds = []
-        sidecar_masks: dict[str, str] = {}
-        norm_out = os.path.normpath(out_dir)
-        for r in stat_rows:
-            # The log must store the literal on-disk path, not the URI,
-            # or every later consumer that doesn't URI-decode (pyarrow
-            # in the stream reader, os.remove in the zero-row scrub —
-            # which would otherwise DELETE freshly-written files it
-            # fails to match) breaks on any partition value needing
-            # escapes.
-            sub = os.path.relpath(_uri_path(r["_f"]), norm_out)
-            action = {
-                "path": f"{rel_dir}/{sub}",
-                "rows": r["_rows"],
-                "stats": {
-                    k: [_js(r[f"_mn{i}"]), _js(r[f"_mx{i}"])]
-                    for i, k in enumerate(stat_cols)
-                },
-            }
-            if parted:
-                # Delta's partitionValues: the values as hive-path
-                # strings, parsed from the p_<col>=<value> segments
-                from urllib.parse import unquote
+            ]
+            for ci, (cn, ce) in enumerate(sorted(active.items())):
+                bad = sum(r[f"_cv{ci}"] or 0 for r in stat_rows)
+                if bad:
+                    shutil.rmtree(out_dir, ignore_errors=True)
+                    raise ConstraintViolation(
+                        f"write violates CHECK {cn!r} ({ce}): {bad} rows"
+                    )
+            for gi, (gn, ge) in enumerate(sorted(gencols.items())):
+                bad = sum(r[f"_gv{gi}"] or 0 for r in stat_rows)
+                if bad:
+                    shutil.rmtree(out_dir, ignore_errors=True)
+                    raise ConstraintViolation(
+                        f"write contradicts GENERATED column {gn!r} "
+                        f"({ge}): {bad} rows"
+                    )
+        # the log stores the literal on-disk path, not the URI:
+        # consumers that don't URI-decode (pyarrow in the stream
+        # reader, os.remove below, which would otherwise DELETE files
+        # it fails to match) break on any partition value needing
+        # escapes
+        def rel(p: str) -> str:
+            return f"{rel_dir}/{os.path.relpath(p, out_dir)}"
 
-                part: dict[str, str | None] = {}
-                for seg in sub.split(os.sep)[:-1]:
-                    if not seg.startswith("p_") or "=" not in seg:
-                        continue
-                    c, v = seg.split("=", 1)
-                    if c[2:] in self.partition_by:
-                        part[c[2:]] = (
-                            None
-                            if v == "__HIVE_DEFAULT_PARTITION__"
-                            else unquote(v)
-                        )
-                action["part"] = part
-            if want_bloom:
-                # distinct slice count ~ distinct keys in the file
-                # (collisions only shrink it, which under-sizes m by
-                # at most the birthday-bound slack); m = next power of
-                # two >= BITS_PER_KEY x keys, clamped to the slice
-                # domain — beyond the cap the fpr climbs again, which
-                # is the documented envelope of a 2x16-bit-probe mask
-                ndv = max(len(r["_bp0"]), 1)
-                m = BLOOM_MIN_BITS
-                while m < ndv * BLOOM_BITS_PER_KEY and m < BLOOM_MAX_BITS:
-                    m *= 2
-                mask = 0
-                for j in range(BLOOM_PROBES):
-                    for p in r[f"_bp{j}"]:
-                        mask |= 1 << (p % m)
-                # the up-to-16 KiB hex mask lives in a SIDECAR file
-                # staged alongside the data (Delta's sidecar-index
-                # shape): log entries and checkpoints carry only this
-                # small reference, so plan-time metadata stays KB-scale
-                # at any file count; readers resolve masks lazily and
-                # only for range-surviving candidates (_resolve_bloom).
-                # Legacy inline {"hex": ...} actions remain readable.
-                sidecar_masks[action["path"]] = format(mask, "x")
-                action["bloom"] = {
-                    "m": m,
-                    "j": BLOOM_PROBES,
-                    "sidecar": f"{rel_dir}/blooms.json",
-                }
-            if dv:
-                action["dv"] = True
-            if carry_rowid:
-                action["rowid_materialized"] = True
-            adds.append({"add": action})
-        if sidecar_masks:
-            with open(
-                os.path.join(out_dir, "blooms.json"), "w", encoding="utf-8"
-            ) as f:
-                json.dump(sidecar_masks, f)
-        # zero-row part files never make it into the log; scrub them
-        # so vacuum doesn't have to know about them
-        logged = {a["add"]["path"] for a in adds}
-        for dp, _, fns in os.walk(out_dir):
-            for fn in fns:
-                if not fn.endswith(".parquet"):
-                    continue
-                full = os.path.join(dp, fn)
-                sub = os.path.relpath(os.path.normpath(full), norm_out)
-                if f"{rel_dir}/{sub}" not in logged:
-                    os.remove(full)
-        return adds
+        files = [(rel(_uri_path(r["_f"])), r) for r in stat_rows]
+        logged = {p for p, _ in files}
+        for leaf in leaves:
+            # zero-row part files never make it into the log; scrub
+            # them so vacuum doesn't have to know about them
+            if rel(leaf) not in logged:
+                os.remove(leaf)
+        return _add_actions(
+            self.path,
+            rel_dir,
+            files,
+            stat_cols,
+            self.partition_by if parted else (),
+            dv=dv,
+            rowid_materialized=carry_rowid,
+        )
 
     def _commit(
         self,
@@ -2134,14 +2170,11 @@ class TxnLogTable(ParquetTable):
         if not self.backend.put_if_absent(
             self._log_path(target), json.dumps(entry)
         ):
-            doomed = (
-                staged_adds
-                if staged_adds is not None
-                else [a["add"]["path"] for a in actions if "add" in a]
+            self._drop_staged(
+                actions
+                if staged_adds is None
+                else [{"add": {"path": p}} for p in staged_adds]
             )
-            for rel in doomed:
-                p = os.path.join(self.path, rel)
-                shutil.rmtree(os.path.dirname(p), ignore_errors=True)
             raise CommitConflict(f"v{target} committed concurrently")
         if target % CHECKPOINT_EVERY == 0 and target > 0:
             # the checkpoint IS the replayed snapshot at target: the
@@ -2357,7 +2390,9 @@ class TxnLogTable(ParquetTable):
         the caller's new one — a duplicate key. The purge is a
         copy-on-write rewrite of just the stats-overlapping files,
         MOR-filtered so every tombstone in the region materializes at
-        the same time. (upsert/delete don't need this: they already
+        the same time, and read through ``_carried`` so on a
+        row-tracked table the survivors keep their ids. (upsert/delete
+        don't need this: they already
         rewrite every affected file MOR-filtered.) When no incoming
         key is tombstoned — the overwhelmingly common case — this
         costs one semi-join against the tiny DV set and returns []."""
@@ -2372,9 +2407,7 @@ class TxnLogTable(ParquetTable):
         doomed = self._affected(revived, version)
         actions: list[dict] = [{"remove": {"path": p}} for p in doomed]
         if doomed:
-            actions.extend(
-                self._write_files(self._scan(doomed, None, dvs))
-            )
+            actions.extend(self._write_files(self._carried(doomed, version)))
         actions.extend(self._dv_shrink_actions(revived, version))
         return actions
 
@@ -2560,6 +2593,8 @@ class TxnLogTable(ParquetTable):
         return self._rebase_safe(from_v, to_v, blocks)
 
     def _drop_staged(self, adds: list[dict] | None) -> None:
+        """Remove the staging directories of the add-actions in
+        ``adds`` (other actions are skipped)."""
         for a in adds or []:
             if "add" in a:
                 p = os.path.join(self.path, a["add"]["path"])

@@ -1339,8 +1339,9 @@ def stream_txnlog_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # The txnlog table as an exactly-once streaming SINK
 # (writeStream.format("txnlog"), sources/txnlog_stream.py): executors
-# stage Arrow batches as immutable parquet files WITH key stats
-# computed from the in-memory batch, and the driver lands each
+# stage Arrow batches as immutable parquet files, each with the stats
+# and bloom mask a batch commit would record (the shared add-action
+# builder, fed the in-memory batch), and the driver lands each
 # micro-batch plus a txn{appId, batchId} marker in one CAS commit.
 # The scenario ingests two file-source waves through one checkpoint,
 # then REPLAYS the whole source through a fresh checkpoint with the

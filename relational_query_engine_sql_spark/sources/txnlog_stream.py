@@ -512,12 +512,11 @@ class TxnLogBatchReader(DataSourceReader):
 
 class _StagedFile(WriterCommitMessage):
     """One executor-written parquet file awaiting the driver-side
-    commit: (relpath, rows, per-column min/max stats)."""
+    commit: its finished ``{"add": ...}`` log action, or None when the
+    task had no rows."""
 
-    def __init__(self, relpath: str, rows: int, stats: dict | None):
-        self.relpath = relpath
-        self.rows = rows
-        self.stats = stats
+    def __init__(self, action: dict | None):
+        self.action = action
 
 
 class TxnLogStreamWriter(DataSourceStreamArrowWriter):
@@ -526,9 +525,13 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
 
     Protocol per micro-batch (Delta's transactional sink shape):
     executors stream their Arrow batches straight into immutable
-    parquet files under the table's ``data/`` (one file per task,
-    stats computed from the in-memory Arrow table — no second read),
-    and the DRIVER lands every staged file plus a
+    parquet files under the table's ``data/`` (one file per task, in
+    its own ``data/sink-*`` directory) and build each file's
+    add-action there from the in-memory Arrow table — no second read —
+    through the same builder as ``TxnLogTable``'s batch writes
+    (operators/txnlog.py ``_arrow_stat_row`` + ``_add_actions``), so
+    the same rows get the same stats and bloom mask whichever path
+    wrote them. The DRIVER lands every staged file plus a
     ``txn {appId, batchId}`` marker in ONE CAS commit. A replayed
     micro-batch (sink retry after a crash between write and
     checkpoint) finds its marker and drops its staged files — the
@@ -539,18 +542,28 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
     fails the query loudly.
 
     Contract notes: ``option("appId", ...)`` names the idempotence
-    stream (default ``txnlog-sink``); ``option("keys", "a,b")``
-    selects the stat columns for later pruning (optional — unstatted
-    files simply never prune until a compact rewrites them); sinking
-    into a table with active CHECK constraints is refused (this path
-    bypasses the write-time validation pass).
+    stream (default ``txnlog-sink``); ``option("keys", "a,b")`` names
+    the table's key columns, which head the stat columns (the table
+    rule: keys, then prunable columns up to ``STATS_MAX_COLS``) and
+    whose first column gets the bloom mask, as on the table itself; a
+    task above ``DRIVER_STATS_MAX_BLOOM_ROWS`` rows writes no mask.
+    Sinking into a table with active CHECK constraints, GENERATED
+    columns or column mapping is refused: validating or generating
+    those needs Spark expressions, which a pyarrow write task does not
+    have.
     """
 
     def __init__(self, options: dict, schema) -> None:
+        from ..operators.txnlog import _bloom_key, _stat_columns
+
         self.path = options["path"]
         self.app_id = options.get("appid", "txnlog-sink")
-        keys = options.get("keys", "")
-        self.stat_cols = [k for k in keys.split(",") if k]
+        keys = [k for k in options.get("keys", "").split(",") if k]
+        names = schema.fieldNames()
+        if not set(keys) <= set(names):
+            raise ValueError(f"txnlog sink: keys {keys} not all in {names}")
+        self.stat_cols = _stat_columns(schema, keys)
+        self.bloom_col = _bloom_key(schema, keys)
         self.schema = schema
 
     # -- executor side ----------------------------------------------------
@@ -559,27 +572,27 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
 
         import pyarrow as pa
 
+        from ..operators import txnlog
         from .catalog import write_arrow_file
 
         batches = list(iterator)
-        if not batches:
-            return _StagedFile("", 0, None)
+        if not sum(b.num_rows for b in batches):
+            return _StagedFile(None)
         table = pa.Table.from_batches(batches)
-        rel = f"data/sink-{_uuid.uuid4().hex[:12]}/part-{_uuid.uuid4().hex[:8]}.parquet"
-        full = os.path.join(self.path, rel)
-        os.makedirs(os.path.dirname(full), exist_ok=True)
-        write_arrow_file(table, full, self.schema)
-        stats = {}
-        import pyarrow.compute as pc
-
-        for c in self.stat_cols:
-            if c not in table.column_names:
-                continue
-            mm = pc.min_max(table[c])
-            mn, mx = mm["min"].as_py(), mm["max"].as_py()
-            if isinstance(mn, (int, str, float)) or mn is None:
-                stats[c] = [mn, mx]
-        return _StagedFile(rel, table.num_rows, stats or None)
+        rel_dir = f"data/sink-{_uuid.uuid4().hex[:12]}"
+        rel = f"{rel_dir}/part-{_uuid.uuid4().hex[:8]}.parquet"
+        os.makedirs(os.path.join(self.path, rel_dir))
+        write_arrow_file(table, os.path.join(self.path, rel), self.schema)
+        bloom = (
+            self.bloom_col
+            if table.num_rows <= txnlog.DRIVER_STATS_MAX_BLOOM_ROWS
+            else None
+        )
+        row = txnlog._arrow_stat_row(table, self.stat_cols, bloom)
+        (action,) = txnlog._add_actions(
+            self.path, rel_dir, [(rel, row)], self.stat_cols
+        )
+        return _StagedFile(action)
 
     # -- driver side --------------------------------------------------------
     def _table(self):
@@ -596,30 +609,23 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
         # assignment needs — streaming ingest into a row-tracked table
         # gives every record a stable id with zero coordination
         t._check_protocol(None, write=True)
+        # A pyarrow write task can neither rename columns to their
+        # physical names, nor compute and validate GENERATED columns
+        # (_conform and the write-time aggregate need Spark
+        # expressions), so those tables are refused loudly, as Delta
+        # restricts streaming writes on column-mapped tables; batch
+        # writes through TxnLogTable handle both. CHECK constraints are
+        # refused per attempt in ``commit``.
         state = t._cmap_at(None)
-        if state.get("map"):
-            # executors stage files named by the STREAM's (logical)
-            # columns and record stats under those names — both would
-            # land in the wrong namespace on a column-mapped table.
-            # Refuse loudly (Delta restricts streaming writes on
-            # column-mapped tables the same way); batch append via
-            # TxnLogTable handles the physical rename correctly.
-            raise RuntimeError(
-                "txnlog sink cannot write to a column-mapped table "
-                "(renamed/dropped columns); ingest via foreachBatch + "
-                "append_once instead"
-            )
-        if state.get("gen"):
-            # same reasoning as CHECK constraints: this path stages
-            # raw executor files, bypassing both the GENERATED-column
-            # computation (_conform) and its write-time validation —
-            # rows would land with missing or unvalidated generated
-            # values
-            raise RuntimeError(
-                "txnlog sink cannot write to a table with GENERATED "
-                "columns (the sink path bypasses generation and "
-                "validation); ingest via foreachBatch + append_once"
-            )
+        for what, on in (
+            ("a column-mapped table", state.get("map")),
+            ("a table with GENERATED columns", state.get("gen")),
+        ):
+            if on:
+                raise RuntimeError(
+                    f"txnlog sink cannot write to {what}; ingest via "
+                    "foreachBatch + append_once instead"
+                )
         # The TABLE's authoritative schema, never the stream's (see
         # ``_table_schema``); only a virgin table with no data takes
         # the stream's, which then legitimately DEFINES the table.
@@ -654,28 +660,16 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int) -> None:
         from ..operators.txnlog import CommitConflict
 
-        staged = [
-            m for m in messages if isinstance(m, _StagedFile) and m.rows
-        ]
-        adds = [
-            {
-                "add": {
-                    "path": m.relpath,
-                    "rows": m.rows,
-                    **({"stats": m.stats} if m.stats else {}),
-                }
-            }
-            for m in staged
-        ]
+        adds = _adds(messages)
         try:
             t = self._table()  # raises on stream/table schema mismatch
         except Exception:
-            self._drop(staged)
+            self._drop(adds)
             raise
         for _ in range(11):
             base = t.current_version()
             if t.constraints(base):
-                self._drop(staged)
+                self._drop(adds)
                 raise RuntimeError(
                     "txnlog sink cannot write to a table with active "
                     "CHECK constraints (the sink path bypasses "
@@ -684,7 +678,7 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
                 )
             last = t.last_txn_version(self.app_id)
             if last is not None and last >= batchId:
-                self._drop(staged)  # replayed batch: exactly-once no-op
+                self._drop(adds)  # replayed batch: exactly-once no-op
                 return
             actions = adds + [
                 {"txn": {"app": self.app_id, "version": batchId}}
@@ -700,24 +694,25 @@ class TxnLogStreamWriter(DataSourceStreamArrowWriter):
                 if not t._rebase_safe(
                     base, new_base, lambda a: bool(a.get("add", {}).get("dv"))
                 ):
-                    self._drop(staged)
+                    self._drop(adds)
                     raise
-        self._drop(staged)
+        self._drop(adds)
         raise CommitConflict(
             f"txnlog sink gave up after 10 rebases (batch {batchId})"
         )
 
-    def _drop(self, staged) -> None:
-        import shutil
-
-        for m in staged:
-            full = os.path.join(self.path, m.relpath)
-            shutil.rmtree(os.path.dirname(full), ignore_errors=True)
+    def _drop(self, adds: list[dict]) -> None:
+        _log(self.path)._drop_staged(adds)
 
     def abort(self, messages, batchId: int) -> None:
-        self._drop(
-            [m for m in messages if isinstance(m, _StagedFile) and m.rows]
-        )
+        self._drop(_adds(messages))
+
+
+def _adds(messages) -> list[dict]:
+    """The add-actions of the commit messages that staged a file."""
+    return [
+        m.action for m in messages if isinstance(m, _StagedFile) and m.action
+    ]
 
 
 class TxnLogStreamDataSource(DataSource):

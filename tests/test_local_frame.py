@@ -357,6 +357,29 @@ def test_environment_read_only_for_deployment_settings():
     assert set(gets) == _ENV_NAMES
 
 
+# Per-file stats and bloom probe slices are computed in one place: the
+# add-action builder of operators/txnlog.py, which batch commits and the
+# streaming sink's write task both call, so no writer keeps its own.
+_FILE_STATS_SITES = {
+    "min_max": {("operators/txnlog.py", "_arrow_stat_row")},
+    "md5": {("operators/txnlog.py", "_key_slices")},
+}
+
+
+def test_file_stats_built_in_one_place():
+    found = {
+        call: {
+            (rel, scope)
+            for rel, scope, _ in _sites(
+                lambda n: isinstance(n, ast.Call) and _call_name(n) == call
+            )
+            if rel.startswith(("operators/", "sources/"))
+        }
+        for call in _FILE_STATS_SITES
+    }
+    assert found == _FILE_STATS_SITES
+
+
 # TxnLogTable's parquet reads: the merge-on-read scan, the one read of
 # deletion-vector files, and the stats pass over files just written.
 _TXNLOG_READS = {"_scan": 1, "_tombstones": 1, "_write_files": 2}

@@ -138,3 +138,35 @@ def test_driver_stats_row_gate_falls_back(spark, tmp_path, monkeypatch):
     assert taken and not any(taken)  # every commit exceeded 10 rows
     # stats still recorded (by the distributed pass)
     assert all(a.get("stats") for a in _log_adds(t))
+
+
+def test_sink_and_batch_writes_record_the_same_metadata(spark, tmp_path):
+    """The streaming sink's write task and a TxnLogTable commit build
+    their add-actions through one builder: the same rows, written once
+    through each, log the same row counts, stats JSON (every stat
+    column type, NaN and NULL included) and bloom geometry and mask.
+    The sink runs driver-only: its write task gets the rows' Arrow
+    batches here, as a Python worker would."""
+    from relational_query_engine_sql_spark.sources.txnlog_stream import (
+        TxnLogStreamWriter,
+    )
+
+    waves = [
+        _rows(spark, 0, 60).coalesce(1),
+        _rows(spark, 100, 130).coalesce(1),
+    ]
+    batch = TxnLogTable(spark, str(tmp_path / "batch"), SCHEMA, ["k"])
+    batch.init(waves[0])
+    batch.append(waves[1])
+    sink_path = str(tmp_path / "sink")
+    for i, wave in enumerate(waves):
+        w = TxnLogStreamWriter({"path": sink_path, "keys": "k"}, SCHEMA)
+        w.commit([w.write(iter(wave.toArrow().to_batches()))], i)
+    sink = TxnLogTable(spark, sink_path, SCHEMA, ["k"])
+    got = _comparable(sink)
+    assert [r[0] for r in got] == [30, 60]
+    assert all(r[4] for r in got)  # both files carry a bloom mask
+    assert got == _comparable(batch)
+    # keys name the stat and bloom columns, so they must be stream columns
+    with pytest.raises(ValueError, match="keys"):
+        TxnLogStreamWriter({"path": sink_path, "keys": "k,nope"}, SCHEMA)

@@ -710,3 +710,43 @@ def test_sink_written_ids_survive_mor_delete_and_preserving_compact(
     t.compact_preserving_row_ids(1)
     assert _ids(t) == after_del
     assert t._row_id_bases()[1] == hwm
+
+
+@pytest.mark.parametrize(
+    "merge_schema", [False, True], ids=["plain", "evolving"]
+)
+def test_revived_key_keeps_file_mates_ids(spark, tmp_path, merge_schema):
+    """Appending a key a deletion vector tombstoned purges its old row
+    by rewriting the file it lived in (_revive_actions); the file's
+    other rows keep their ids, also when the append widens the schema
+    (the rewritten rows get a typed null in the new column)."""
+    ten = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(10)], "k bigint, v string"
+    ).coalesce(1)
+    t = TxnLogTable(spark, str(tmp_path / "t"), ten.schema, ["k"])
+    t.enable_row_tracking()
+    t.init(ten)
+
+    def ids():
+        return {r.k: r[ROWID_COL] for r in t.read_with_row_ids().collect()}
+
+    before = ids()
+    assert sorted(before.values()) == list(range(10))
+    t.delete_keys_deferred(spark.createDataFrame([(5,)], "k bigint"))
+    if merge_schema:
+        new = spark.createDataFrame(
+            [(5, "new", 1.5)], "k bigint, v string, w double"
+        )
+    else:
+        new = spark.createDataFrame([(5, "new")], "k bigint, v string")
+    t.append(new, merge_schema=merge_schema)
+    after = ids()
+    assert sorted(after) == list(range(10))
+    survivors = [k for k in range(10) if k != 5]
+    assert [after[k] for k in survivors] == [before[k] for k in survivors]
+    assert after[5] not in before.values()
+    rows = {r.k: r for r in t.read().collect()}
+    assert rows[5].v == "new"
+    if merge_schema:
+        assert rows[5].w == 1.5
+        assert all(rows[k].w is None for k in survivors)

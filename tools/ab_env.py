@@ -1,20 +1,26 @@
 #!/usr/bin/env python
-"""Interleaved A/B of the engine's driver-gate constants in one session.
+"""Interleaved A/B of engine constants and runtime Spark confs in one
+session.
 
-Same rationale as ab_conf.py (steal drifts within minutes, so two
-sequential sessions measure the host, not the change), but for the
-module constants the driver fast paths read at call time
-(operators.graph.DRIVER_MAX_EDGES,
-plans.queries_advanced.PAGERANK_DRIVER_MAX_EDGES, ...): both arms run
-inside ONE session, alternating per query per round, and per-arm
-minima are reported.
+CPU steal on a shared VM drifts within minutes, so two sequential
+sessions measure the host, not the change. Both arms run inside ONE
+session, alternating per query per round, and per-arm minima are
+reported. The variant arm changes either or both of:
+
+- the module constants the driver fast paths read at call time
+  (operators.graph.DRIVER_MAX_EDGES,
+  plans.queries_advanced.PAGERANK_DRIVER_MAX_EDGES, ...): ``--set``;
+- runtime-settable Spark SQL confs: ``--conf``.
 
 Usage:
-  python tools/ab_env.py -k 3 --set module.NAME=VALUE [--set ...] name...
+  python tools/ab_env.py -k 3 [--set module.NAME=VALUE ...]
+      [--conf key=value ...] name...
 
 ``module`` is relative to the package and VALUE a Python literal, e.g.
-``--set operators.graph.DRIVER_MAX_EDGES=0``. The "base" arm keeps the
-constants' current values; the "variant" arm sets the --set values.
+``--set operators.graph.DRIVER_MAX_EDGES=0``; a conf value is a string,
+e.g. ``--conf spark.sql.shuffle.partitions=8``. The "base" arm keeps
+the constants' and confs' current values; the "variant" arm sets the
+given ones.
 """
 from __future__ import annotations
 
@@ -45,6 +51,7 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("-k", type=int, default=3)
     ap.add_argument("--set", action="append", default=[], dest="sets")
+    ap.add_argument("--conf", action="append", default=[], dest="confs")
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
@@ -53,8 +60,10 @@ def main() -> None:
         for k, v in (kv.split("=", 1) for kv in args.sets)
     }
     base = {t: getattr(*t) for t in variant}
+    conf_variant = dict(kv.split("=", 1) for kv in args.confs)
 
     spark = get_spark(app_name="ab_env")
+    conf_base = {k: spark.conf.get(k, None) for k in conf_variant}
     plans.get("a1_pricing_summary").fn(spark, args.sf).count()
     spark.range(64).repartition(64).mapInPandas(
         lambda it: it, "id long").count()
@@ -66,15 +75,24 @@ def main() -> None:
             print(f"warm FAIL {n}: {ex}", file=sys.stderr)
     spark.catalog.clearCache()
 
-    def apply(values: dict) -> None:
+    def apply(values: dict, confs: dict) -> None:
         for (module, name), v in values.items():
             setattr(module, name, v)
+        for k, v in confs.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
+    arms = (
+        ("base", base, conf_base),
+        ("variant", variant, conf_variant),
+    )
     best: dict[str, dict[str, float]] = {"base": {}, "variant": {}}
     for rep in range(args.k):
         for n in args.names:
-            for arm, values in (("base", base), ("variant", variant)):
-                apply(values)
+            for arm, values, confs in arms:
+                apply(values, confs)
                 spark.catalog.clearCache()
                 spark.sparkContext.setJobDescription(f"{arm}:{n}")
                 t0 = time.perf_counter()
@@ -90,7 +108,7 @@ def main() -> None:
                     print(f"FAIL {arm} {n}: {type(ex).__name__}: {ex}"[:300],
                           file=sys.stderr)
                     best[arm].setdefault(n, float("nan"))
-    apply(base)
+    apply(base, conf_base)
     print(json.dumps(best))
     spark.stop()
 

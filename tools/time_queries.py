@@ -4,8 +4,11 @@
 Usage: python tools/time_queries.py [-k N] [--sf DIR] name [name ...]
 Prints one JSON line {name: best_sec, ...} plus per-run details on
 stderr, each with the number of classes whole-stage codegen compiled
-during the run (0 once the plan's generated code is cached). Same
-methodology as bench.py (count() action, clearCache
+during the run (0 once the plan's generated code is cached) and the
+number of Spark jobs it launched, counted by a job group per run. Job
+count is the fixed-cost lens: at bench scale a ~50-100 ms scheduler
+floor per job means a 30-job scenario pays ~2-3 s before any data
+work. Same methodology as bench.py (count() action, clearCache
 between queries, warm pass at sf0.001 first).
 """
 from __future__ import annotations
@@ -51,11 +54,13 @@ def main() -> None:
         spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME().getCount
     )
+    sc = spark.sparkContext
     best: dict[str, float] = {}
     for rep in range(args.k):
         for n in args.names:
             spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"time:{n}")
+            group = f"time-{n}-{rep}"
+            sc.setJobGroup(group, f"time:{n}")
             c0 = compiles()
             t0 = time.perf_counter()
             try:
@@ -63,12 +68,15 @@ def main() -> None:
                 took = round(time.perf_counter() - t0, 3)
                 if n not in best or took < best[n]:
                     best[n] = took
-                print(f"run{rep} {n} {took}s compiles={compiles() - c0}",
-                      file=sys.stderr, flush=True)
+                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                print(f"run{rep} {n} {took}s compiles={compiles() - c0}"
+                      f" jobs={jobs}", file=sys.stderr, flush=True)
             except Exception as ex:
                 print(f"FAIL {n}: {type(ex).__name__}: {ex}"[:300],
                       file=sys.stderr)
                 best.setdefault(n, float("nan"))
+            finally:
+                sc.setJobGroup(None, None)
     print(json.dumps(best))
     spark.stop()
 
